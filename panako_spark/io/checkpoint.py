@@ -208,17 +208,21 @@ class CheckpointStore:
             return {}
 
     def check_config_fp(self, table: str, config_fp: str) -> None:
-        """Refuse to mix fingerprint formats in one store: appending
-        prints extracted under a different extractor config (e.g.
-        log_freq toggled — every landmark hash moves) would silently
-        produce a store whose cross-boundary pairs never match."""
+        """Refuse to read or extend a table written under another
+        extraction fingerprint (PanakoConfig.extraction_fingerprint):
+        appending prints extracted under a different extractor config
+        (e.g. log_freq toggled — every landmark hash moves) or resuming
+        from an older table layout (config.STORE_FORMAT) would silently
+        produce a store whose cross-boundary pairs never match. A
+        manifest with no fingerprint predates the stamp and is refused
+        too."""
         stored = self.manifest(table).get("config_fp")
-        if stored is not None and stored != config_fp:
+        if stored != config_fp:
             raise ValueError(
                 f"checkpoint table '{table}' was written with extractor "
                 f"config {stored}, current config is {config_fp}; "
-                "re-extract the store (store.invalidate + full run) or "
-                "restore the original config — appending would mix "
+                "re-extract the store (clear it and run again) or "
+                "restore the original config — reading it would mix "
                 "incompatible fingerprint formats.")
 
     def invalidate(self, table: str) -> None:

@@ -237,8 +237,7 @@ def landmarks_batch(peaks_list, cfg: PanakoConfig):
     return out
 
 
-def prints_with_rescue(spec: np.ndarray, cfg: PanakoConfig,
-                       floor: int | None = None):
+def prints_with_rescue(spec: np.ndarray, cfg: PanakoConfig):
     """Peak pick + shingling with the print-density rescue (config.py
     `print_rescue_floor` comment has the full rationale): if the
     standard windows yield a print count too small to ever clear the
@@ -273,11 +272,9 @@ def prints_with_rescue(spec: np.ndarray, cfg: PanakoConfig,
     images cluster at 8-15 while the rescued true pairs clear 20."""
     from panako_spark.kernels.peaks import find_peaks
 
-    if floor is None:
-        floor = cfg.print_rescue_floor
     std_peaks = find_peaks(spec, cfg)
     h, t1, f1 = landmarks(*std_peaks, cfg)
-    if not _needs_rescue(h.size, floor, cfg):
+    if not _needs_rescue(h.size, cfg.print_rescue_floor, cfg):
         return h, t1, f1, False, h.size
     dense_peaks = find_peaks(
         spec, cfg, windows=(cfg.peak_rescue_time, cfg.peak_rescue_freq))
@@ -286,8 +283,8 @@ def prints_with_rescue(spec: np.ndarray, cfg: PanakoConfig,
 
 def _needs_rescue(n_prints: int, floor: int, cfg: PanakoConfig) -> bool:
     """The prints_with_rescue trigger condition, factored out so the
-    batched extract path can decide which slices need a dense re-pick
-    before running it as ONE find_peaks_batch call."""
+    batched extract path (extract_prints_with_tiles) applies the
+    identical rule."""
     return (0 < n_prints < floor
             and (cfg.peak_rescue_time < cfg.max_filter_time
                  or cfg.peak_rescue_freq < cfg.max_filter_freq))
@@ -370,8 +367,8 @@ def tile_row_ranges(h: int, cfg: PanakoConfig) -> list[tuple[int, int]]:
 
 
 def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
-    """One raster pass -> (full prints,
-    [(tile_id, hash, t1, f1, tile_rescued), ...], rescued, n_std).
+    """One raster pass -> (full prints, [(tile_id, hash, t1, f1), ...],
+    rescued, n_std).
 
     The per-frame column profiles are computed ONCE; each tile is a
     column slice of that matrix (spectral.column_profiles documents the
@@ -379,15 +376,14 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     marginal tile cost is one small rfft + peak pick + shingling — no
     second pass over the pixels. Tile prints are query-time ephemera
     for the crop-rescue channel; they never enter the stored print
-    format. `rescued` is the FULL-image print-rescue flag
-    (prints_with_rescue) — deliberately not OR'd with per-tile rescue
-    picks, so the flag is computable from the stored prints alone and
-    the golden matcher's store_image computes the identical value
-    without extracting tiles. Each tile additionally carries its OWN
-    rescue flag: a dense-picked tile of an otherwise-normal image
-    aligns spuriously exactly like a rescued image does (measured: two
-    score-12/13 false tile pairs leaked through the image-level flags
-    alone), so the tile channel gates on (image flags OR tile flag)."""
+    format. Only the FULL image takes the print-density rescue
+    (prints_with_rescue); tiles always use the standard windows, so
+    `rescued` is computable from the stored prints alone and the golden
+    matcher's store_image computes the identical value without
+    extracting tiles. Dense tile picks were measured at 642 images and
+    rejected: they bought one direct pair, already co-clustered through
+    its shared base, at 2.3x tile probe volume (BENCH/ATTRIBUTION.md
+    "Fix 5")."""
     from panako_spark.kernels.peaks import find_peaks_batch
     from panako_spark.kernels.spectral import (
         column_profiles, spectrograms_sliced,
@@ -407,32 +403,15 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     std_peaks = find_peaks_batch(stack, cfg)
     lms = landmarks_batch(std_peaks, cfg)
 
-    rescued = _needs_rescue(lms[0][0].size, cfg.print_rescue_floor, cfg)
-    dense_ok = (cfg.tile_rescue_mode == "always"
-                or (cfg.tile_rescue_mode == "parent" and rescued))
-    needs = [rescued] + [
-        dense_ok and _needs_rescue(lm[0].size, cfg.tile_rescue_floor, cfg)
-        for lm in lms[1:]
-    ]
-    dense_map: dict[int, tuple] = {}
-    needy = [i for i, n in enumerate(needs) if n]
-    if needy:
-        dense_all = find_peaks_batch(
-            stack[needy], cfg,
-            windows=(cfg.peak_rescue_time, cfg.peak_rescue_freq))
-        dense_map = dict(zip(needy, dense_all))
-
-    def finish(idx: int):
-        if needs[idx]:
-            return _apply_rescue(std_peaks[idx], dense_map[idx],
-                                 *lms[idx], cfg)
-        h, t1, f1 = lms[idx]
-        return h, t1, f1, False, h.size
-
-    fh, ft, ff, _, n_std = finish(0)
-    tiles = []
-    for tid in range(len(tile_ranges)):
-        hh, tt, ffq, resc_t, _ = finish(1 + tid)
-        if hh.size:
-            tiles.append((tid, hh, tt, ffq, resc_t))
+    fh, ft, ff = lms[0]
+    rescued = _needs_rescue(fh.size, cfg.print_rescue_floor, cfg)
+    n_std = fh.size
+    if rescued:
+        dense = find_peaks_batch(
+            stack[:1], cfg,
+            windows=(cfg.peak_rescue_time, cfg.peak_rescue_freq))[0]
+        fh, ft, ff, _, n_std = _apply_rescue(std_peaks[0], dense,
+                                             fh, ft, ff, cfg)
+    tiles = [(tid, hh, tt, ffq)
+             for tid, (hh, tt, ffq) in enumerate(lms[1:]) if hh.size]
     return (fh, ft, ff), tiles, rescued, n_std

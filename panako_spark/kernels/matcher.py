@@ -57,12 +57,9 @@ class GoldenMatcher:
             self._phash[image_id] = phash
         return h.size
 
-    def _pair_ok(self, id_a: str, id_b: str, score: int,
-                 extra_rescued: bool = False) -> bool:
-        """The rescue precision guard (pipeline.rescue_gate sibling);
-        extra_rescued marks a dense-picked probe (per-tile flag)."""
-        if not (extra_rescued or self._rescued.get(id_a)
-                or self._rescued.get(id_b)):
+    def _pair_ok(self, id_a: str, id_b: str, score: int) -> bool:
+        """The rescue precision guard (pipeline.rescue_gate sibling)."""
+        if not (self._rescued.get(id_a) or self._rescued.get(id_b)):
             return True
         if score >= self.cfg.rescue_strong_score:
             return True
@@ -177,15 +174,14 @@ class GoldenMatcher:
         for qid, gray in grays.items():
             _, tiles, _resc, _n_std = extract_prints_with_tiles(gray,
                                                                 self.cfg)
-            for _tid, h, t1, f1, tile_resc in tiles:
+            for _tid, h, t1, f1 in tiles:
                 for rid, res in self.query_prints(
                         h, t1, f1, avoid={qid},
                         hot_cap=self.cfg.hash_max_images,
                         query_range=self.cfg.tile_query_range,
                         std_index_only=True, verify_cfg=vcfg).items():
                     if res.score >= self.cfg.tile_min_score \
-                            and self._pair_ok(qid, rid, res.score,
-                                              extra_rescued=tile_resc):
+                            and self._pair_ok(qid, rid, res.score):
                         pairs.add((min(qid, rid), max(qid, rid)))
         return pairs
 
@@ -237,7 +233,8 @@ def caption_pairs_golden(captions: dict[str, str], cfg: PanakoConfig):
 def phash_pairs_golden(phashes: dict[str, int], cfg: PanakoConfig
                        ) -> set[tuple[str, str]]:
     """Golden phash channel: >=1 shared band key AND Hamming <= threshold
-    (bit-identical banding to stages/candidates.phash_pairs)."""
+    (bit-identical banding to the phash channel of
+    stages/candidates.fused_candidate_pairs)."""
     bpb = cfg.phash_bits_per_band
     mask = (1 << bpb) - 1
     ids = sorted(phashes)

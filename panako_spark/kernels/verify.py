@@ -159,7 +159,3 @@ def _strict_verify(q_t: np.ndarray, q_f: np.ndarray,
     return MatchResult(n_in, float(time_factor), float(freq_factor),
                        float(coverage), q_start, q_stop, r_start, r_stop)
 
-
-def verify_pair_columns(hits: np.ndarray, cfg: PanakoConfig):
-    """Convenience: (n, 4) array [q_t, q_f, r_t, r_f] -> MatchResult|None."""
-    return verify_pair(hits[:, 0], hits[:, 1], hits[:, 2], hits[:, 3], cfg)

@@ -66,24 +66,6 @@ def _emb_meta(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return meta
 
 
-def _cosine(a: str, b: str):
-    """Column expr: cosine of two array<float> columns in double.
-
-    Only correct when used once per pair; for all-pairs scans use
-    `_unit` + `_dot` so norms are computed once per VECTOR, not per pair
-    (an O(n^2 d) -> O(n d + n^2 d/3) cut measured at 164s -> seconds on
-    the sf0.1 bench).
-    """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double")
-                                 * y.cast("double")),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.col(a), F.lit(0.0),
-                            lambda acc, v: acc + v.cast("double") ** 2))
-    nb = F.sqrt(F.aggregate(F.col(b), F.lit(0.0),
-                            lambda acc, v: acc + v.cast("double") ** 2))
-    return dot / (na * nb)
-
-
 def _unit(col: str):
     """array<float> -> unit-norm array<double> (norm computed once)."""
     norm = F.sqrt(F.aggregate(F.col(col), F.lit(0.0),
@@ -460,7 +442,8 @@ def lsh_bucketed_neighbors(spark: SparkSession, sf_dir: str,
     # ride the band explode and the pair self-join (it would shuffle
     # bands x per vector plus once per candidate side); the (tiny)
     # distinct candidate set joins the unit vectors back afterwards —
-    # the same shape as candidates.minhash_pairs
+    # the same shape as the MinHash channel of
+    # candidates.fused_candidate_pairs
     keyed = (sig.select("vec_id", F.array(*band_cols).alias("_bk"))
              .select("vec_id", F.explode("_bk").alias("key")))
     a = keyed.select(F.col("key"), F.col("vec_id").alias("id_a"))

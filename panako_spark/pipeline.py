@@ -4,9 +4,12 @@ store -> query -> dedup lifecycle (SURVEY.md §3):
     images (Iceberg/parquet)
       -> extract [mapInPandas, one decode pass, in-memory persist]
       -> prints / signatures                          checkpoints
-      -> candidates: landmark ±range self-join, MinHash/SimHash LSH bands,
-         exact caption, substring fingerprints        checkpoint: pairs
-      -> verify [applyInPandas Q5-Q13 kernel]         checkpoint: verified
+      -> three concurrent branches:
+         landmark ±range self-join -> verify [mapInPandas Q5-Q13 kernel]
+                                                      checkpoint: verified
+         fused signature channels (MinHash/SimHash/phash bands, exact
+         caption, substring fingerprints)             checkpoint: fused_pairs
+         crop-rescue tile probes -> tile verify       checkpoint: tile_pairs
       -> connected components (large-star/small-star) checkpoint: clusters
 
 Every stage goes through CheckpointStore.read_or_compute, so a killed run
@@ -42,16 +45,6 @@ class PipelineResult:
     stats: dict
 
 
-def _band_stats_lineage(spark: SparkSession, stage: str, stats_row,
-                        run_id: str) -> DataFrame:
-    return spark.createDataFrame(
-        [(stage, -1, int(stats_row["n_keys"]), int(stats_row["n_hot_keys"]),
-          int(stats_row["dropped_cross_pairs_estimate"]), 0, run_id)],
-        schema="stage string, partition_id int, input_count long, "
-               "signature_count long, band_count long, elapsed_ms long, "
-               "run_id string")
-
-
 def materialize_extract(spark: SparkSession, images: DataFrame,
                         store: CheckpointStore, cfg: PanakoConfig,
                         stats: dict | None = None,
@@ -68,14 +61,20 @@ def materialize_extract(spark: SparkSession, images: DataFrame,
     exactly two consumers: prints (exploded to FLAT columns — the
     vectorized parquet path) and signatures (one nested row per image).
     Resume reads the two durable tables; the ephemeral intermediate is
-    recomputed only if neither is complete.
+    recomputed only if neither is complete. A resume first checks both
+    manifests' extraction fingerprint (config.STORE_FORMAT included):
+    a store written under another extractor config or table layout is
+    refused with ValueError instead of being read half-compatibly.
 
     The third return value is the still-PERSISTED extract relation (None
     on the resume path): the crop-rescue tile branch reads its tile
     probe arrays from the same cache — one decode pass feeds everything.
     The caller unpersists it once the tile branch is done.
     """
+    fp = cfg.extraction_fingerprint()
     if store.is_complete("prints") and store.is_complete("signatures"):
+        store.check_config_fp("prints", fp)
+        store.check_config_fp("signatures", fp)
         return (store.read(spark, "prints"),
                 store.read(spark, "signatures"), None)
     stats = stats if stats is not None else {}
@@ -86,7 +85,6 @@ def materialize_extract(spark: SparkSession, images: DataFrame,
         # prints carry no pre-partitioning: the landmark probe join
         # shuffles on the expanded probe_hash anyway. This first action
         # materializes extract into the cache as a side effect.
-        fp = cfg.extraction_fingerprint()
         store.write(split_prints(extracted), "prints", config_fp=fp)
         stats["t_extract_prints_s"] = round(time.monotonic() - t0, 2)
         t0 = time.monotonic()
@@ -111,20 +109,16 @@ def materialize_extract(spark: SparkSession, images: DataFrame,
             extracted)
 
 
-def corpus_census(images: DataFrame) -> tuple[int, int, int]:
-    """(n_rows, n_distinct_ids, n_distinct_hashed_ids) in ONE action.
+def corpus_census(images: DataFrame) -> tuple[int, int]:
+    """(n_rows, n_distinct_ids) in ONE action.
 
-    Feeds the corpus-size-aware stop-word cap, the duplicate-image_id
+    Feeds the corpus-size-aware stop-word cap and the duplicate-image_id
     guard (a store is keyed by image_id; duplicate input rows would mint
-    two iids for one id and silently diverge from the golden matcher),
-    and — for legacy pre-iid stores only — the xxhash64 collision guard.
-    The default path mints dictionary ids at ingest (extract.run_extract)
-    so the hash guard is a cheap invariant, not a correctness crutch."""
+    two iids for one id and silently diverge from the golden matcher)."""
     row = images.agg(
         F.count("*").alias("n"),
-        F.countDistinct("image_id").alias("nd"),
-        F.countDistinct(F.xxhash64("image_id")).alias("nh")).first()
-    return int(row["n"]), int(row["nd"]), int(row["nh"])
+        F.countDistinct("image_id").alias("nd")).first()
+    return int(row["n"]), int(row["nd"])
 
 
 def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
@@ -184,7 +178,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                 spark, images, store, cfg, stats,
                 lineage_sink=lineage_rows))
 
-        n_images, n_ids, n_hashed = census_fut.result()
+        n_images, n_ids = census_fut.result()
         if n_images != n_ids:
             raise ValueError(
                 f"input has {n_images} rows but only {n_ids} distinct "
@@ -192,80 +186,46 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                 "would mint multiple iids for one id and silently diverge "
                 "from reference semantics — dedupe the input "
                 "(dropDuplicates('image_id')) and rerun.")
-        if "iid" not in prints.columns and n_ids != n_hashed:
-            # legacy pre-iid checkpoint: the verify shuffle would run on
-            # xxhash64(image_id), where a collision silently merges two
-            # images' hit lists
-            raise RuntimeError(
-                f"xxhash64(image_id) collision: {n_ids} distinct ids -> "
-                f"{n_hashed} distinct hashes, and this store predates "
-                "minted iids. Clear the store and re-extract (ids are "
-                "minted collision-free at ingest now).")
         stats["n_images"] = n_images
         stats["n_distinct_ids"] = n_ids
 
         # ---- landmark verify ∥ fused signature channels ---------------------
         arrow_batch(8192)
 
-        # one distinct store-hash relation feeds BOTH probe branches'
-        # semi pre-filter (candidates._semi_prefilter) — persisted so
-        # the concurrent branches don't race to recompute the distinct
-        store_hashes = None
-        if cfg.probe_prefilter == "semi":
-            store_hashes = C.store_hash_relation(prints).persist()
-
-        # (iid, rescued, phash) is a tiny per-image relation; broadcast
+        # (iid, rescued, phash) is a tiny per-image relation joined
         # onto verify outputs so rescued pairs face the stricter
         # composite gate (config.rescue_min_score block — the
         # print-rescue precision guard): strong alignment alone, or
         # decent alignment corroborated by the independent phash
-        # signal. Stores written before the rescue flag existed have no
-        # column: nothing was rescued there, so the gate is a no-op.
-        if "rescued" in signatures.columns:
-            resc = signatures.select(
-                (F.col("iid") if "iid" in signatures.columns
-                 else F.xxhash64("image_id")).alias("_rid"),
-                F.col("rescued").alias("_resc"),
-                F.col("phash").alias("_ph"))
+        # signal.
+        resc = signatures.select(F.col("iid").alias("_rid"),
+                                 F.col("rescued").alias("_resc"),
+                                 F.col("phash").alias("_ph"))
 
-            def rescue_gate(df: DataFrame, col_a: str, col_b: str,
-                            extra_resc: str | None = None) -> DataFrame:
-                # extra_resc: a boolean column already on df marking a
-                # dense-picked probe (the per-TILE rescue flag) — a
-                # rescued probe aligns spuriously exactly like a
-                # rescued image, so it faces the same composite gate
-                a = resc.select(F.col("_rid").alias(col_a),
-                                F.col("_resc").alias("_ra"),
-                                F.col("_ph").alias("_pa"))
-                b = resc.select(F.col("_rid").alias(col_b),
-                                F.col("_resc").alias("_rb"),
-                                F.col("_ph").alias("_pb"))
-                ham = F.bit_count(
-                    F.col("_pa").bitwiseXOR(F.col("_pb")))
-                pair_rescued = (F.coalesce("_ra", F.lit(False))
-                                | F.coalesce("_rb", F.lit(False)))
-                if extra_resc is not None:
-                    pair_rescued = pair_rescued | F.coalesce(
-                        extra_resc, F.lit(False))
-                keep = (
-                    ~pair_rescued
-                    | (F.col("score") >= cfg.rescue_strong_score)
-                    | ((F.col("score") >= cfg.rescue_min_score)
-                       & (ham <= cfg.rescue_phash_max)))
-                # no broadcast hint: the flag relation is per-image
-                # (10^12 rows at target scale), while the verified
-                # relation it joins is post-gate and usually far
-                # smaller — AQE picks broadcast at runtime when a side
-                # is actually small, and an equi-join on the int64 id
-                # is the safe default either way
-                return (df.join(a, col_a, "left")
-                        .join(b, col_b, "left")
-                        .where(keep)
-                        .drop("_ra", "_rb", "_pa", "_pb"))
-        else:
-            def rescue_gate(df: DataFrame, col_a: str, col_b: str,
-                            extra_resc: str | None = None) -> DataFrame:
-                return df
+        def rescue_gate(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
+            a = resc.select(F.col("_rid").alias(col_a),
+                            F.col("_resc").alias("_ra"),
+                            F.col("_ph").alias("_pa"))
+            b = resc.select(F.col("_rid").alias(col_b),
+                            F.col("_resc").alias("_rb"),
+                            F.col("_ph").alias("_pb"))
+            ham = F.bit_count(F.col("_pa").bitwiseXOR(F.col("_pb")))
+            pair_rescued = (F.coalesce("_ra", F.lit(False))
+                            | F.coalesce("_rb", F.lit(False)))
+            keep = (
+                ~pair_rescued
+                | (F.col("score") >= cfg.rescue_strong_score)
+                | ((F.col("score") >= cfg.rescue_min_score)
+                   & (ham <= cfg.rescue_phash_max)))
+            # no broadcast hint: the flag relation is per-image (10^12
+            # rows at target scale), while the verified relation it
+            # joins is post-gate and usually far smaller — AQE picks
+            # broadcast at runtime when a side is actually small, and an
+            # equi-join on the int64 id is the safe default either way
+            return (df.join(a, col_a, "left")
+                    .join(b, col_b, "left")
+                    .where(keep)
+                    .drop("_ra", "_rb", "_pa", "_pb"))
 
         def compute_verified() -> DataFrame:
             # Q5's min-hits gate runs inside the verify kernel (one
@@ -275,8 +235,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
             v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
-                                           n_images=n_ids,
-                                           store_hashes=store_hashes),
+                                           n_images=n_ids),
                            cfg, numeric_ids=True)
             v = rescue_gate(v, "id_a", "id_b")
             # the signatures table carries the persisted iid<->string map
@@ -308,22 +267,12 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                 # NOT the store's ids; remap through the persisted
                 # signatures id map.
                 ext2 = run_extract(images, cfg)
-                sig_ids = signatures.select(
-                    "image_id",
-                    (F.col("iid") if "iid" in signatures.columns
-                     else F.xxhash64("image_id")).alias("iid"))
                 tp = (split_tile_prints(ext2).drop("iid")
-                      .join(sig_ids, "image_id"))
-            qid_col = "iid" if "iid" in tp.columns else "image_id"
-            tile_flags = (tp.groupBy(F.col(qid_col).alias("id_q"),
-                                     "tile_id")
-                          .agg(F.max("tile_resc").alias("_tresc")))
+                      .join(signatures.select("image_id", "iid"),
+                            "image_id"))
             tv = run_tile_verify(C.tile_hits(tp, prints, cfg,
-                                             n_images=n_ids,
-                                             store_hashes=store_hashes), cfg)
-            tv = tv.join(tile_flags, ["id_q", "tile_id"], "left")
-            tv = rescue_gate(tv, "id_q", "id_r", extra_resc="_tresc") \
-                .drop("_tresc")
+                                             n_images=n_ids), cfg)
+            tv = rescue_gate(tv, "id_q", "id_r")
             directed = (tv.where(F.col("score") >= cfg.tile_min_score)
                         .select(F.least("id_q", "id_r").alias("id_a"),
                                 F.greatest("id_q", "id_r").alias("id_b"))
@@ -339,8 +288,6 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         verified = fut_v.result()
         fused_pairs = fut_f.result()
         tile_pairs = fut_t.result()
-        if store_hashes is not None:
-            store_hashes.unpersist()
         if extracted is not None:
             extracted.unpersist()
             extracted = None

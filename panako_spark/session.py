@@ -65,10 +65,6 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # the probe-prefilter semi join (candidates._semi_prefilter)
-        # broadcasts the distinct store-hash set — ~8 bytes/print, but
-        # the collect can exceed the 1g default at bench scale
-        .config("spark.driver.maxResultSize", "8g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -71,91 +71,91 @@ def _unpack_tf(tf: np.ndarray) -> tuple[np.ndarray, np.ndarray,
     return a32 >> 10, a32 & 1023, b32 >> 10, b32 & 1023
 
 
-def _segments(ids_a: np.ndarray, ids_b: np.ndarray) -> np.ndarray:
-    """Start offsets of contiguous (id_a, id_b) runs, plus the end offset."""
-    n = ids_a.size
+def _segments(*keys: np.ndarray) -> np.ndarray:
+    """Start offsets of contiguous runs of equal key tuples, plus the end
+    offset."""
+    n = keys[0].size
     if n == 0:
         return np.zeros(1, np.int64)
-    change = np.flatnonzero((ids_a[1:] != ids_a[:-1])
-                            | (ids_b[1:] != ids_b[:-1])) + 1
-    return np.concatenate(([0], change, [n]))
+    diff = keys[0][1:] != keys[0][:-1]
+    for k in keys[1:]:
+        diff |= k[1:] != k[:-1]
+    return np.concatenate(([0], np.flatnonzero(diff) + 1, [n]))
+
+
+def _verify_runs(it: Iterator[pd.DataFrame], keys: tuple[str, ...],
+                 min_hits: int, verify_run) -> list:
+    """The run loop both verify kernels share. Runs are contiguous
+    rows with equal `keys`; `verify_run(cols, lo, q_t, q_f, r_t, r_f)`
+    is called once per run with at least `min_hits` raw hits (Q5,
+    vectorized over run lengths) and returns an output row or None.
+
+    Per-batch streaming with run carry: each Arrow batch is processed
+    as NumPy columns immediately, except its trailing run, which may
+    continue in the next batch and is carried forward. Peak memory is
+    ONE batch plus the largest single run — not the whole partition —
+    so a skewed 10^7-row partition can't OOM the Python worker. The
+    partition is sorted on `keys` (run_verify / run_tile_verify), so
+    runs are contiguous and never resume after being cut."""
+    names = keys + ("tf",)
+    rows: list = []
+
+    def process(cols: dict, bounds: np.ndarray) -> None:
+        q_t, q_f, r_t, r_f = _unpack_tf(cols["tf"])
+        for si in np.flatnonzero(np.diff(bounds) >= min_hits):
+            lo, hi = bounds[si], bounds[si + 1]
+            row = verify_run(cols, lo, q_t[lo:hi], q_f[lo:hi],
+                             r_t[lo:hi], r_f[lo:hi])
+            if row is not None:
+                rows.append(row)
+
+    carry: dict[str, np.ndarray] | None = None
+    for batch in it:
+        cols = {k: batch[k].to_numpy() for k in names}
+        if carry is not None and carry["tf"].size:
+            cols = {k: np.concatenate([carry[k], cols[k]]) for k in names}
+        if cols["tf"].size == 0:
+            continue
+        bounds = _segments(*(cols[k] for k in keys))
+        cut = int(bounds[-2])
+        carry = {k: v[cut:] for k, v in cols.items()}
+        if cut:
+            process({k: v[:cut] for k, v in cols.items()}, bounds[:-1])
+    if carry is not None and carry["tf"].size:
+        process(carry, _segments(*(carry[k] for k in keys)))
+    return rows
+
+
+def _frame(rows: list, dtypes: dict) -> pd.DataFrame:
+    if not rows:
+        return pd.DataFrame(
+            {k: pd.Series([], dtype=d) for k, d in dtypes.items()})
+    return pd.DataFrame(dict(zip(dtypes, zip(*rows))))
 
 
 def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
-    min_hits = cfg.min_unfiltered_hits
+    """Q5-Q13 kernel for the landmark channel: one run per canonical
+    (id_a, id_b) pair, BOTH query orientations tried, best score kept."""
     id_dtype = "int64" if numeric_ids else "str"
     dtypes = dict(zip(_FIELDS, (id_dtype, id_dtype) + _TAIL_DTYPES))
 
-    def _emit(rows: list) -> pd.DataFrame:
-        if not rows:
-            return pd.DataFrame(
-                {k: pd.Series([], dtype=d) for k, d in dtypes.items()})
-        cols = list(zip(*rows))
-        return pd.DataFrame({k: c for k, c in zip(_FIELDS, cols)})
-
-    def _process(ids_a, ids_b, a_t, a_f, b_t, b_f, rows: list) -> None:
-        bounds = _segments(ids_a, ids_b)
-        lens = np.diff(bounds)
-        # Q5 vectorized: only segments with enough raw hits reach Python
-        for si in np.flatnonzero(lens >= min_hits):
-            lo, hi = bounds[si], bounds[si + 1]
-            res = verify_pair(a_t[lo:hi], a_f[lo:hi],
-                              b_t[lo:hi], b_f[lo:hi], cfg)
-            rev = verify_pair(b_t[lo:hi], b_f[lo:hi],
-                              a_t[lo:hi], a_f[lo:hi], cfg)
-            best = max((r for r in (res, rev) if r is not None),
-                       key=lambda r: r.score, default=None)
-            if best is not None:
-                rows.append((ids_a[lo], ids_b[lo], best.score,
-                             best.time_factor, best.freq_factor,
-                             best.coverage, best.q_start, best.q_stop))
-
-    keys = ("id_a", "id_b", "tf")
-
-    def _run(cols: dict, lo: int, hi: int, rows: list) -> None:
-        a_t, a_f, b_t, b_f = _unpack_tf(cols["tf"][lo:hi])
-        _process(cols["id_a"][lo:hi], cols["id_b"][lo:hi],
-                 a_t, a_f, b_t, b_f, rows)
+    def verify_run(cols, lo, a_t, a_f, b_t, b_f):
+        res = verify_pair(a_t, a_f, b_t, b_f, cfg)
+        rev = verify_pair(b_t, b_f, a_t, a_f, cfg)
+        best = max((r for r in (res, rev) if r is not None),
+                   key=lambda r: r.score, default=None)
+        if best is None:
+            return None
+        return (cols["id_a"][lo], cols["id_b"][lo], best.score,
+                best.time_factor, best.freq_factor, best.coverage,
+                best.q_start, best.q_stop)
 
     def verify_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-batch streaming with run carry: each Arrow batch is
-        # processed as NumPy columns immediately, except the trailing
-        # (id_a, id_b) run, which may continue in the next batch and is
-        # carried forward. Peak memory is ONE batch plus the largest
-        # single pair's hit run — not the whole partition — so a skewed
-        # 10^7-row partition can't OOM the Python worker. The partition
-        # is sorted on the pair key (run_verify), so runs are contiguous
-        # and never resume after being cut.
-        carry: dict[str, np.ndarray] | None = None
-        rows: list = []
-        for batch in it:
-            cols = {k: batch[k].to_numpy() for k in keys}
-            if carry is not None and carry["id_a"].size:
-                cols = {k: np.concatenate([carry[k], cols[k]])
-                        for k in keys}
-            n = cols["id_a"].size
-            if n == 0:
-                continue
-            bounds = _segments(cols["id_a"], cols["id_b"])
-            cut = int(bounds[-2]) if bounds.size >= 2 else 0
-            carry = {k: v[cut:] for k, v in cols.items()}
-            if cut:
-                _run(cols, 0, cut, rows)
-        if carry is not None and carry["id_a"].size:
-            _run(carry, 0, carry["id_a"].size, rows)
-        yield _emit(rows)
+        yield _frame(_verify_runs(it, ("id_a", "id_b"),
+                                  cfg.min_unfiltered_hits, verify_run),
+                     dtypes)
 
     return verify_batches
-
-
-def _segments3(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Start offsets of contiguous (a, b, c) runs, plus the end offset."""
-    n = a.size
-    if n == 0:
-        return np.zeros(1, np.int64)
-    change = np.flatnonzero((a[1:] != a[:-1]) | (b[1:] != b[:-1])
-                            | (c[1:] != c[:-1])) + 1
-    return np.concatenate(([0], change, [n]))
 
 
 TILE_VERIFIED_SCHEMA = T.StructType([
@@ -165,67 +165,34 @@ TILE_VERIFIED_SCHEMA = T.StructType([
     T.StructField("score", T.IntegerType()),
 ])
 
-_TILE_KEYS = ("id_q", "id_r", "tile_id", "tf")
+_TILE_DTYPES = {"id_q": "int64", "id_r": "int64", "tile_id": "int32",
+                "score": "int32"}
 
 
 def make_tile_verify_batches(cfg: PanakoConfig):
     """Q5-Q13 kernel for the crop-rescue channel: one verify per
     (query image, stored image, tile) run, SINGLE orientation (the tile
     prints are the query side, exactly like GoldenMatcher.query_prints).
-    Same per-batch streaming + trailing-run carry as make_verify_batches."""
+    Same batch/carry loop as make_verify_batches."""
     import dataclasses
 
-    min_hits = cfg.min_unfiltered_hits
     # Q13 coverage relaxed to tile_min_coverage for TILE matches only
     # (config.py carries the swept rationale); every other gate stays
     # at full strength. GoldenMatcher.tile_rescue_pairs mirrors this.
     vcfg = dataclasses.replace(cfg, min_coverage=cfg.tile_min_coverage)
 
-    def _emit(rows: list) -> pd.DataFrame:
-        if not rows:
-            return pd.DataFrame({
-                "id_q": pd.Series([], dtype="int64"),
-                "id_r": pd.Series([], dtype="int64"),
-                "tile_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="int32")})
-        cols = list(zip(*rows))
-        return pd.DataFrame({k: c for k, c in zip(
-            ("id_q", "id_r", "tile_id", "score"), cols)})
-
-    def _run(cols: dict, lo: int, hi: int, rows: list) -> None:
-        ids_q = cols["id_q"][lo:hi]
-        ids_r = cols["id_r"][lo:hi]
-        tids = cols["tile_id"][lo:hi]
-        q_t, q_f, r_t, r_f = _unpack_tf(cols["tf"][lo:hi])
-        bounds = _segments3(ids_q, ids_r, tids)
-        lens = np.diff(bounds)
-        for si in np.flatnonzero(lens >= min_hits):
-            lo2, hi2 = bounds[si], bounds[si + 1]
-            res = verify_pair(q_t[lo2:hi2], q_f[lo2:hi2],
-                              r_t[lo2:hi2], r_f[lo2:hi2], vcfg)
-            if res is not None:
-                rows.append((ids_q[lo2], ids_r[lo2], tids[lo2], res.score))
+    def verify_run(cols, lo, q_t, q_f, r_t, r_f):
+        res = verify_pair(q_t, q_f, r_t, r_f, vcfg)
+        if res is None:
+            return None
+        return (cols["id_q"][lo], cols["id_r"][lo], cols["tile_id"][lo],
+                res.score)
 
     def tile_verify_batches(it: Iterator[pd.DataFrame]
                             ) -> Iterator[pd.DataFrame]:
-        carry: dict[str, np.ndarray] | None = None
-        rows: list = []
-        for batch in it:
-            cols = {k: batch[k].to_numpy() for k in _TILE_KEYS}
-            if carry is not None and carry["id_q"].size:
-                cols = {k: np.concatenate([carry[k], cols[k]])
-                        for k in _TILE_KEYS}
-            n = cols["id_q"].size
-            if n == 0:
-                continue
-            bounds = _segments3(cols["id_q"], cols["id_r"], cols["tile_id"])
-            cut = int(bounds[-2]) if bounds.size >= 2 else 0
-            carry = {k: v[cut:] for k, v in cols.items()}
-            if cut:
-                _run(cols, 0, cut, rows)
-        if carry is not None and carry["id_q"].size:
-            _run(carry, 0, carry["id_q"].size, rows)
-        yield _emit(rows)
+        yield _frame(_verify_runs(it, ("id_q", "id_r", "tile_id"),
+                                  cfg.min_unfiltered_hits, verify_run),
+                     _TILE_DTYPES)
 
     return tile_verify_batches
 

@@ -144,9 +144,15 @@ def frame_to_wire(image_id: str, byts: bytes, w: int, h: int, fmt: str,
     socket monitor's contract): tab-separated
     `image_id  fmt  w  h  b64(bytes)  b64(utf8(caption))  phash`.
     Binary and free-text fields ride base64 so payload bytes can never
-    collide with the framing (tab/newline)."""
+    collide with the framing (tab/newline); `image_id` and `fmt` ride
+    raw, so one containing a tab, \\n or \\r raises ValueError instead
+    of producing a frame parse_wire would silently drop."""
     import base64
 
+    for name, val in (("image_id", image_id), ("fmt", fmt)):
+        if any(c in val for c in "\t\n\r"):
+            raise ValueError(f"{name} {val!r} contains a tab or line break, "
+                             "which the wire framing cannot carry")
     return "\t".join([
         image_id, fmt, str(int(w)), str(int(h)),
         base64.b64encode(byts).decode("ascii"),
@@ -162,8 +168,10 @@ def parse_wire(lines: DataFrame) -> DataFrame:
     count, non-numeric ints) decode to null fields and are dropped
     here with a loud count left to the caller's lineage; payloads that
     parse but fail to DECODE as images are NOT dropped — they flow to
-    the extract kernel's err-column quarantine like every batch row."""
-    p = F.split(F.col("value"), F.lit("\t"))
+    the extract kernel's err-column quarantine like every batch row.
+    A trailing \\r (CRLF-terminated peers) is stripped before the split,
+    so the last field still parses."""
+    p = F.split(F.regexp_replace("value", r"\r$", ""), F.lit("\t"))
     b64 = F.lit("base64")
     # try_* variants: malformed fields become NULL (and are dropped
     # below) even under spark.sql.ansi.enabled=true, where plain

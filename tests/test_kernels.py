@@ -332,34 +332,47 @@ def test_extraction_fingerprint_tracks_format_fields(cfg):
 
 
 def test_verify_kernel_run_carry(cfg):
-    """The mapInPandas kernel must produce identical verified pairs when
-    a pair's hit run straddles Arrow batch boundaries (per-batch carry,
-    bounded memory)."""
-    import numpy as np
+    """Both mapInPandas verify kernels must produce identical verified
+    rows when a run straddles Arrow batch boundaries (per-batch carry,
+    bounded memory): the landmark kernel on (id_a, id_b) runs and the
+    tile kernel on (id_q, id_r, tile_id) runs."""
     import pandas as pd
 
-    from panako_spark.stages.verify import make_verify_batches
+    from panako_spark.stages.verify import (
+        make_tile_verify_batches, make_verify_batches,
+    )
 
     def pack(a_t, a_f, b_t, b_f):  # candidates._pack_half layout
         return ((a_t * 1024 + a_f) << 32) | (b_t * 1024 + b_f)
 
-    rows = []
+    lm_rows, tile_rows = [], []
     for ia, ib in [(1, 2), (3, 4), (5, 6)]:
         for t in range(15):
-            rows.append((ia, ib,
-                         pack(t, 10 + (t % 3), t + 1, 10 + (t % 3))))
-    df = pd.DataFrame(rows, columns=["id_a", "id_b", "tf"])
-    fn = make_verify_batches(cfg, numeric_ids=True)
-    whole = pd.concat(list(fn(iter([df])))).reset_index(drop=True)
-    assert len(whole) == 3  # perfectly aligned runs all verify
-    for size in (1, 4, 7, 16):
-        parts = [df.iloc[i:i + size] for i in range(0, len(df), size)]
-        fn2 = make_verify_batches(cfg, numeric_ids=True)
-        split = pd.concat(list(fn2(iter(parts)))).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            whole.sort_values(["id_a", "id_b"]).reset_index(drop=True),
-            split.sort_values(["id_a", "id_b"]).reset_index(drop=True),
-            check_dtype=False)
+            tf = pack(t, 10 + (t % 3), t + 1, 10 + (t % 3))
+            lm_rows.append((ia, ib, tf))
+            # two tiles of one directed pair: runs split on tile_id alone
+            for tile in (0, 1):
+                tile_rows.append((ia, ib, tile, tf))
+    cases = [
+        (lambda: make_verify_batches(cfg, numeric_ids=True),
+         pd.DataFrame(lm_rows, columns=["id_a", "id_b", "tf"]),
+         ["id_a", "id_b"], 3),
+        (lambda: make_tile_verify_batches(cfg),
+         pd.DataFrame(sorted(tile_rows),
+                      columns=["id_q", "id_r", "tile_id", "tf"]),
+         ["id_q", "id_r", "tile_id"], 6),
+    ]
+    for make, df, key, n_runs in cases:
+        whole = pd.concat(list(make()(iter([df])))).reset_index(drop=True)
+        assert len(whole) == n_runs  # perfectly aligned runs all verify
+        for size in (1, 4, 7, 16):
+            parts = [df.iloc[i:i + size] for i in range(0, len(df), size)]
+            split = pd.concat(list(make()(iter(parts)))
+                              ).reset_index(drop=True)
+            pd.testing.assert_frame_equal(
+                whole.sort_values(key).reset_index(drop=True),
+                split.sort_values(key).reset_index(drop=True),
+                check_dtype=False)
 
 
 def test_rolling_hashes_batch_matches_scalar():
@@ -421,15 +434,32 @@ def test_config_overrides_round_trip():
         config_with_overrides(["query_range"])
 
 
-@pytest.mark.parametrize("tile_mode", ["never", "always"])
-def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
+def test_every_config_field_is_read():
+    """Dead-knob guard: every PanakoConfig field must be read as
+    `.<name>` somewhere in the package (properties in config.py count).
+    A field nothing reads is an option that changes nothing."""
+    import ast
+    import dataclasses
+    import pathlib
+
+    from panako_spark.config import PanakoConfig
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "panako_spark"
+    read = {node.attr for path in pkg.rglob("*.py")
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Attribute)}
+    unread = [f.name for f in dataclasses.fields(PanakoConfig)
+              if f.name not in read]
+    assert not unread, f"PanakoConfig fields nothing reads: {unread}"
+
+
+def test_tile_prints_bit_exact_vs_sliced_image(cfg):
     """Crop-rescue tiles: extract_prints_with_tiles must equal extracting
     each sliced image directly — the profile-slice fast path
     (spectral.column_profiles) is bit-exact by row independence, and the
-    full-image prints are unchanged. Under tile_rescue_mode="never"
-    (the shipping default) a tile equals the NO-rescue extraction of
-    the sliced image; under "always" it equals the rescued extraction
-    at the tile floor."""
+    full-image prints are unchanged. Tiles never take the print-density
+    rescue, so a tile equals the NO-rescue extraction of the sliced
+    image."""
     import dataclasses
 
     import numpy as np
@@ -440,11 +470,7 @@ def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
         extract_prints, extract_prints_with_tiles, tile_row_ranges,
     )
 
-    cfg = dataclasses.replace(cfg, tile_rescue_mode=tile_mode)
-    slice_cfg = (dataclasses.replace(cfg, print_rescue_floor=0)
-                 if tile_mode == "never"
-                 else dataclasses.replace(
-                     cfg, print_rescue_floor=cfg.tile_rescue_floor))
+    slice_cfg = dataclasses.replace(cfg, print_rescue_floor=0)
     rows, _ = synth.generate_corpus(6, dup_fraction=0.4, seed=13)
     for r in rows:
         g = to_gray(r.pixels)
@@ -454,7 +480,7 @@ def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
         assert np.array_equal(fh, dh)
         assert np.array_equal(ft, dt)
         assert np.array_equal(ff, df)
-        tmap = {tid: (hh, tt, fff) for tid, hh, tt, fff, _rc in tiles}
+        tmap = {tid: (hh, tt, fff) for tid, hh, tt, fff in tiles}
         for tid, (r0, r1) in enumerate(tile_row_ranges(g.shape[0], cfg)):
             eh, et, ef = extract_prints(g[r0:r1, :], slice_cfg)
             if tid not in tmap:
@@ -470,7 +496,7 @@ def test_rescue_print_volume_bounded(cfg):
     """Cost guard for the print-density rescue: corpus-wide print
     volume with the rescue ON must stay within 1.5x of the rescue-OFF
     volume, and tile prints must be BIT-IDENTICAL to the no-rescue
-    extraction (tile_rescue_mode="never" ships). The round-4 uncapped
+    extraction (tiles never take the dense re-pick). The round-4 uncapped
     rescue read 2.66x total here and inflated the 69.7k-image
     candidate-join/verify phase ~2.5x wall before being contained
     (BENCH/ATTRIBUTION.md "Fix 5") — this test makes that class of
@@ -490,16 +516,16 @@ def test_rescue_print_volume_bounded(cfg):
         g = to_gray(r.pixels)
         (h, _, _), tiles, _, _ = extract_prints_with_tiles(g, cfg)
         on_full += h.size
-        on_tile += sum(hh.size for _, hh, _, _, _ in tiles)
+        on_tile += sum(hh.size for _, hh, _, _ in tiles)
         (h0, _, _), tiles0, _, _ = extract_prints_with_tiles(g, nocfg)
         off_full += h0.size
-        off_tile += sum(hh.size for _, hh, _, _, _ in tiles0)
+        off_tile += sum(hh.size for _, hh, _, _ in tiles0)
         assert h.size <= cfg.max_prints_per_image
-        if cfg.tile_rescue_mode == "never":
-            for (_, a, at, af, _), (_, b, bt, bf, _) in zip(tiles, tiles0):
-                assert np.array_equal(a, b)
-                assert np.array_equal(at, bt)
-                assert np.array_equal(af, bf)
+        assert len(tiles) == len(tiles0)
+        for (_, a, at, af), (_, b, bt, bf) in zip(tiles, tiles0):
+            assert np.array_equal(a, b)
+            assert np.array_equal(at, bt)
+            assert np.array_equal(af, bf)
     total_infl = (on_full + on_tile) / (off_full + off_tile)
     assert total_infl <= 1.5, (
         f"rescue inflates corpus print volume {total_infl:.2f}x "

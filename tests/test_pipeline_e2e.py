@@ -161,28 +161,6 @@ def test_olaf_strategy_spark_golden_parity(spark, cfg, tmp_path):
     assert len(missing) / max(1, len(golden_pairs)) <= 0.01, missing
 
 
-def test_parity_tile_channel_dense_mode(spark, cfg, tmp_path):
-    """tile_rescue_mode="always" (the dense-tile knob the shipping
-    "never" default leaves dormant) must keep exact Spark==golden tile
-    parity: the per-tile rescue flag threads through the Spark channel
-    (candidates -> verify -> rescue gate) exactly as the golden
-    matcher's extra_rescued argument does."""
-    acfg = cfg.with_(tile_rescue_mode="always")
-    rows, _ = synth.generate_corpus(14, dup_fraction=0.5, seed=777)
-    gm = GoldenMatcher(acfg)
-    grays = {r.image_id: to_gray(r.pixels) for r in rows}
-    for r in rows:
-        gm.store_image(r.image_id, grays[r.image_id], phash=r.phash)
-    golden_tiles = gm.tile_rescue_pairs(grays)
-
-    images = spark.createDataFrame(rows_to_pandas(rows))
-    res = run_pipeline(spark, images, CheckpointStore(str(tmp_path)), acfg)
-    spark_tiles = {(r["id_a"], r["id_b"])
-                   for r in res.dup_pairs.where("channel = 'tile'")
-                   .collect()}
-    assert spark_tiles == golden_tiles
-
-
 def test_parity_tile_channel(pipeline_result, corpus, cfg):
     """Crop-rescue tile channel: Spark == golden EXACTLY — the hit
     enumeration, hot-hash rule, Q5-Q13 kernel, and score gate are all

@@ -92,8 +92,8 @@ def test_verify_stage_single_pair_exchange(spark, cfg):
     from panako_spark.stages.verify import run_verify
 
     prints = spark.createDataFrame(
-        [(f"i{k}", (k * 37) % 91, k % 7, k % 5) for k in range(300)],
-        "image_id string, hash long, t1 int, f1 int")
+        [(f"i{k}", k, (k * 37) % 91, k % 7, k % 5) for k in range(300)],
+        "image_id string, iid long, hash long, t1 int, f1 int")
     v = run_verify(landmark_hits(prints, cfg, numeric_ids=True), cfg,
                    numeric_ids=True)
     p = plan(v)
@@ -112,37 +112,6 @@ def test_verify_stage_single_pair_exchange(spark, cfg):
     assert "Sort" in segment, segment
 
 
-def test_probe_prefilter_is_broadcast_semi_before_exchange(spark, cfg):
-    """The probe pre-filter (cfg.probe_prefilter='semi') must stay a
-    BROADCAST left-semi join evaluated map-side on the probe branch:
-    a plan where it degrades to a shuffled semi join would ADD an
-    exchange of the full exploded probe relation — the exact cost the
-    filter exists to avoid. Contract: exactly one semi join, broadcast
-    form, and turning the filter off removes it without changing any
-    other join."""
-    from panako_spark.plans.inspect import plan
-    from panako_spark.stages.candidates import landmark_hits
-
-    prints = spark.createDataFrame(
-        [(f"i{k}", k, (k * 37) % 997, k % 7, k % 5) for k in range(3000)],
-        "image_id string, iid long, hash long, t1 int, f1 int")
-    p_on = plan(landmark_hits(prints, cfg.with_(probe_prefilter="semi"),
-                              numeric_ids=True), "simple")
-    p_off = plan(landmark_hits(prints, cfg.with_(probe_prefilter="none"),
-                               numeric_ids=True), "simple")
-    semi_on = [ln for ln in p_on.splitlines() if "LeftSemi" in ln]
-    assert len(semi_on) == 1, p_on
-    assert "BroadcastHashJoin" in semi_on[0], semi_on[0]
-    assert not any("LeftSemi" in ln for ln in p_off.splitlines()), p_off
-    # the filter may add exactly ONE hash exchange — the build side's
-    # distinct aggregate over the single-column store-hash relation
-    # (8 bytes/row, partial agg map-side). The exploded probe relation
-    # itself must NOT gain an exchange: its side of the semi join is a
-    # broadcast probe, evaluated in the same stage as the explode.
-    assert p_on.count("Exchange hashpartitioning") == \
-        p_off.count("Exchange hashpartitioning") + 1, (p_on, p_off)
-
-
 def test_probe_join_converts_to_shuffled_hash(spark, cfg):
     """AQE must swap the landmark probe join's sort-merge for a
     shuffled-hash join at runtime (session factory sets
@@ -159,8 +128,9 @@ def test_probe_join_converts_to_shuffled_hash(spark, cfg):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         prints = spark.createDataFrame(
-            [(f"i{k}", (k * 37) % 997, k % 7, k % 5) for k in range(3000)],
-            "image_id string, hash long, t1 int, f1 int")
+            [(f"i{k}", k, (k * 37) % 997, k % 7, k % 5)
+             for k in range(3000)],
+            "image_id string, iid long, hash long, t1 int, f1 int")
         hits = landmark_hits(prints, cfg, numeric_ids=True)
         hits.collect()  # finalize the AQE plan
         p = plan(hits, "simple")

@@ -123,3 +123,25 @@ def test_incremental_store_manifest_rows_accumulate(spark, corpus, tmp_path,
     # prints manifest matches the actual table row count
     assert store.manifest("prints")["rows"] == \
         store.read(spark, "prints").count()
+
+
+def test_store_without_current_fingerprint_is_refused(spark, corpus,
+                                                      tmp_path, cfg):
+    """A store whose prints or signatures manifest carries an older
+    extraction fingerprint (another extractor config, or an older table
+    layout: config.STORE_FORMAT) or none at all is refused by both a
+    run_pipeline resume and an incremental append, with a message that
+    says to re-extract — never read half-compatibly."""
+    from panako_spark.pipeline import run_pipeline
+
+    store, images = _fresh_store(spark, corpus[:4], tmp_path, cfg)
+    fp = cfg.extraction_fingerprint()
+    for stale in ("0123456789abcdef", None):
+        for table in ("prints", "signatures"):
+            for t in ("prints", "signatures"):
+                store._mark_complete(t, -1,
+                                     config_fp=stale if t == table else fp)
+            with pytest.raises(ValueError, match="re-extract"):
+                run_pipeline(spark, images, store, cfg)
+            with pytest.raises(ValueError, match="re-extract"):
+                SO.store_incremental(spark, images, store, cfg)

@@ -14,7 +14,6 @@ from panako_spark.stages.extract import run_extract, split_prints
 from panako_spark.streaming.monitor import start_monitor
 
 
-@pytest.mark.timeout(300)
 def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
     rows, _ = generate_corpus(12, dup_fraction=0.5, seed=99)
     base = [r for r in rows if "_dup" not in r.image_id]
@@ -38,7 +37,9 @@ def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
     q = start_monitor(spark, str(in_dir), prints_path, out_dir,
                       str(tmp_path / "stream_ckpt"), cfg,
                       available_now=True)
-    q.awaitTermination(240)
+    if not q.awaitTermination(240):
+        q.stop()
+        pytest.fail("file monitor did not drain its input within 240 s")
 
     matches = spark.read.parquet(out_dir)
     got = {(r["query_id"], r["ref_id"]) for r in matches.collect()}
@@ -52,7 +53,6 @@ def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
         assert "_dup" in qid and "_dup" not in rid
 
 
-@pytest.mark.timeout(300)
 def test_live_monitor_rate_source(spark, cfg, tmp_path):
     """S3 live-device analog: an unbounded rate-micro-batch stream (no
     files, exists only while the query runs) synthesizes frames that
@@ -93,7 +93,6 @@ def test_live_monitor_rate_source(spark, cfg, tmp_path):
         f"live monitor missed originals: {sorted(got)[:8]}")
 
 
-@pytest.mark.timeout(300)
 def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
     """S3 over a REAL network receiver: a TCP peer pushes wire-encoded
     frames (tab/base64 framing) into the socket source; the monitor
@@ -174,3 +173,36 @@ def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
         f"socket monitor missed dups: {sorted(got)[:8]}")
     # the corrupt frame was quarantined, not matched and not fatal
     assert all(qid != "corrupt0" for qid, _ in got)
+
+
+def test_frame_to_wire_rejects_framing_chars():
+    """image_id and fmt ride the wire raw: a tab or line break in either
+    would shift the field count and parse_wire would silently drop the
+    frame, so the sender refuses it."""
+    from panako_spark.streaming.monitor import frame_to_wire
+
+    line = frame_to_wire("img1", b"\x01\x02", 4, 3, "png", "a\tb\nc", 7)
+    assert line.split("\t")[:4] == ["img1", "png", "4", "3"]
+    assert len(line.split("\t")) == 7 and "\n" not in line
+    for bad in ("a\tb", "a\nb", "a\rb"):
+        with pytest.raises(ValueError, match="image_id"):
+            frame_to_wire(bad, b"x", 1, 1, "png", "", 0)
+        with pytest.raises(ValueError, match="fmt"):
+            frame_to_wire("ok", b"x", 1, 1, bad, "", 0)
+
+
+def test_parse_wire_accepts_crlf_lines(spark):
+    """A CRLF-terminated peer leaves a trailing \\r on each line; the
+    last field (phash) must still parse instead of decoding to null."""
+    from panako_spark.streaming.monitor import frame_to_wire, parse_wire
+
+    lf = frame_to_wire("lf", b"\x00\x01", 2, 2, "png", "cap one", 12345)
+    crlf = frame_to_wire("crlf", b"\x02", 1, 1, "raw", "cap two", -9) + "\r"
+    got = {r["image_id"]: r for r in parse_wire(
+        spark.createDataFrame([(lf,), (crlf,)], "value string")).collect()}
+    assert set(got) == {"lf", "crlf"}
+    assert got["lf"]["phash"] == 12345
+    assert got["crlf"]["phash"] == -9
+    assert got["crlf"]["caption"] == "cap two"
+    assert bytes(got["crlf"]["bytes"]) == b"\x02"
+    assert (got["crlf"]["w"], got["crlf"]["h"]) == (1, 1)
