@@ -267,7 +267,6 @@ class PanakoConfig:
     cc_max_iterations: int = 20
 
     # ---- execution ------------------------------------------------------------
-    shuffle_partitions: int = 32
     arrow_batch_rows: int = 256
 
     def __post_init__(self):

@@ -321,7 +321,9 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             spark, "clusters",
             lambda: connected_components(
                 dup_pairs.select("id_a", "id_b").distinct(),
-                images.select("image_id"),
+                # the persisted id map: one row per input image, err
+                # rows included — no rescan of the raw images for ids
+                signatures.select("image_id"),
                 cfg.cc_max_iterations)))
 
         # ---- one consolidated lineage append --------------------------------

@@ -7,9 +7,14 @@ from Kiveris et al., "Connected Components in MapReduce and Beyond"
 per-node neighbor set is never materialized; both stars are a groupBy-min
 plus a re-join, so the hottest node costs one shuffle row per edge).
 
-No GraphFrames dependency (SURVEY.md §4 custom-work item 2). Each round is
-localCheckpoint()ed to truncate lineage; convergence = edge multiset
-checksum stable. Labels are component minima (deterministic, matches the
+No GraphFrames dependency (SURVEY.md §4 custom-work item 2). Each
+large-star + small-star round is localCheckpoint()ed to truncate lineage
+and is followed by one aggregation that asks whether the edges form a
+star forest: every src has exactly one dst and no dst is also a src.
+Small-star emits src > dst, so each such star is centred on its
+component minimum and is a fixpoint of both stars (Kiveris et al.) — the
+loop stops at the first round that reaches one, and the edges ARE the
+labels. Labels are component minima (deterministic, matches the
 union-find golden in kernels/matcher.py).
 """
 
@@ -52,13 +57,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.pmod(F.xxhash64("src", "dst"),
-                                F.lit(1_000_000_007))), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Convergence test for small-star output: every src has exactly one
+    dst and no dst is also a src. Both halves are needed — a node with
+    two distinct minima (d->m1, d->m2) has no dst that is a src, and a
+    2-hop chain (c->b, b->a) has one dst per src. One groupBy over the
+    edges tagged by role: a node's non-null _d are its out-neighbors,
+    its null rows count the edges pointing at it."""
+    tagged = (edges.select(F.col("src").alias("_v"), F.col("dst").alias("_d"))
+              .union(edges.select(
+                  F.col("dst").alias("_v"),
+                  F.lit(None).cast(edges.schema["dst"].dataType)
+                  .alias("_d"))))
+    nodes = tagged.groupBy("_v").agg(
+        F.min("_d").alias("_lo"), F.max("_d").alias("_hi"),
+        F.count("_d").alias("_out"), F.count("*").alias("_all"))
+    bad = nodes.where((F.col("_lo") != F.col("_hi"))
+                      | ((F.col("_out") > 0)
+                         & (F.col("_all") > F.col("_out"))))
+    return bad.isEmpty()
 
 
 def connected_components(pairs: DataFrame, all_ids: DataFrame,
@@ -66,69 +83,54 @@ def connected_components(pairs: DataFrame, all_ids: DataFrame,
     """pairs(id_a, id_b) + all_ids(image_id) -> (image_id, cluster_id).
 
     cluster_id = min image_id of the component; singletons label themselves.
+    Raises RuntimeError if `max_iterations` rounds pass without reaching
+    a star forest — labels of an unconverged graph are never returned.
+
+    Cost per round: the two stars are groupBy-mins, re-joins and one
+    distinct — a dozen small exchanges in the physical plan, which
+    repeats the shared mins subtrees per consumer — plus the star-forest
+    check's one aggregation, which is the round's only action (it
+    materializes the lazy checkpoint). The bench corpus's graph (small
+    near-cliques of a base image and its dups) is a star forest after
+    one round.
 
     The edge relation is orders of magnitude smaller than the pipeline's
-    hit exchanges (verified pairs, not hits), but each star round plans
-    4-5 shuffles, so at the session's exchange-sized shuffle-partition
-    count (256 at bench scale) a converged loop schedules thousands of
-    near-empty reduce tasks whose dispatch latency serializes on the
-    driver — measured 15.8 s -> 52.9 s wall at 69.7k images when the
-    session went 32 -> 256 partitions. The loop therefore caps
-    spark.sql.shuffle.partitions at 32 for its own rounds (restored
-    after the last materializing action; the lazy label join left for
-    the caller is one tiny AQE-coalesced shuffle either way). The cap
-    is NOT thread-safe vs concurrent planning on the same session —
+    hit exchanges (verified pairs, not hits), but at the session's
+    exchange-sized shuffle-partition count (256 at bench scale) the loop
+    would schedule thousands of near-empty reduce tasks whose dispatch
+    latency serializes in the scheduler — measured 15.8 s -> 52.9 s wall at
+    69.7k images when the session went 32 -> 256 partitions. The loop
+    therefore caps spark.sql.shuffle.partitions at 32 for its own rounds
+    (restored after the last check; the lazy label join left for the
+    caller is one tiny AQE-coalesced shuffle either way). The cap is NOT
+    thread-safe vs concurrent planning on the same session —
     run_pipeline calls this after the concurrent branches have joined.
     """
     spark = pairs.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
     orig_parts = spark.conf.get(conf_key, "32")
-    cc_parts = min(int(orig_parts), 32)
     edges = (pairs.select(F.col("id_a").alias("src"),
                           F.col("id_b").alias("dst"))
              .where(F.col("src") != F.col("dst")).distinct()
              .localCheckpoint(eager=False))
-    prev = None
-    done = 0
-    first_check = True
-    spark.conf.set(conf_key, str(cc_parts))
+    spark.conf.set(conf_key, str(min(int(orig_parts), 32)))
     try:
-        edges, labels = _cc_loop(edges, prev, done, first_check,
-                                 max_iterations)
+        for _ in range(max_iterations):
+            edges = (_small_star(_large_star(edges))
+                     .localCheckpoint(eager=False))
+            if _is_star_forest(edges):
+                break
+        else:
+            raise RuntimeError(
+                f"connected components did not reach a star forest in "
+                f"{max_iterations} rounds")
     finally:
         spark.conf.set(conf_key, orig_parts)
-    # after convergence every non-min node points directly at the component
-    # min; minima and isolated nodes label themselves
+    # every non-min node points directly at its component min; minima
+    # and isolated nodes label themselves
+    labels = edges.select(F.col("src").alias("image_id"),
+                          F.col("dst").alias("cluster_id"))
     return (all_ids.select("image_id")
             .join(labels, "image_id", "left")
             .select("image_id",
                     F.coalesce("cluster_id", "image_id").alias("cluster_id")))
-
-
-def _cc_loop(edges: DataFrame, prev, done: int, first_check: bool,
-             max_iterations: int):
-    while done < max_iterations:
-        # batch star rounds per driver synchronization: the checksum
-        # collect is the only action (it materializes the lazy
-        # checkpoint as a side effect). Typical graphs converge in 2-3
-        # rounds, so the first check comes after 3 and subsequent checks
-        # every 2 — at a fixpoint extra rounds are idempotent no-ops, so
-        # batched detection costs at most one wasted round while cutting
-        # the driver-synchronized round trips (the core-count-
-        # independent term of this loop) by 2-3x.
-        batch = 3 if first_check else 2
-        first_check = False
-        for _ in range(min(batch, max_iterations - done)):
-            edges = (_small_star(_large_star(edges))
-                     .localCheckpoint(eager=False))
-            done += 1
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    labels = (edges.groupBy(F.col("src").alias("image_id"))
-              .agg(F.min("dst").alias("cluster_id")))
-    # materialize the labels while the partition cap is still in force —
-    # groupBy on the checkpointed edges is the loop's last real shuffle
-    labels = labels.localCheckpoint(eager=True)
-    return edges, labels

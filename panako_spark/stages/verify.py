@@ -7,6 +7,14 @@ The reference's per-candidate match loop Q5-Q13 (PanakoStrategy.java:
         .sortWithinPartitions(id_a, id_b)   -- pairs become contiguous runs
         .mapInPandas(verify_batches)        -- flat int columns, NumPy kernel
 
+The exchange carries no partition count: it plans as REPARTITION_BY_COL,
+which AQE coalesces by shuffle bytes (advisoryPartitionSizeInBytes), so
+the number of Python tasks follows the hit volume. A fixed count would
+plan as REPARTITION_BY_NUM, which AQE never coalesces, and every
+partition would be a Python invocation paying the Arrow/worker boundary
+cost however few hits it holds (at the bench corpus, ~4 MB of hits whose
+NumPy work takes 0.1 s in one process).
+
 Design notes (measured on the bench corpus; the previous design used
 groupBy + 4x collect_list + a Q5 HAVING join, which built per-group
 object arrays in the JVM — the object hash aggregate dominated stage
@@ -197,22 +205,20 @@ def make_tile_verify_batches(cfg: PanakoConfig):
     return tile_verify_batches
 
 
-def run_tile_verify(hits: DataFrame, cfg: PanakoConfig,
-                    partitions: int | None = None) -> DataFrame:
+def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
     """tile hits(id_q, id_r, tile_id, tf) -> directed
     (id_q, id_r, tile_id, score); tf is the packed coordinate int64
     (candidates._pack_half).
 
-    Same plan shape as run_verify: ONE hash exchange on the directed
-    pair key (tile_id rides inside the pair's partition), the Q5 min-hits
-    gate JVM-side over the exchange's own sort, then the NumPy kernel
-    per contiguous (pair, tile) run. The caller gates on
+    Same plan shape as run_verify: ONE byte-sized hash exchange on the
+    directed pair key (tile_id rides inside the pair's partition), the
+    Q5 min-hits gate JVM-side over the exchange's own sort, then the
+    NumPy kernel per contiguous (pair, tile) run. The caller gates on
     score >= cfg.tile_min_score and canonicalizes pair order."""
     from pyspark.sql import Window
 
-    n = partitions or cfg.shuffle_partitions
     w = Window.partitionBy("id_q", "id_r", "tile_id")
-    gated = (hits.repartition(n, "id_q", "id_r")
+    gated = (hits.repartition("id_q", "id_r")
              .withColumn("_n", F.count("*").over(w))
              .where(F.col("_n") >= cfg.min_unfiltered_hits)
              .drop("_n")
@@ -222,24 +228,23 @@ def run_tile_verify(hits: DataFrame, cfg: PanakoConfig,
 
 
 def run_verify(hits: DataFrame, cfg: PanakoConfig,
-               partitions: int | None = None,
                numeric_ids: bool = False) -> DataFrame:
     """hits(id_a, id_b, tf) -> verified pairs with score; tf is the
     packed coordinate int64 (candidates._pack_half).
 
-    One hash exchange on the pair key; the Q5 gate runs JVM-side as a
-    window count over the exchange's own sort (noise pairs with < 10
-    hits are ~95% of the hit relation on the bench corpus — gating them
-    before the Python boundary cuts the Arrow transfer ~20x), then the
-    Q6-Q13 alignment kernel does one NumPy pass per partition over flat
-    columns. With numeric_ids the id columns are int64 (see
+    One hash exchange on the pair key, sized by AQE from its bytes (see
+    the module docstring); the Q5 gate runs JVM-side as a window count
+    over the exchange's own sort (noise pairs with < 10 hits are ~95%
+    of the hit relation on the bench corpus — gating them before the
+    Python boundary cuts the Arrow transfer ~20x), then the
+    Q6-Q13 alignment kernel does one NumPy pass per coalesced partition
+    over flat columns. With numeric_ids the id columns are int64 (see
     landmark_hits) — shuffle, sort, and Arrow all on fixed-width keys.
     """
     from pyspark.sql import Window
 
-    n = partitions or cfg.shuffle_partitions
     w = Window.partitionBy("id_a", "id_b")
-    gated = (hits.repartition(n, "id_a", "id_b")
+    gated = (hits.repartition("id_a", "id_b")
              .withColumn("_n", F.count("*").over(w))
              .where(F.col("_n") >= cfg.min_unfiltered_hits)  # Q5, JVM-side
              .drop("_n")

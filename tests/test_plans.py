@@ -82,22 +82,47 @@ def test_min_hits_gate_single_shuffle(spark):
     # groupBy + HAVING must be ONE exchange with partial aggregation
     assert shuffle_count(R.min_hits_gate(spark, SF)) <= 1
 
-def test_verify_stage_single_pair_exchange(spark, cfg):
-    """The verify redesign's core invariant: between the landmark hit
-    relation and the Python kernel there is exactly ONE exchange (the
-    pair-key repartition); the Q5 gate is a JVM Window+Filter on that
-    exchange's own sort, and the kernel is the only Python node."""
-    from panako_spark.plans.inspect import plan
+def _landmark_verify(spark, cfg):
     from panako_spark.stages.candidates import landmark_hits
     from panako_spark.stages.verify import run_verify
 
     prints = spark.createDataFrame(
         [(f"i{k}", k, (k * 37) % 91, k % 7, k % 5) for k in range(300)],
         "image_id string, iid long, hash long, t1 int, f1 int")
-    v = run_verify(landmark_hits(prints, cfg, numeric_ids=True), cfg,
-                   numeric_ids=True)
-    p = plan(v)
-    tree = p.split("\n\n", 1)[0]  # the indented operator tree only
+    return run_verify(landmark_hits(prints, cfg, numeric_ids=True), cfg,
+                      numeric_ids=True)
+
+
+def _tile_verify(spark, cfg):
+    from panako_spark.stages.candidates import tile_hits
+    from panako_spark.stages.verify import run_tile_verify
+
+    prints = spark.createDataFrame(
+        [(f"i{k}", k, (k * 37) % 91, k % 7, k % 5, True)
+         for k in range(300)],
+        "image_id string, iid long, hash long, t1 int, f1 int, "
+        "is_std boolean")
+    tile_prints = spark.createDataFrame(
+        [(f"i{k}", k, k % 4, (k * 37) % 91, k % 7, k % 5)
+         for k in range(300)],
+        "image_id string, iid long, tile_id int, hash long, t1 int, f1 int")
+    return run_tile_verify(tile_hits(tile_prints, prints, cfg), cfg)
+
+
+@pytest.mark.parametrize("build", [_landmark_verify, _tile_verify],
+                         ids=["landmark", "tile"])
+def test_verify_stage_single_pair_exchange(spark, cfg, build):
+    """The verify redesign's core invariant: between the hit relation
+    and the Python kernel there is exactly ONE exchange (the pair-key
+    repartition); the Q5 gate is a JVM Window+Filter on that exchange's
+    own sort, and the kernel is the only Python node. The exchange
+    carries no partition count (REPARTITION_BY_COL), so AQE coalesces
+    it by bytes; REPARTITION_BY_NUM is never coalesced and would pin one
+    Python task per partition however little the hits weigh."""
+    from panako_spark.plans.inspect import plan
+
+    v = build(spark, cfg)
+    tree = plan(v).split("\n\n", 1)[0]  # the indented operator tree only
     assert tree.count("MapInPandas") == 1
     assert "Window" in tree
     # tree prints top-down: the segment between the python node and the
@@ -105,11 +130,15 @@ def test_verify_stage_single_pair_exchange(spark, cfg):
     # pair-key repartition that Window/Sort/Filter all reuse)
     segment = tree.split("MapInPandas", 1)[1].split("SortMergeJoin", 1)[0]
     assert segment.count("Exchange") == 1, segment
-    # the kernel's contiguity contract: an explicit (id_a, id_b) sort
-    # feeds the python node (run_verify.sortWithinPartitions); Catalyst
-    # must satisfy it from the Window's own required ordering WITHOUT a
-    # second exchange (asserted above) but a Sort node must be present
+    # the kernel's contiguity contract: an explicit pair-key sort feeds
+    # the python node (sortWithinPartitions); Catalyst must satisfy it
+    # from the Window's own required ordering WITHOUT a second exchange
+    # (asserted above) but a Sort node must be present
     assert "Sort" in segment, segment
+    simple = plan(v, "simple")
+    exchange = simple.split("MapInPandas", 1)[1].split("SortMergeJoin", 1)[0]
+    assert "REPARTITION_BY_NUM" not in exchange, exchange
+    assert "REPARTITION_BY_COL" in exchange, exchange
 
 
 def test_probe_join_converts_to_shuffled_hash(spark, cfg):

@@ -10,7 +10,7 @@ import pytest
 from panako_spark.io.checkpoint import CheckpointStore
 from panako_spark.kernels.matcher import connected_components_golden
 from panako_spark.stages.candidates import pairs_from_keys
-from panako_spark.stages.cluster import connected_components
+from panako_spark.stages.cluster import _is_star_forest, connected_components
 
 
 # ------------------------------------------------------------ pairs/skew ----
@@ -65,6 +65,32 @@ def test_cc_long_chain(spark):
     want = connected_components_golden({(a, b) for a, b in chain}, ids)
     assert got == want
     assert set(got.values()) == {"n000"}
+
+
+def test_cc_unconverged_raises(spark):
+    """One round cannot collapse the 60-node chain into stars; the loop
+    must refuse to return labels rather than hand back a partial
+    clustering."""
+    ids = [f"n{i:03d}" for i in range(60)]
+    pairs = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(59)], ["id_a", "id_b"])
+    all_ids = spark.createDataFrame([(i,) for i in ids], ["image_id"])
+    with pytest.raises(RuntimeError, match="star forest"):
+        connected_components(pairs, all_ids, max_iterations=1)
+
+
+@pytest.mark.parametrize("edges,converged", [
+    # d points at two minima, neither of which is a src: "no dst is a
+    # src" alone would accept this
+    ([("d", "a"), ("d", "b")], False),
+    # 2-hop chain: one dst per src, but b is both
+    ([("c", "b"), ("b", "a")], False),
+    # two stars centred on their minima
+    ([("b", "a"), ("c", "a"), ("d", "a"), ("y", "x"), ("z", "x")], True),
+], ids=["two_minima", "chain", "star_forest"])
+def test_cc_star_forest_predicate(spark, edges, converged):
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    assert _is_star_forest(df) is converged
 
 
 def test_cc_multiple_components_and_singletons(spark):
