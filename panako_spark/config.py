@@ -187,23 +187,16 @@ class PanakoConfig:
     # from (offset, height) row tiles, so a stored 80-95% vertical crop
     # still aligns with its original. The grid spans the crop parameter
     # space at the measured alignment tolerance (~±4 rows); tile matches
-    # are verified by the standard Q5-Q13 kernel per (pair, tile,
-    # direction) and accepted only at score >= tile_min_score — on the
-    # 642-image parity corpus that gate admits 4 extra true crop pairs
-    # and 0 false ones (truth recall 0.972 -> 0.985). Tile prints are
-    # query-time ephemera computed in the same decode pass; the stored
-    # print format is unchanged.
-    tile_rescue: bool = True
+    # are verified by the standard Q5-Q13 kernel per directed (query,
+    # stored image, tile) run and accepted only at score >=
+    # tile_min_score — on the 642-image parity corpus that gate admits
+    # 4 extra true crop pairs and 0 false ones (truth recall 0.972 ->
+    # 0.985). Tile prints are query-time ephemera computed in the same
+    # decode pass; the stored print format is unchanged. Tile probes
+    # match exact hashes (candidates.tile_hits carries the measurement).
     tile_probe_offsets: tuple = (0.0, 0.05, 0.10, 0.15)
     tile_probe_heights: tuple = (0.87, 0.93)
-    # Tile probes match EXACT hashes (range 0), unlike the landmark
-    # channel's ±query_range: an aligned tile is computed from the same
-    # pixel content as the stored crop, so its hashes agree exactly —
-    # measured on the 642-image corpus, range 0 keeps all 4 rescued
-    # crop pairs (scores 15/17/26/65) with 0 false positives at any
-    # gate >= 10, while range 2 costs 5x the probe join volume for
-    # identical recall. Gate 12 leaves margin under the lowest TP.
-    tile_query_range: int = 0
+    # Gate 12 leaves margin under the lowest true crop pair (score 15).
     tile_min_score: int = 12
     # Tile matches verify with the Q13 coverage gate relaxed to this
     # value (the OTA-config per-window relaxation analog,
@@ -277,6 +270,12 @@ class PanakoConfig:
         if self.olaf_eps_per_fp not in (2, 3):
             raise ValueError("olaf_eps_per_fp must be 2 or 3 "
                              "(Key.java:227)")
+        if self.freq_bins > 1024:
+            raise ValueError(
+                f"freq_bins={self.freq_bins} exceeds the packed "
+                "hit-coordinate budget (f < 1024); lower freq_samples or "
+                "widen the packing in stages/candidates.py + "
+                "stages/verify._unpack_tf")
 
     def with_(self, **kw) -> "PanakoConfig":
         return replace(self, **kw)

@@ -390,8 +390,7 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     )
 
     profiles = column_profiles(gray, cfg)
-    tile_ranges = (tile_row_ranges(gray.shape[0], cfg)
-                   if cfg.tile_rescue else [])
+    tile_ranges = tile_row_ranges(gray.shape[0], cfg)
     # slice 0 is the full image (profiles' column count IS the image
     # height — column_profiles documents the row independence); the
     # rest are the probe tiles. One batched spectrogram + peak pass

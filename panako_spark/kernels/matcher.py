@@ -159,17 +159,12 @@ class GoldenMatcher:
         Spark sibling filters on `is_std`) — dense rescue extras are
         landmark-channel-only (prints_with_rescue documents the
         measured reason)."""
-        import dataclasses
-
         from panako_spark.kernels.landmarks import extract_prints_with_tiles
 
-        if not self.cfg.tile_rescue:
-            return set()
         # Q13 coverage relaxed to tile_min_coverage for tile matches —
-        # the Spark sibling (stages/verify.make_tile_verify_batches)
-        # builds the identical vcfg
-        vcfg = dataclasses.replace(
-            self.cfg, min_coverage=self.cfg.tile_min_coverage)
+        # the Spark sibling (stages/verify.run_tile_verify) builds the
+        # identical vcfg
+        vcfg = self.cfg.with_(min_coverage=self.cfg.tile_min_coverage)
         pairs: set[tuple[str, str]] = set()
         for qid, gray in grays.items():
             _, tiles, _resc, _n_std = extract_prints_with_tiles(gray,
@@ -178,7 +173,7 @@ class GoldenMatcher:
                 for rid, res in self.query_prints(
                         h, t1, f1, avoid={qid},
                         hot_cap=self.cfg.hash_max_images,
-                        query_range=self.cfg.tile_query_range,
+                        query_range=0,
                         std_index_only=True, verify_cfg=vcfg).items():
                     if res.score >= self.cfg.tile_min_score \
                             and self._pair_ok(qid, rid, res.score):

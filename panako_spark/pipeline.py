@@ -253,11 +253,9 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         def compute_tile_pairs() -> DataFrame:
             # crop-rescue channel: tile probe prints (query-time
             # ephemera from the SAME decode pass, riding the extract
-            # cache) ±range the stored prints; verify per (pair, tile,
-            # direction); accept at score >= tile_min_score. Golden
-            # sibling: GoldenMatcher.tile_rescue_pairs.
-            if not cfg.tile_rescue:
-                return spark.createDataFrame([], "id_a string, id_b string")
+            # cache) probe the stored prints; verify per directed (query,
+            # stored image, tile) run; accept at score >= tile_min_score.
+            # Golden sibling: GoldenMatcher.tile_rescue_pairs.
             if extracted is not None:
                 tp = split_tile_prints(extracted)
             else:

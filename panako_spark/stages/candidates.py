@@ -6,7 +6,9 @@ Channels (SURVEY.md §7 step 5 / north_star):
               explode(sequence(h-r, h+r)) + equi-join so Catalyst runs a
               plain shuffled hash join instead of a band join)
   tile      — exact-hash probe of the crop-rescue tile prints against
-              the stored standard-window prints (tile_hits)
+              the stored standard-window prints (tile_hits); both
+              channels and the streaming monitor share one probe join
+              (_probe_hits)
   signature — minhash / simhash / phash band keys and caption_exact /
               caption_substring keys, fused into ONE channel-tagged
               salted self-join (fused_candidate_pairs)
@@ -137,22 +139,41 @@ def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
 # which halves the UnsafeRow bytes the pair-key exchange sorts and the
 # Arrow bytes the verify kernel receives (stages/verify._unpack_tf is
 # the inverse). Bounds making each half fit 31 bits: f < 1024 (freq
-# bin index; freq_bins <= 1024 checked below, default 128) and
+# bin index; PanakoConfig refuses freq_bins > 1024, default 128) and
 # t < 2^21 (frame index; kernels/spectral.frame_profiles raises on
 # wider images — 2^21 frames is a ~4-gigapixel-wide image).
 _HALF = 1 << 32
+_PRINT_COLS = ("hash", "t1", "f1")
 
 
 def _pack_half(t_col: str, f_col: str):
     return F.col(t_col).cast("long") * 1024 + F.col(f_col)
 
 
-def _check_packable(cfg: PanakoConfig) -> None:
-    if cfg.freq_bins > 1024:
-        raise ValueError(
-            f"freq_bins={cfg.freq_bins} exceeds the packed hit-coordinate "
-            "budget (f < 1024); lower freq_samples or widen the packing "
-            "in stages/candidates.py + stages/verify._unpack_tf")
+def _probe_hits(probe: DataFrame, store: DataFrame, r: int,
+                keep) -> DataFrame:
+    """The probe join every query path shares (landmark_hits, tile_hits,
+    streaming/monitor.probe_batch): probe(q_id, *run_keys, hash, t1, f1)
+    against store(r_id, hash, t1, f1) on |h_q - h_r| <= r, rows kept
+    where `keep` holds -> (q_id, r_id, *run_keys, tf).
+
+    The ±r band is an explode(sequence(h-r, h+r)) of the probe hash, so
+    Catalyst runs a plain shuffled hash join instead of a band join;
+    r == 0 is the plain equi-join with no explode fan-out."""
+    q_id, *keys = [c for c in probe.columns if c not in _PRINT_COLS]
+    (r_id,) = [c for c in store.columns if c not in _PRINT_COLS]
+    h = F.col("hash")
+    q = probe.select(
+        q_id, *keys, _pack_half("t1", "f1").alias("_q32"),
+        (F.explode(F.sequence(h - r, h + r)) if r else h)
+        .alias("probe_hash"))
+    ref = store.select(r_id, h.alias("probe_hash"),
+                       _pack_half("t1", "f1").alias("_r32"))
+    return (q.join(ref, "probe_hash")
+            .where(keep)
+            .select(q_id, r_id, *keys,
+                    (F.col("_q32") * F.lit(_HALF) + F.col("_r32"))
+                    .alias("tf")))
 
 
 def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
@@ -174,38 +195,27 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
     cardinality, id map persisted in the checkpoints).
     """
     p = hot_hash_filter(prints, cfg, n_images=n_images)
-    p = p.withColumn("_iid", F.col("iid" if numeric_ids else "image_id"))
-    _check_packable(cfg)
-    r = cfg.query_range
-    probe = (p.select(
-        F.col("_iid").alias("id_a"),
-        _pack_half("t1", "f1").alias("_a32"),
-        F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
-        .alias("probe_hash")))
-    ref = p.select(F.col("_iid").alias("id_b"),
-                   F.col("hash").alias("probe_hash"),
-                   _pack_half("t1", "f1").alias("_b32"))
-    return (probe.join(ref, "probe_hash")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    (F.col("_a32") * F.lit(_HALF) + F.col("_b32"))
-                    .alias("tf")))
+    pid = F.col("iid" if numeric_ids else "image_id")
+    return _probe_hits(p.select(pid.alias("id_a"), *_PRINT_COLS),
+                       p.select(pid.alias("id_b"), *_PRINT_COLS),
+                       cfg.query_range, F.col("id_a") < F.col("id_b"))
 
 
 def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
               n_images: int | None = None) -> DataFrame:
-    """Crop-rescue channel: tile probe prints (query side) ±query_range
-    against the stored prints — DIRECTED hits per (query image, stored
-    image, tile).
+    """Crop-rescue channel: tile probe prints (query side) exact-hash
+    against the stored prints — DIRECTED hits (id_q, id_r, tile_id, tf)
+    per (query image, stored image, tile), the input of
+    verify.run_tile_verify.
 
     Mirrors GoldenMatcher.tile_rescue_pairs exactly: a query print whose
     RAW hash is a stop-word is skipped entirely (anti-join on the raw
     hash), hot store hashes never match (store-side anti-join), and self
-    pairs drop via id inequality (Q2 with avoid={self}). Verification
-    happens per (pair, tile, direction) downstream
-    (verify.run_tile_verify) with the standard Q5-Q13 kernel — the
-    reference analog is one monitor window's query
-    (PanakoStrategy.java:498-510).
+    pairs drop via id inequality (Q2 with avoid={self}). Each tile is
+    one directed query, verified in the query -> store orientation only
+    — the reference analog is one monitor window's query
+    (PanakoStrategy.java:498-510), and the streaming monitor builds its
+    hits with the same probe join (_probe_hits).
 
     The stop-word cap here is the FIXED floor (cfg.hash_max_images), NOT
     the corpus-scaled effective cap the landmark channel uses: the
@@ -225,39 +235,24 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     dense∩dense intersections (prints_with_rescue docstring; golden
     sibling: tile_rescue_pairs' std_index_only). The hot-hash set is
     computed on the FULL print relation first, like the golden
-    matcher's _hot_hashes, so stop-word parity is unaffected.
-
-    Scale shape: otherwise identical to landmark_hits — one explode +
-    equi-join on the probe hash, int64 ids, no new shuffle kinds."""
+    matcher's _hot_hashes, so stop-word parity is unaffected."""
     hot = hot_hash_set(prints, cfg, n_images=n_images,
                        cap=cfg.hash_max_images)
     std = prints.where(F.col("is_std"))
     store = std if hot is None else std.join(hot, "hash", "left_anti")
     q = (tile_prints if hot is None
          else tile_prints.join(hot, "hash", "left_anti"))
-    _check_packable(cfg)
-    r = cfg.tile_query_range
-    if r == 0:
-        # exact-hash probe (the default; config.py documents the
-        # measurement): a plain equi-join, no explode fan-out
-        probe = q.select(
-            F.col("iid").alias("id_q"), "tile_id",
-            _pack_half("t1", "f1").alias("_q32"),
-            F.col("hash").alias("probe_hash"))
-    else:
-        probe = q.select(
-            F.col("iid").alias("id_q"), "tile_id",
-            _pack_half("t1", "f1").alias("_q32"),
-            F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
-            .alias("probe_hash"))
-    ref = store.select(F.col("iid").alias("id_r"),
-                       F.col("hash").alias("probe_hash"),
-                       _pack_half("t1", "f1").alias("_r32"))
-    return (probe.join(ref, "probe_hash")
-            .where(F.col("id_q") != F.col("id_r"))
-            .select("id_q", "id_r", "tile_id",
-                    (F.col("_q32") * F.lit(_HALF) + F.col("_r32"))
-                    .alias("tf")))
+    # Tile probes match EXACT hashes (range 0), unlike the landmark
+    # channel's ±query_range: an aligned tile is computed from the same
+    # pixel content as the stored crop, so its hashes agree exactly —
+    # measured on the 642-image corpus, range 0 keeps all 4 rescued
+    # crop pairs (scores 15/17/26/65) with 0 false positives at any
+    # gate >= 10, while range 2 costs 5x the probe join volume for
+    # identical recall.
+    return _probe_hits(
+        q.select(F.col("iid").alias("id_q"), "tile_id", *_PRINT_COLS),
+        store.select(F.col("iid").alias("id_r"), *_PRINT_COLS),
+        0, F.col("id_q") != F.col("id_r"))
 
 
 def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:

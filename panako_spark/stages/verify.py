@@ -1,4 +1,4 @@
-"""Landmark verify stage: per-pair alignment kernel over grouped hits.
+"""Verify stage: per-pair alignment kernel over grouped hits.
 
 The reference's per-candidate match loop Q5-Q13 (PanakoStrategy.java:
 349-475) runs as ONE shuffle + ONE batched Python pass:
@@ -34,6 +34,9 @@ time and its GC pressure slowed every later stage in the same JVM):
     stored once per canonical pair (id_a < id_b) and the kernel tries
     both query orientations — the union the reference's dedup driver
     produces by querying every file (Deduplication.java:98-108).
+    Directed queries (the tile channel and the streaming monitor) key
+    their runs (id_q, id_r, tile_id) and verify the query side only
+    (run_directed_verify).
 """
 
 from __future__ import annotations
@@ -49,24 +52,25 @@ import pyspark.sql.types as T
 from panako_spark.config import PanakoConfig
 from panako_spark.kernels.verify import verify_pair
 
-def verified_schema(id_type: T.DataType = T.StringType()) -> T.StructType:
-    return T.StructType([
-        T.StructField("id_a", id_type),
-        T.StructField("id_b", id_type),
-        T.StructField("score", T.IntegerType()),
-        T.StructField("time_factor", T.DoubleType()),
-        T.StructField("freq_factor", T.DoubleType()),
-        T.StructField("coverage", T.DoubleType()),
-        T.StructField("q_start", T.IntegerType()),
-        T.StructField("q_stop", T.IntegerType()),
-    ])
+_TAIL = (("score", T.IntegerType(), "int32"),
+         ("time_factor", T.DoubleType(), "float64"),
+         ("freq_factor", T.DoubleType(), "float64"),
+         ("coverage", T.DoubleType(), "float64"),
+         ("q_start", T.IntegerType(), "int32"),
+         ("q_stop", T.IntegerType(), "int32"))
 
 
-VERIFIED_SCHEMA = verified_schema()
+def verified_schema(keys: list[tuple[str, T.DataType]]) -> T.StructType:
+    """Verified rows: the (name, type) run key columns, then the result
+    tail both kernels emit."""
+    return T.StructType([T.StructField(name, typ) for name, typ in keys]
+                        + [T.StructField(name, typ)
+                           for name, typ, _ in _TAIL])
 
-_FIELDS = ("id_a", "id_b", "score", "time_factor", "freq_factor",
-           "coverage", "q_start", "q_stop")
-_TAIL_DTYPES = ("int32", "float64", "float64", "float64", "int32", "int32")
+
+def _result_tail(res) -> tuple:
+    return (res.score, res.time_factor, res.freq_factor, res.coverage,
+            res.q_start, res.q_stop)
 
 
 def _unpack_tf(tf: np.ndarray) -> tuple[np.ndarray, np.ndarray,
@@ -145,7 +149,8 @@ def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
     """Q5-Q13 kernel for the landmark channel: one run per canonical
     (id_a, id_b) pair, BOTH query orientations tried, best score kept."""
     id_dtype = "int64" if numeric_ids else "str"
-    dtypes = dict(zip(_FIELDS, (id_dtype, id_dtype) + _TAIL_DTYPES))
+    dtypes = {"id_a": id_dtype, "id_b": id_dtype,
+              **{name: d for name, _, d in _TAIL}}
 
     def verify_run(cols, lo, a_t, a_f, b_t, b_f):
         res = verify_pair(a_t, a_f, b_t, b_f, cfg)
@@ -154,9 +159,7 @@ def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
                    key=lambda r: r.score, default=None)
         if best is None:
             return None
-        return (cols["id_a"][lo], cols["id_b"][lo], best.score,
-                best.time_factor, best.freq_factor, best.coverage,
-                best.q_start, best.q_stop)
+        return (cols["id_a"][lo], cols["id_b"][lo]) + _result_tail(best)
 
     def verify_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _frame(_verify_runs(it, ("id_a", "id_b"),
@@ -166,65 +169,85 @@ def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
     return verify_batches
 
 
-TILE_VERIFIED_SCHEMA = T.StructType([
-    T.StructField("id_q", T.LongType()),
-    T.StructField("id_r", T.LongType()),
-    T.StructField("tile_id", T.IntegerType()),
-    T.StructField("score", T.IntegerType()),
-])
-
-_TILE_DTYPES = {"id_q": "int64", "id_r": "int64", "tile_id": "int32",
-                "score": "int32"}
+_DIRECTED_KEYS = ("id_q", "id_r", "tile_id")
+# ids are int64 (tile channel) or strings (monitor); an empty object
+# column converts to either Arrow type
+_DIRECTED_DTYPES = {"id_q": "object", "id_r": "object", "tile_id": "int32",
+                    **{name: d for name, _, d in _TAIL}}
 
 
-def make_tile_verify_batches(cfg: PanakoConfig):
-    """Q5-Q13 kernel for the crop-rescue channel: one verify per
-    (query image, stored image, tile) run, SINGLE orientation (the tile
-    prints are the query side, exactly like GoldenMatcher.query_prints).
-    Same batch/carry loop as make_verify_batches."""
-    import dataclasses
-
-    # Q13 coverage relaxed to tile_min_coverage for TILE matches only
-    # (config.py carries the swept rationale); every other gate stays
-    # at full strength. GoldenMatcher.tile_rescue_pairs mirrors this.
-    vcfg = dataclasses.replace(cfg, min_coverage=cfg.tile_min_coverage)
+def make_directed_verify_batches(cfg: PanakoConfig):
+    """Q5-Q13 kernel for directed queries: one verify per (query image,
+    stored image, tile) run, SINGLE orientation (query side first,
+    exactly like GoldenMatcher.query_prints). Same batch/carry loop as
+    make_verify_batches."""
 
     def verify_run(cols, lo, q_t, q_f, r_t, r_f):
-        res = verify_pair(q_t, q_f, r_t, r_f, vcfg)
+        res = verify_pair(q_t, q_f, r_t, r_f, cfg)
         if res is None:
             return None
-        return (cols["id_q"][lo], cols["id_r"][lo], cols["tile_id"][lo],
-                res.score)
+        return (cols["id_q"][lo], cols["id_r"][lo],
+                cols["tile_id"][lo]) + _result_tail(res)
 
-    def tile_verify_batches(it: Iterator[pd.DataFrame]
-                            ) -> Iterator[pd.DataFrame]:
-        yield _frame(_verify_runs(it, ("id_q", "id_r", "tile_id"),
+    def directed_verify_batches(it: Iterator[pd.DataFrame]
+                                ) -> Iterator[pd.DataFrame]:
+        yield _frame(_verify_runs(it, _DIRECTED_KEYS,
                                   cfg.min_unfiltered_hits, verify_run),
-                     _TILE_DTYPES)
+                     _DIRECTED_DTYPES)
 
-    return tile_verify_batches
+    return directed_verify_batches
+
+
+def _gated_runs(hits: DataFrame, pair: tuple[str, str],
+                runs: tuple[str, ...], min_hits: int) -> DataFrame:
+    """ONE byte-sized hash exchange on the pair key (a run's extra keys
+    ride inside its pair's partition), the Q5 min-hits gate JVM-side as
+    a window count over the exchange's own sort (noise pairs with < 10
+    hits are ~95% of the hit relation on the bench corpus — gating them
+    before the Python boundary cuts the Arrow transfer ~20x), then runs
+    made contiguous for the kernel."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*runs)
+    return (hits.repartition(*pair)
+            .withColumn("_n", F.count("*").over(w))
+            .where(F.col("_n") >= min_hits)
+            .drop("_n")
+            # the kernel REQUIRES contiguous runs; today the WindowExec's
+            # required child ordering provides that, but the contract
+            # must not depend on how the Window happens to plan. This
+            # sort is elided by Catalyst when the child ordering already
+            # satisfies it (asserted in test_plans).
+            .sortWithinPartitions(*runs))
+
+
+def run_directed_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
+    """Directed hits(id_q, id_r, tile_id, tf) -> verified
+    (id_q, id_r, tile_id, score, time_factor, freq_factor, coverage,
+    q_start, q_stop) at exactly the gates of `cfg`; tf is the packed
+    coordinate int64 (candidates._pack_half). The key types (int64
+    iids or string image_ids) are the hits' own.
+
+    The query path of the tile channel (run_tile_verify) and of the
+    streaming monitor (monitor.probe_batch): one verify per run in the
+    query -> store orientation only, like one reference monitor window
+    (PanakoStrategy.java:498-510). Same plan shape as run_verify."""
+    gated = _gated_runs(hits, ("id_q", "id_r"), _DIRECTED_KEYS,
+                        cfg.min_unfiltered_hits)
+    schema = verified_schema([(k, hits.schema[k].dataType)
+                              for k in _DIRECTED_KEYS])
+    return gated.mapInPandas(make_directed_verify_batches(cfg), schema)
 
 
 def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
-    """tile hits(id_q, id_r, tile_id, tf) -> directed
-    (id_q, id_r, tile_id, score); tf is the packed coordinate int64
-    (candidates._pack_half).
-
-    Same plan shape as run_verify: ONE byte-sized hash exchange on the
-    directed pair key (tile_id rides inside the pair's partition), the
-    Q5 min-hits gate JVM-side over the exchange's own sort, then the
-    NumPy kernel per contiguous (pair, tile) run. The caller gates on
+    """tile hits(id_q, id_r, tile_id, tf) -> directed verified rows
+    (run_directed_verify) with the Q13 coverage gate relaxed to
+    tile_min_coverage (config.py carries the swept rationale); every
+    other gate stays at full strength. GoldenMatcher.tile_rescue_pairs
+    verifies at the identical config. The caller gates on
     score >= cfg.tile_min_score and canonicalizes pair order."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_q", "id_r", "tile_id")
-    gated = (hits.repartition("id_q", "id_r")
-             .withColumn("_n", F.count("*").over(w))
-             .where(F.col("_n") >= cfg.min_unfiltered_hits)
-             .drop("_n")
-             .sortWithinPartitions("id_q", "id_r", "tile_id"))
-    return gated.mapInPandas(make_tile_verify_batches(cfg),
-                             TILE_VERIFIED_SCHEMA)
+    return run_directed_verify(
+        hits, cfg.with_(min_coverage=cfg.tile_min_coverage))
 
 
 def run_verify(hits: DataFrame, cfg: PanakoConfig,
@@ -233,27 +256,14 @@ def run_verify(hits: DataFrame, cfg: PanakoConfig,
     packed coordinate int64 (candidates._pack_half).
 
     One hash exchange on the pair key, sized by AQE from its bytes (see
-    the module docstring); the Q5 gate runs JVM-side as a window count
-    over the exchange's own sort (noise pairs with < 10 hits are ~95%
-    of the hit relation on the bench corpus — gating them before the
-    Python boundary cuts the Arrow transfer ~20x), then the
+    the module docstring) and gated at Q5 (_gated_runs), then the
     Q6-Q13 alignment kernel does one NumPy pass per coalesced partition
     over flat columns. With numeric_ids the id columns are int64 (see
     landmark_hits) — shuffle, sort, and Arrow all on fixed-width keys.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a", "id_b")
-    gated = (hits.repartition("id_a", "id_b")
-             .withColumn("_n", F.count("*").over(w))
-             .where(F.col("_n") >= cfg.min_unfiltered_hits)  # Q5, JVM-side
-             .drop("_n")
-             # the kernel REQUIRES contiguous (id_a, id_b) runs; today the
-             # WindowExec's required child ordering provides that, but the
-             # contract must not depend on how the Window happens to plan.
-             # This sort is elided by Catalyst when the child ordering
-             # already satisfies it (asserted in test_plans).
-             .sortWithinPartitions("id_a", "id_b"))
-    schema = verified_schema(T.LongType() if numeric_ids else T.StringType())
+    gated = _gated_runs(hits, ("id_a", "id_b"), ("id_a", "id_b"),
+                        cfg.min_unfiltered_hits)
+    id_type = T.LongType() if numeric_ids else T.StringType()
+    schema = verified_schema([("id_a", id_type), ("id_b", id_type)])
     return gated.mapInPandas(
         make_verify_batches(cfg, numeric_ids=numeric_ids), schema)

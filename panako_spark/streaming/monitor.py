@@ -6,10 +6,12 @@ Streaming.
 Reference semantics: each incoming window is an INDEPENDENT query against
 the store — no watermarks, no cross-window state (SURVEY.md §2.5). That
 maps exactly to `readStream` + `foreachBatch`: every micro-batch runs the
-batch extract -> near-hash probe -> verify flow against the static prints
-checkpoint, appending matches to a sink. Streaming checkpointing gives
-exactly-once per micro-batch, the streaming analog of the batch pipeline's
-stage manifests.
+batch extract -> near-hash probe -> directed verify flow against the
+static prints checkpoint, appending matches to a sink. The probe join and
+the verify kernel are the batch pipeline's own (probe_batch). The monitor
+applies no stop-word cap, so its matches equal GoldenMatcher.query_prints
+at hash_max_images=0. Streaming checkpointing gives exactly-once per
+micro-batch, the streaming analog of the batch pipeline's stage manifests.
 
 At cluster scale the stored prints side stays partitioned by hash on disk;
 each micro-batch's probe side is small, so AQE broadcasts it — the stored
@@ -23,8 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
 
 from panako_spark.config import PanakoConfig
+from panako_spark.stages.candidates import _probe_hits
 from panako_spark.stages.extract import run_extract, split_prints
-from panako_spark.stages.verify import run_verify
+from panako_spark.stages.verify import run_directed_verify
 
 IMAGE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -39,36 +42,27 @@ IMAGE_SCHEMA = T.StructType([
 
 def probe_batch(batch_images: DataFrame, stored_prints: DataFrame,
                 cfg: PanakoConfig) -> DataFrame:
-    """One monitor query: extract the batch, ±range-probe the store,
-    verify. Returns matches (query_id, ref_id, score, factors...).
+    """One monitor query: extract the batch, ±query_range-probe the
+    store, verify. Returns matches (query_id, ref_id, score, factors...).
 
-    Direction is fixed (query -> store), like the reference's monitor;
-    `avoid` (Q2) is the self-id filter.
+    Each incoming image is one directed query (query -> store only,
+    like the reference's monitor windows and GoldenMatcher.query_prints
+    with avoid={self}): hits come from the probe join the landmark and
+    tile channels share (candidates._probe_hits, with the whole image as
+    tile 0, so one image is one verify run), and are verified by the
+    tile channel's directed kernel (verify.run_directed_verify) at the
+    full gates of `cfg`. The id inequality is the avoid set (Q2); the
+    factors describe the query -> store alignment.
     """
-    from panako_spark.stages.candidates import (
-        _HALF, _check_packable, _pack_half,
-    )
-
-    _check_packable(cfg)
     q_prints = split_prints(run_extract(batch_images, cfg))
-    r = cfg.query_range
-    probe = q_prints.select(
-        F.col("image_id").alias("id_a"),
-        _pack_half("t1", "f1").alias("_a32"),
-        F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
-        .alias("probe_hash"))
-    ref = stored_prints.select(
-        F.col("image_id").alias("id_b"),
-        F.col("hash").alias("probe_hash"),
-        _pack_half("t1", "f1").alias("_b32"))
-    hits = (probe.join(ref, "probe_hash")
-            .where(F.col("id_a") != F.col("id_b"))  # avoid-set (Q2)
-            .select("id_a", "id_b",
-                    (F.col("_a32") * F.lit(_HALF) + F.col("_b32"))
-                    .alias("tf")))
-    verified = run_verify(hits, cfg)
-    return verified.select(
-        F.col("id_a").alias("query_id"), F.col("id_b").alias("ref_id"),
+    hits = _probe_hits(
+        q_prints.select(F.col("image_id").alias("id_q"),
+                        F.lit(0).alias("tile_id"), "hash", "t1", "f1"),
+        stored_prints.select(F.col("image_id").alias("id_r"),
+                             "hash", "t1", "f1"),
+        cfg.query_range, F.col("id_q") != F.col("id_r"))
+    return run_directed_verify(hits, cfg).select(
+        F.col("id_q").alias("query_id"), F.col("id_r").alias("ref_id"),
         "score", "time_factor", "freq_factor", "coverage")
 
 

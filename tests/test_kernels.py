@@ -335,11 +335,13 @@ def test_verify_kernel_run_carry(cfg):
     """Both mapInPandas verify kernels must produce identical verified
     rows when a run straddles Arrow batch boundaries (per-batch carry,
     bounded memory): the landmark kernel on (id_a, id_b) runs and the
-    tile kernel on (id_q, id_r, tile_id) runs."""
+    directed kernel on (id_q, id_r, tile_id) runs, on int64 iids (tile
+    channel) and on string image_ids (streaming monitor). The directed
+    kernel emits the landmark kernel's result tail after its run keys."""
     import pandas as pd
 
     from panako_spark.stages.verify import (
-        make_tile_verify_batches, make_verify_batches,
+        make_directed_verify_batches, make_verify_batches,
     )
 
     def pack(a_t, a_f, b_t, b_f):  # candidates._pack_half layout
@@ -353,18 +355,26 @@ def test_verify_kernel_run_carry(cfg):
             # two tiles of one directed pair: runs split on tile_id alone
             for tile in (0, 1):
                 tile_rows.append((ia, ib, tile, tf))
+    directed_cols = ["id_q", "id_r", "tile_id", "tf"]
+    str_rows = [(f"q{a}", f"r{b}", tile, tf)
+                for a, b, tile, tf in sorted(tile_rows)]
     cases = [
         (lambda: make_verify_batches(cfg, numeric_ids=True),
          pd.DataFrame(lm_rows, columns=["id_a", "id_b", "tf"]),
          ["id_a", "id_b"], 3),
-        (lambda: make_tile_verify_batches(cfg),
-         pd.DataFrame(sorted(tile_rows),
-                      columns=["id_q", "id_r", "tile_id", "tf"]),
+        (lambda: make_directed_verify_batches(cfg),
+         pd.DataFrame(sorted(tile_rows), columns=directed_cols),
+         ["id_q", "id_r", "tile_id"], 6),
+        (lambda: make_directed_verify_batches(cfg),
+         pd.DataFrame(str_rows, columns=directed_cols),
          ["id_q", "id_r", "tile_id"], 6),
     ]
+    tails = []
     for make, df, key, n_runs in cases:
         whole = pd.concat(list(make()(iter([df])))).reset_index(drop=True)
         assert len(whole) == n_runs  # perfectly aligned runs all verify
+        assert list(whole.columns[:len(key)]) == key
+        tails.append(list(whole.columns[len(key):]))
         for size in (1, 4, 7, 16):
             parts = [df.iloc[i:i + size] for i in range(0, len(df), size)]
             split = pd.concat(list(make()(iter(parts)))
@@ -373,6 +383,9 @@ def test_verify_kernel_run_carry(cfg):
                 whole.sort_values(key).reset_index(drop=True),
                 split.sort_values(key).reset_index(drop=True),
                 check_dtype=False)
+    assert tails[0] == tails[1] == tails[2] == [
+        "score", "time_factor", "freq_factor", "coverage", "q_start",
+        "q_stop"]
 
 
 def test_rolling_hashes_batch_matches_scalar():
@@ -428,6 +441,10 @@ def test_config_overrides_round_trip():
     assert config_with_overrides(None) == PanakoConfig()
     with pytest.raises(ValueError, match="unknown config key"):
         config_with_overrides(["not_a_key=1"])
+    # deleted options are refused, not silently accepted
+    for gone in ("tile_rescue=false", "tile_query_range=2"):
+        with pytest.raises(ValueError, match="unknown config key"):
+            config_with_overrides([gone])
     with pytest.raises(ValueError, match="boolean"):
         config_with_overrides(["fallback_to_hist=maybe"])
     with pytest.raises(ValueError, match="KEY=value"):

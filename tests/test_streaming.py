@@ -206,3 +206,35 @@ def test_parse_wire_accepts_crlf_lines(spark):
     assert got["crlf"]["caption"] == "cap two"
     assert bytes(got["crlf"]["bytes"]) == b"\x02"
     assert (got["crlf"]["w"], got["crlf"]["h"]) == (1, 1)
+
+
+def test_probe_batch_matches_golden_queries(spark, cfg):
+    """The monitor is query -> store only: probe_batch's matches equal
+    GoldenMatcher.query_prints(avoid={self}) for every query, score and
+    factors included. The corpus (seed 4) holds two pairs that verify
+    only with the stored image as the query side, so a kernel that
+    tries both orientations reports matches the golden query rejects."""
+    from panako_spark.kernels.codec import to_gray
+    from panako_spark.kernels.landmarks import extract_prints_flagged
+    from panako_spark.kernels.matcher import GoldenMatcher
+    from panako_spark.streaming.monitor import probe_batch
+
+    qcfg = cfg.with_(hash_max_images=0)  # the monitor has no stop-words
+    rows, _ = generate_corpus(4, dup_fraction=0.5, seed=4)
+    gm = GoldenMatcher(qcfg)
+    prints = {}
+    for r in rows:
+        prints[r.image_id] = extract_prints_flagged(to_gray(r.pixels),
+                                                    qcfg)[:3]
+        gm.store_prints(r.image_id, *prints[r.image_id])
+    want = {(qid, rid, m.score, m.time_factor, m.freq_factor)
+            for qid, p in prints.items()
+            for rid, m in gm.query_prints(*p, avoid={qid}).items()}
+    assert want
+
+    images = spark.createDataFrame(rows_to_pandas(rows))
+    stored = split_prints(run_extract(images, qcfg))
+    got = {(r["query_id"], r["ref_id"], r["score"], r["time_factor"],
+            r["freq_factor"])
+           for r in probe_batch(images, stored, qcfg).collect()}
+    assert got == want
