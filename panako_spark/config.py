@@ -259,9 +259,6 @@ class PanakoConfig:
     # ---- connected components -------------------------------------------------
     cc_max_iterations: int = 20
 
-    # ---- execution ------------------------------------------------------------
-    arrow_batch_rows: int = 256
-
     def __post_init__(self):
         if self.strategy not in ("panako", "olaf"):
             raise ValueError(

@@ -29,6 +29,15 @@ Spark-facing call and falls back to parquet; `backend="iceberg"` raises
 if the catalog is absent (never a silent downgrade);
 `backend="parquet"` forces the fallback.
 
+The store is the only module that knows which backend is live: every
+table operation goes through it — `write` (overwrite), `append`,
+`delete_ids` (row-level delete), `drop`, `read` — and so does the
+extraction-fingerprint check (`check_config_fp`) that pipeline resume,
+incremental store and the streaming monitors run before they read or
+extend prints/signatures. Callers (operators/store_ops,
+streaming/monitor, pipeline) never branch on the backend or stamp a
+manifest themselves.
+
 A stage is "done" iff its manifest says complete — a killed run leaves no
 manifest, so the next run recomputes that stage only. Lineage rows
 (stage, partition_id, input_count, signature_count, band_count,
@@ -41,9 +50,11 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 LINEAGE_COLUMNS = ["stage", "partition_id", "input_count",
@@ -236,15 +247,14 @@ class CheckpointStore:
 
     def write(self, df: DataFrame, table: str,
               partition_by: list[str] | None = None,
-              count_rows: bool = False,
-              config_fp: str | None = None) -> int:
+              config_fp: str | None = None, rows: int = -1) -> int:
         """Overwrite-write a stage output and mark it complete.
 
-        Row counting re-scans the output (one extra job per stage —
-        driver-serial cost that caps scaling efficiency), so it is off by
-        default; the manifest records -1 unless count_rows is set.
-        config_fp stamps the extractor-config fingerprint for tables
-        whose row format depends on it (prints/signatures).
+        The manifest records `rows` as the caller knows it (-1 =
+        unknown): re-scanning the output to count it would cost one
+        extra driver-serial job per stage. config_fp stamps the
+        extractor-config fingerprint for tables whose row format depends
+        on it (prints/signatures).
         """
         if self._iceberg(df.sparkSession):
             self.iceberg.create_or_replace(df, self.qualified_name(table),
@@ -254,11 +264,58 @@ class CheckpointStore:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(self.path(table))
-        rows = -1
-        if count_rows:
-            rows = self.read(df.sparkSession, table).count()
         self._mark_complete(table, rows, config_fp=config_fp)
         return rows
+
+    def append(self, df: DataFrame, table: str, rows: int,
+               config_fp: str | None = None) -> int:
+        """Append to a complete table (one atomic Iceberg commit, or a
+        parquet append) and restamp its manifest: the row count
+        accumulates `rows`, and an unknown count (-1) on either side
+        stays unknown. Returns the new count."""
+        if self._iceberg(df.sparkSession):
+            self.iceberg.append(df, self.qualified_name(table))
+        else:
+            df.write.mode("append").parquet(self.path(table))
+        prev = self.manifest(table).get("rows", -1)
+        total = prev + rows if prev >= 0 and rows >= 0 else -1
+        self._mark_complete(table, total, config_fp=config_fp)
+        return total
+
+    def delete_ids(self, spark: SparkSession, table: str,
+                   ids_df: DataFrame) -> None:
+        """Remove every row whose image_id is in `ids_df` (one column,
+        image_id). Iceberg: one row-level DELETE commit. Parquet: an
+        anti-join rewrite into a sibling directory, then a swap; the
+        manifest is invalidated before the old copy is removed and
+        restamped (rows unknown, same fingerprint) only after the swap,
+        so a kill mid-swap leaves an incomplete table, never a
+        "complete" manifest over a missing directory."""
+        fp = self.manifest(table).get("config_fp")
+        if self._iceberg(spark):
+            ids_df.createOrReplaceTempView("_panako_delete_ids")
+            self.iceberg.delete_ids(spark, self.qualified_name(table),
+                                    "_panako_delete_ids")
+        else:
+            tmp = self.path(f"{table}__rewrite")
+            (self.read(spark, table)
+             .join(F.broadcast(ids_df), "image_id", "left_anti")
+             .write.mode("overwrite").parquet(tmp))
+            self.invalidate(table)
+            shutil.rmtree(self.path(table))
+            shutil.move(tmp, self.path(table))
+        self._mark_complete(table, -1, config_fp=fp)
+
+    def drop(self, table: str, spark: SparkSession | None = None) -> None:
+        """Drop a table and its manifest (manifest first, so a kill
+        mid-drop leaves an incomplete table). Pass `spark` when the
+        store may be Iceberg-backed (DROP TABLE needs a session); the
+        parquet fallback is pure filesystem."""
+        self.invalidate(table)
+        if spark is not None and self._iceberg(spark):
+            self.iceberg.drop_table(spark, self.qualified_name(table))
+        else:
+            shutil.rmtree(self.path(table), ignore_errors=True)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         if self._iceberg(spark):
@@ -267,15 +324,13 @@ class CheckpointStore:
         return spark.read.parquet(self.path(table))
 
     def read_or_compute(self, spark: SparkSession, table: str,
-                        compute, partition_by: list[str] | None = None
-                        ) -> DataFrame:
+                        compute) -> DataFrame:
         """The resume primitive: reuse a complete checkpoint, else compute,
         write, and re-read (so downstream stages scan parquet, not the
         whole upstream lineage)."""
         if self.is_complete(table):
             return self.read(spark, table)
-        df = compute()
-        self.write(df, table, partition_by)
+        self.write(compute(), table)
         return self.read(spark, table)
 
     # ---- lineage -----------------------------------------------------------

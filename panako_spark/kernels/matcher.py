@@ -15,9 +15,7 @@ import numpy as np
 
 from panako_spark.config import PanakoConfig
 from panako_spark.kernels.landmarks import extract_prints
-from panako_spark.kernels.minhash import (
-    hash_shingles, jaccard, token_shingles,
-)
+from panako_spark.kernels.minhash import hash_shingles, token_shingles
 from panako_spark.kernels.simhash import hamming, simhash
 from panako_spark.kernels.suffix import substring_pairs_golden
 from panako_spark.kernels.verify import MatchResult, verify_pair
@@ -190,8 +188,6 @@ def caption_pairs_golden(captions: dict[str, str], cfg: PanakoConfig):
     deterministic, so both sides compute identical values); simhash =
     >=1 shared bit-band AND Hamming <= threshold; exact = identical
     caption; substring = containment over the winnowing-detectable length.
-    `true_jaccard_pairs` below gives the statistical ground truth used in
-    quality (not parity) tests.
     """
     from panako_spark.kernels.minhash import (
         band_keys, minhash_signature, signature_jaccard,
@@ -247,21 +243,6 @@ def phash_pairs_golden(phashes: dict[str, int], cfg: PanakoConfig
             if (bset[ia] & bset[ib]) and (
                     hamming(phashes[ia], phashes[ib])
                     <= cfg.phash_hamming_threshold):
-                out.add((ia, ib))
-    return out
-
-
-def true_jaccard_pairs(captions: dict[str, str], cfg: PanakoConfig
-                       ) -> set[tuple[str, str]]:
-    """Exact shingle-set Jaccard >= threshold (statistical ground truth)."""
-    ids = sorted(captions)
-    sh = {i: hash_shingles(token_shingles(captions[i], cfg.minhash_shingle))
-          for i in ids}
-    out = set()
-    for a in range(len(ids)):
-        for b in range(a + 1, len(ids)):
-            ia, ib = ids[a], ids[b]
-            if jaccard(sh[ia], sh[ib]) >= cfg.minhash_jaccard_threshold:
                 out.add((ia, ib))
     return out
 

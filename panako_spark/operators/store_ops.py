@@ -1,11 +1,17 @@
 """Store-maintenance operators: the reference's KV-store surface mapped
 to checkpoint tables.
 
+Like the reference's operators over PanakoStorageKV, these never touch
+storage directly: every write, append, delete and drop goes through
+io.checkpoint.CheckpointStore, which alone picks the backend (Iceberg or
+parquet), stamps manifests and checks the extraction fingerprint.
+
   S7 delete  — exact-row delete via cursor (PanakoStorageKV.java:231-277;
                note the reference reads storeQueue there, a known bug we
-               do NOT reproduce) -> anti-join rewrite, the parquet
-               fallback's analog of Iceberg DELETE WHERE
+               do NOT reproduce) -> CheckpointStore.delete_ids per table
+               (Iceberg DELETE WHERE, or the parquet anti-join rewrite)
   S8 clear   — drop whole DB dir (PanakoStorageKV.java:490-506)
+               -> CheckpointStore.drop per table
   Q19        — hasResource skip: don't re-extract already-stored ids
                (Store.java:119-127) -> left-anti join + append, the
                idempotent incremental-store path
@@ -15,8 +21,6 @@ to checkpoint tables.
 """
 
 from __future__ import annotations
-
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,33 +32,13 @@ from panako_spark.stages.extract import run_extract, split_prints, \
 
 
 def delete_resources(spark: SparkSession, store: CheckpointStore,
-                     image_ids: list[str]) -> dict:
-    """S7: remove all prints/signatures of the given ids (anti-join
-    rewrite of both tables; manifests updated atomically after)."""
+                     image_ids: list[str]) -> None:
+    """S7: remove all prints/signatures of the given ids from whichever
+    of the two tables has a complete checkpoint."""
     ids_df = spark.createDataFrame([(i,) for i in image_ids], ["image_id"])
-    out = {}
     for table in ("prints", "signatures"):
-        if not store.is_complete(table):
-            continue
-        if store._iceberg(spark):
-            # real row-level delete: one Iceberg DELETE commit per table
-            ids_df.createOrReplaceTempView("_panako_delete_ids")
-            store.iceberg.delete_ids(spark, store.qualified_name(table),
-                                     "_panako_delete_ids")
-            out[table] = -1
-            continue
-        df = store.read(spark, table)
-        kept = df.join(F.broadcast(ids_df), "image_id", "left_anti")
-        # write to a sibling then swap: never destroy the only copy mid-job
-        tmp = f"{table}__rewrite"
-        rows = store.write(kept, tmp)
-        shutil.rmtree(store.path(table))
-        shutil.move(store.path(tmp), store.path(table))
-        store.invalidate(tmp)
-        store._mark_complete(table, rows,
-                             config_fp=store.manifest(table).get("config_fp"))
-        out[table] = rows
-    return out
+        if store.is_complete(table):
+            store.delete_ids(spark, table, ids_df)
 
 
 def clear(store: CheckpointStore, tables: list[str] | None = None,
@@ -65,11 +49,7 @@ def clear(store: CheckpointStore, tables: list[str] | None = None,
     names = tables or ["extracted", "prints", "signatures", "verified",
                        "fused_pairs", "tile_pairs", "dup_pairs", "clusters"]
     for t in names:
-        if spark is not None and store._iceberg(spark):
-            store.iceberg.drop_table(spark, store.qualified_name(t))
-        else:
-            shutil.rmtree(store.path(t), ignore_errors=True)
-        store.invalidate(t)
+        store.drop(t, spark=spark)
 
 
 def store_incremental(spark: SparkSession, images: DataFrame,
@@ -115,29 +95,14 @@ def store_incremental(spark: SparkSession, images: DataFrame,
         n_new, n_new_prints = int(m["n"]), int(m["np"])
         if n_new == 0:
             return {"new_images": 0}
-        pairs = ((new_prints, "prints"), (new_sigs, "signatures"))
-        if store._iceberg(spark):
-            for df_, t in pairs:
-                name = store.qualified_name(t)
-                if have_sig:
-                    store.iceberg.append(df_, name)  # atomic Iceberg commit
-                else:
-                    store.iceberg.create_or_replace(df_, name)
-        else:
-            mode = "append" if have_sig else "overwrite"
-            for df_, t in pairs:
-                df_.write.mode(mode).parquet(store.path(t))
-        # manifest rows accumulate from the job's own metrics
-        prev_sig = store.manifest("signatures").get("rows", -1) or -1
-        prev_pr = store.manifest("prints").get("rows", -1) or -1
-        def _acc(prev: int, add: int) -> int:
-            if not have_sig:
-                return add
-            return prev + add if prev >= 0 else -1  # unknown stays unknown
-        sig_rows = _acc(prev_sig, n_new)
-        pr_rows = _acc(prev_pr, n_new_prints)
-        store._mark_complete("signatures", sig_rows, config_fp=fp)
-        store._mark_complete("prints", pr_rows, config_fp=fp)
+        # prints first: signatures is the hasResource index, so it only
+        # grows once the prints it stands for are stored
+        for df_, t, n in ((new_prints, "prints", n_new_prints),
+                          (new_sigs, "signatures", n_new)):
+            if have_sig:
+                store.append(df_, t, n, config_fp=fp)
+            else:
+                store.write(df_, t, config_fp=fp, rows=n)
     finally:
         extracted.unpersist()
     return {"new_images": n_new}

@@ -36,6 +36,11 @@ from panako_spark.stages.extract import (
 )
 from panako_spark.stages.verify import run_tile_verify, run_verify
 
+# Arrow batch rows per stage: image rows are ~200 KB, so extract wants
+# small batches, while the flat-int stages after it want big ones
+EXTRACT_ARROW_ROWS = 256
+FLAT_ARROW_ROWS = 8192
+
 
 @dataclass
 class PipelineResult:
@@ -166,13 +171,11 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             return out
 
         def arrow_batch(rows: int) -> None:
-            # runtime-settable; image rows are ~200 KB so extract wants
-            # small batches, while flat-int stages want big ones
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                            str(rows))
 
         # ---- extract (one decode pass) -------------------------------------
-        arrow_batch(cfg.arrow_batch_rows)
+        arrow_batch(EXTRACT_ARROW_ROWS)
         prints, signatures, extracted = timed(
             "extract", lambda: materialize_extract(
                 spark, images, store, cfg, stats,
@@ -190,7 +193,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         stats["n_distinct_ids"] = n_ids
 
         # ---- landmark verify ∥ fused signature channels ---------------------
-        arrow_batch(8192)
+        arrow_batch(FLAT_ARROW_ROWS)
 
         # (iid, rescued, phash) is a tiny per-image relation joined
         # onto verify outputs so rescued pairs face the stricter

@@ -7,11 +7,19 @@ Reference semantics: each incoming window is an INDEPENDENT query against
 the store — no watermarks, no cross-window state (SURVEY.md §2.5). That
 maps exactly to `readStream` + `foreachBatch`: every micro-batch runs the
 batch extract -> near-hash probe -> directed verify flow against the
-static prints checkpoint, appending matches to a sink. The probe join and
-the verify kernel are the batch pipeline's own (probe_batch). The monitor
+stored prints, appending matches to a sink. The probe join and the
+verify kernel are the batch pipeline's own (probe_batch). The monitor
 applies no stop-word cap, so its matches equal GoldenMatcher.query_prints
 at hash_max_images=0. Streaming checkpointing gives exactly-once per
 micro-batch, the streaming analog of the batch pipeline's stage manifests.
+
+Every monitor takes the CheckpointStore, not a path: it refuses a store
+whose prints were extracted under another config
+(CheckpointStore.check_config_fp — the same check pipeline resume and
+incremental store run) before any stream starts, then reads the prints
+through the store, so an Iceberg-backed store works as well as parquet.
+The three sources (parquet file drop, rate ticks, socket lines) differ
+only in how a micro-batch becomes frames; the sink is one helper.
 
 At cluster scale the stored prints side stays partitioned by hash on disk;
 each micro-batch's probe side is small, so AQE broadcasts it — the stored
@@ -25,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
 
 from panako_spark.config import PanakoConfig
+from panako_spark.io.checkpoint import CheckpointStore
 from panako_spark.stages.candidates import _probe_hits
 from panako_spark.stages.extract import run_extract, split_prints
 from panako_spark.stages.verify import run_directed_verify
@@ -66,6 +75,31 @@ def probe_batch(batch_images: DataFrame, stored_prints: DataFrame,
         "score", "time_factor", "freq_factor", "coverage")
 
 
+def _start_sink(stream: DataFrame, store: CheckpointStore, output_dir: str,
+                checkpoint_dir: str, cfg: PanakoConfig | None,
+                to_frames=None, available_now: bool = False):
+    """What every monitor shares: refuse a store extracted under another
+    config, read its prints once, and on every micro-batch probe the
+    frames (`to_frames(batch)`, or the batch itself) against them,
+    appending matches with their batch_id to output_dir. Returns the
+    started StreamingQuery."""
+    cfg = cfg or PanakoConfig()
+    store.check_config_fp("prints", cfg.extraction_fingerprint())
+    stored = store.read(stream.sparkSession, "prints")
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        frames = to_frames(batch) if to_frames else batch
+        (probe_batch(frames, stored, cfg)
+         .withColumn("batch_id", F.lit(batch_id))
+         .write.mode("append").parquet(output_dir))
+
+    writer = (stream.writeStream.foreachBatch(handle)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def synth_frames(ticks: DataFrame, cycle: int, seed: int) -> DataFrame:
     """Deterministic frame synthesis from rate-source ticks.
 
@@ -93,7 +127,7 @@ def synth_frames(ticks: DataFrame, cycle: int, seed: int) -> DataFrame:
         f"{f.name} {f.dataType.simpleString()}" for f in IMAGE_SCHEMA))
 
 
-def start_live_monitor(spark: SparkSession, prints_path: str,
+def start_live_monitor(spark: SparkSession, store: CheckpointStore,
                        output_dir: str, checkpoint_dir: str,
                        cfg: PanakoConfig | None = None,
                        rows_per_batch: int = 4, cycle: int = 8,
@@ -111,25 +145,19 @@ def start_live_monitor(spark: SparkSession, prints_path: str,
     At cluster scale the synthesis step stands in for a receiver
     (Kafka/Kinesis frame topic): swap `synth_frames` for the decoder of
     the real feed and nothing downstream changes.
+
+    Matches are against `store`'s prints, after the store's
+    extraction-fingerprint check (ValueError before the stream starts
+    when `cfg` differs from the config the store was extracted under).
     """
-    cfg = cfg or PanakoConfig()
-    stored = spark.read.parquet(prints_path)
     ticks = (spark.readStream.format("rate-micro-batch")
              .option("rowsPerBatch", rows_per_batch)
              .option("numPartitions", 1)
              .option("startTimestamp", 0)
              .load()
              .select("value"))
-
-    def handle(batch_ticks: DataFrame, batch_id: int) -> None:
-        frames = synth_frames(batch_ticks, cycle, seed)
-        matches = probe_batch(frames, stored, cfg)
-        (matches.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
-
-    return (ticks.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .start())
+    return _start_sink(ticks, store, output_dir, checkpoint_dir, cfg,
+                       lambda batch: synth_frames(batch, cycle, seed))
 
 
 def frame_to_wire(image_id: str, byts: bytes, w: int, h: int, fmt: str,
@@ -186,7 +214,7 @@ def parse_wire(lines: DataFrame) -> DataFrame:
 
 
 def start_socket_monitor(spark: SparkSession, host: str, port: int,
-                         prints_path: str, output_dir: str,
+                         store: CheckpointStore, output_dir: str,
                          checkpoint_dir: str,
                          cfg: PanakoConfig | None = None):
     """S3 live-device monitor over a REAL network receiver: Structured
@@ -195,48 +223,29 @@ def start_socket_monitor(spark: SparkSession, host: str, port: int,
     ingests them unbounded — the stream exists only while the peer
     feeds it, exactly like the reference's microphone line
     (Monitor.java:61-66) — and every micro-batch runs the identical
-    probe-and-verify flow as the file/rate monitors.
+    probe-and-verify flow as the file/rate monitors, against `store`'s
+    prints after its extraction-fingerprint check.
 
     At cluster scale the same shape swaps the socket source for a
     Kafka/Kinesis topic of the same wire records (socket is
     single-receiver by design); parse_wire and everything downstream
     are source-agnostic."""
-    cfg = cfg or PanakoConfig()
-    stored = spark.read.parquet(prints_path)
     lines = (spark.readStream.format("socket")
              .option("host", host).option("port", port).load())
-    frames = parse_wire(lines)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        matches = probe_batch(batch_df, stored, cfg)
-        (matches.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
-
-    return (frames.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .start())
+    return _start_sink(parse_wire(lines), store, output_dir,
+                       checkpoint_dir, cfg)
 
 
-def start_monitor(spark: SparkSession, input_dir: str, prints_path: str,
-                  output_dir: str, checkpoint_dir: str,
-                  cfg: PanakoConfig | None = None,
+def start_monitor(spark: SparkSession, input_dir: str,
+                  store: CheckpointStore, output_dir: str,
+                  checkpoint_dir: str, cfg: PanakoConfig | None = None,
                   available_now: bool = True):
-    """Watch input_dir for image parquet files; emit matches vs the stored
-    prints table to output_dir. Returns the StreamingQuery."""
-    cfg = cfg or PanakoConfig()
-    stored = spark.read.parquet(prints_path)
-
+    """Watch input_dir for image parquet files; emit matches vs `store`'s
+    prints to output_dir. Raises ValueError before the stream starts if
+    the store was extracted under another config than `cfg`. Returns
+    the StreamingQuery."""
     stream = (spark.readStream.schema(IMAGE_SCHEMA)
               .option("maxFilesPerTrigger", 4)
               .parquet(input_dir))
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        matches = probe_batch(batch_df, stored, cfg)
-        (matches.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream, store, output_dir, checkpoint_dir, cfg,
+                       available_now=available_now)

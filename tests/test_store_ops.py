@@ -53,6 +53,26 @@ def test_delete_resources(spark, corpus, tmp_path, cfg):
     assert store.is_complete("prints")
 
 
+def test_delete_killed_mid_swap_leaves_table_incomplete(spark, corpus,
+                                                        tmp_path, cfg,
+                                                        monkeypatch):
+    """The parquet delete removes the old copy, then moves the rewrite
+    in. A kill between the two must leave an incomplete table (the next
+    run recomputes it), never a complete manifest over a directory that
+    no longer exists."""
+    import shutil
+
+    store, _ = _fresh_store(spark, corpus, tmp_path, cfg)
+
+    def killed(*_a, **_k):
+        raise OSError("killed mid-swap")
+
+    monkeypatch.setattr(shutil, "move", killed)
+    with pytest.raises(OSError, match="mid-swap"):
+        SO.delete_resources(spark, store, [corpus[0].image_id])
+    assert not store.is_complete("prints")
+
+
 def test_clear(spark, corpus, tmp_path, cfg):
     store, _ = _fresh_store(spark, corpus, tmp_path, cfg)
     SO.clear(store)

@@ -8,10 +8,19 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from panako_spark.config import PanakoConfig
 from panako_spark.data.synth import generate_corpus, rows_to_pandas
+from panako_spark.io.checkpoint import CheckpointStore
+from panako_spark.operators.store_ops import store_incremental
 from panako_spark.stages.extract import run_extract, split_prints
 from panako_spark.streaming.monitor import start_monitor
+
+
+def _stored(spark, rows, cfg, tmp_path) -> CheckpointStore:
+    """A store holding `rows`' prints and signatures under `cfg`."""
+    store = CheckpointStore(str(tmp_path / "store"))
+    store_incremental(spark, spark.createDataFrame(rows_to_pandas(rows)),
+                      store, cfg)
+    return store
 
 
 def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
@@ -21,9 +30,7 @@ def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
     assert base and dups
 
     # store phase: index the base images' prints
-    prints_path = str(tmp_path / "prints")
-    images = spark.createDataFrame(rows_to_pandas(base))
-    split_prints(run_extract(images, cfg)).write.parquet(prints_path)
+    store = _stored(spark, base, cfg, tmp_path)
 
     # stream phase: drop dup images into the watched dir as parquet files
     in_dir = tmp_path / "incoming"
@@ -34,7 +41,7 @@ def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
                        str(in_dir / f"f{i}.parquet"))
 
     out_dir = str(tmp_path / "matches")
-    q = start_monitor(spark, str(in_dir), prints_path, out_dir,
+    q = start_monitor(spark, str(in_dir), store, out_dir,
                       str(tmp_path / "stream_ckpt"), cfg,
                       available_now=True)
     if not q.awaitTermination(240):
@@ -63,12 +70,10 @@ def test_live_monitor_rate_source(spark, cfg, tmp_path):
 
     cycle, seed = 6, 777
     stored_rows = [rows_for_base_index(i, 0, seed)[0] for i in range(cycle)]
-    prints_path = str(tmp_path / "prints")
-    images = spark.createDataFrame(rows_to_pandas(stored_rows))
-    split_prints(run_extract(images, cfg)).write.parquet(prints_path)
+    store = _stored(spark, stored_rows, cfg, tmp_path)
 
     out_dir = str(tmp_path / "live_matches")
-    q = start_live_monitor(spark, prints_path, out_dir,
+    q = start_live_monitor(spark, store, out_dir,
                            str(tmp_path / "live_ckpt"), cfg,
                            rows_per_batch=cycle, cycle=cycle, seed=seed)
     import time as _t
@@ -113,9 +118,7 @@ def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
     dups = [r for r in rows if "_dup" in r.image_id]
     assert base and dups
 
-    prints_path = str(tmp_path / "prints")
-    images = spark.createDataFrame(rows_to_pandas(base))
-    split_prints(run_extract(images, cfg)).write.parquet(prints_path)
+    store = _stored(spark, base, cfg, tmp_path)
 
     wire = [frame_to_wire(d.image_id, d.bytes, d.w, d.h, d.fmt,
                           d.caption, d.phash) for d in dups]
@@ -142,7 +145,7 @@ def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
     t.start()
 
     out_dir = str(tmp_path / "sock_matches")
-    q = start_socket_monitor(spark, "127.0.0.1", port, prints_path,
+    q = start_socket_monitor(spark, "127.0.0.1", port, store,
                              out_dir, str(tmp_path / "sock_ckpt"), cfg)
     got = set()
     try:
@@ -173,6 +176,37 @@ def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
         f"socket monitor missed dups: {sorted(got)[:8]}")
     # the corrupt frame was quarantined, not matched and not fatal
     assert all(qid != "corrupt0" for qid, _ in got)
+
+
+def test_monitors_refuse_config_drift(spark, cfg, tmp_path):
+    """A store extracted under `cfg` is refused by every monitor started
+    under another extractor config (log_freq toggled: every landmark hash
+    moves, so no query could ever match), before any stream starts."""
+    from panako_spark.streaming.monitor import (
+        start_live_monitor, start_socket_monitor,
+    )
+
+    rows, _ = generate_corpus(2, dup_fraction=0.0, seed=5)
+    store = _stored(spark, rows, cfg, tmp_path)
+    drifted = cfg.with_(log_freq=not cfg.log_freq)
+    in_dir = tmp_path / "incoming"
+    in_dir.mkdir()
+    out_dir, ckpt = str(tmp_path / "matches"), str(tmp_path / "ckpt")
+    starts = {
+        "file": lambda: start_monitor(spark, str(in_dir), store, out_dir,
+                                      ckpt, drifted),
+        "live": lambda: start_live_monitor(spark, store, out_dir, ckpt,
+                                           drifted),
+        "socket": lambda: start_socket_monitor(spark, "127.0.0.1", 9,
+                                               store, out_dir, ckpt,
+                                               drifted),
+    }
+    active = len(spark.streams.active)
+    for name, start in starts.items():
+        with pytest.raises(ValueError, match="re-extract"):
+            start()
+        assert len(spark.streams.active) == active, name
+        assert not os.path.exists(ckpt), name
 
 
 def test_frame_to_wire_rejects_framing_chars():
