@@ -179,7 +179,7 @@ def main() -> None:
                          " reference's own store-throughput protocol)")
     ap.add_argument("--event-log", default=None, metavar="DIR",
                     help="write a Spark event log into DIR (per-stage "
-                         "task metrics for tools/stage_profile.py)")
+                         "task metrics; see BENCH/ATTRIBUTION.md)")
     ap.add_argument("--conf", action="append", default=[], metavar="K=V",
                     help="extra Spark conf (repeatable), e.g. "
                          "--conf spark.sql.adaptive."

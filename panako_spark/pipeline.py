@@ -6,11 +6,18 @@ store -> query -> dedup lifecycle (SURVEY.md §3):
       -> prints / signatures                          checkpoints
       -> three concurrent branches:
          landmark ±range self-join -> verify [mapInPandas Q5-Q13 kernel]
-                                                      checkpoint: verified
-         fused signature channels (MinHash/SimHash/phash bands, exact
-         caption, substring fingerprints)             checkpoint: fused_pairs
-         crop-rescue tile probes -> tile verify       checkpoint: tile_pairs
+           -> rescue gate                             checkpoint: verified
+         fused signature channels: one keyed pass (MinHash/SimHash/phash
+         bands, exact caption, substring fingerprints) -> salted
+         self-join gating the bit channels -> MinHash/substring gate
+                                                      checkpoint: fused_pairs
+         crop-rescue tile probes -> tile verify -> rescue gate
+                                                      checkpoint: tile_pairs
       -> connected components (large-star/small-star) checkpoint: clusters
+
+Each branch's pairs meet the per-image relation once per side: that one
+join (candidates.resolve_pairs) gates the pair and resolves its int64
+ids to string image_ids.
 
 Every stage goes through CheckpointStore.read_or_compute, so a killed run
 resumes at the first incomplete stage (reference analog: the fingerprint
@@ -126,17 +133,46 @@ def corpus_census(images: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["nd"])
 
 
+def rescue_gate(pairs: DataFrame, signatures: DataFrame, cfg: PanakoConfig,
+                ids: tuple[str, str] = ("id_a", "id_b")) -> DataFrame:
+    """Verified int64-id pairs -> gated pairs with canonical string ids.
+
+    Rescued pairs face the stricter composite gate
+    (config.rescue_min_score block — the print-rescue precision guard):
+    strong alignment alone, or decent alignment corroborated by the
+    independent phash signal. The (iid, image_id, rescued, phash)
+    per-image relation joins each pair side once, and that one join
+    both gates the pair and resolves its string ids
+    (candidates.resolve_pairs; golden sibling: GoldenMatcher._pair_ok).
+
+    No broadcast hint: the per-image relation is 10^12 rows at target
+    scale, while the verified relation it joins is post-gate and usually
+    far smaller — AQE picks broadcast at runtime when a side is actually
+    small, and an equi-join on the int64 id is the safe default either
+    way."""
+    ham = F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b")))
+    pair_rescued = (F.coalesce("rescued_a", F.lit(False))
+                    | F.coalesce("rescued_b", F.lit(False)))
+    keep = (~pair_rescued
+            | (F.col("score") >= cfg.rescue_strong_score)
+            | ((F.col("score") >= cfg.rescue_min_score)
+               & (ham <= cfg.rescue_phash_max)))
+    return C.resolve_pairs(
+        pairs, signatures.select("iid", "image_id", "rescued", "phash"),
+        keep, ids)
+
+
 def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                  cfg: PanakoConfig | None = None) -> PipelineResult:
     """Scaling-efficiency discipline (BASELINE.json: >=0.8 N->4N): the
     driver-serial term is minimized by (a) overlapping independent DAG
     branches — the corpus census rides alongside extract, and the
-    landmark verify branch runs CONCURRENTLY with the fused signature
-    channels from two submitter threads (Spark schedules both job DAGs;
+    landmark verify, fused signature and tile branches run CONCURRENTLY
+    from three submitter threads (Spark schedules all three job DAGs;
     barrier gaps and Python-worker phases of one branch are filled with
-    the other's tasks); (b) one consolidated lineage append at the end
+    the others' tasks); (b) one consolidated lineage append at the end
     instead of per-stage append jobs; (c) no dup_pairs re-write — the
-    union of the two checkpointed branch tables IS the pair set."""
+    union of the three checkpointed branch tables IS the pair set."""
     cfg = cfg or PanakoConfig()
     stats: dict = {}
     t_start = time.monotonic()
@@ -195,54 +231,18 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         # ---- landmark verify ∥ fused signature channels ---------------------
         arrow_batch(FLAT_ARROW_ROWS)
 
-        # (iid, rescued, phash) is a tiny per-image relation joined
-        # onto verify outputs so rescued pairs face the stricter
-        # composite gate (config.rescue_min_score block — the
-        # print-rescue precision guard): strong alignment alone, or
-        # decent alignment corroborated by the independent phash
-        # signal.
-        resc = signatures.select(F.col("iid").alias("_rid"),
-                                 F.col("rescued").alias("_resc"),
-                                 F.col("phash").alias("_ph"))
-
-        def rescue_gate(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
-            a = resc.select(F.col("_rid").alias(col_a),
-                            F.col("_resc").alias("_ra"),
-                            F.col("_ph").alias("_pa"))
-            b = resc.select(F.col("_rid").alias(col_b),
-                            F.col("_resc").alias("_rb"),
-                            F.col("_ph").alias("_pb"))
-            ham = F.bit_count(F.col("_pa").bitwiseXOR(F.col("_pb")))
-            pair_rescued = (F.coalesce("_ra", F.lit(False))
-                            | F.coalesce("_rb", F.lit(False)))
-            keep = (
-                ~pair_rescued
-                | (F.col("score") >= cfg.rescue_strong_score)
-                | ((F.col("score") >= cfg.rescue_min_score)
-                   & (ham <= cfg.rescue_phash_max)))
-            # no broadcast hint: the flag relation is per-image (10^12
-            # rows at target scale), while the verified relation it
-            # joins is post-gate and usually far smaller — AQE picks
-            # broadcast at runtime when a side is actually small, and an
-            # equi-join on the int64 id is the safe default either way
-            return (df.join(a, col_a, "left")
-                    .join(b, col_b, "left")
-                    .where(keep)
-                    .drop("_ra", "_rb", "_pa", "_pb"))
-
         def compute_verified() -> DataFrame:
             # Q5's min-hits gate runs inside the verify kernel (one
             # shuffle on the pair key); the widest shuffle of the
-            # pipeline runs on int64 ids, resolved back to strings after
-            # the stop-word cap is a function of DISTINCT stored images
+            # pipeline runs on int64 ids, resolved back to strings by
+            # the rescue gate's join. The stop-word cap is a function of
+            # DISTINCT stored images
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
             v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
                                            n_images=n_ids),
                            cfg, numeric_ids=True)
-            v = rescue_gate(v, "id_a", "id_b")
-            # the signatures table carries the persisted iid<->string map
-            return C.resolve_numeric_ids(v, signatures)
+            return rescue_gate(v, signatures, cfg)
 
         fused_stats_box: list = []
         fused_caches: list = []
@@ -273,12 +273,9 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                             "image_id"))
             tv = run_tile_verify(C.tile_hits(tp, prints, cfg,
                                              n_images=n_ids), cfg)
-            tv = rescue_gate(tv, "id_q", "id_r")
-            directed = (tv.where(F.col("score") >= cfg.tile_min_score)
-                        .select(F.least("id_q", "id_r").alias("id_a"),
-                                F.greatest("id_q", "id_r").alias("id_b"))
-                        .distinct())
-            return C.resolve_numeric_ids(directed, signatures)
+            return (rescue_gate(tv, signatures, cfg, ids=("id_q", "id_r"))
+                    .where(F.col("score") >= cfg.tile_min_score)
+                    .select("id_a", "id_b").distinct())
 
         fut_v = ex.submit(lambda: timed("verify", lambda: (
             store.read_or_compute(spark, "verified", compute_verified))))

@@ -52,7 +52,7 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         # joins (landmark/tile ±range probes) are the pipeline's biggest
         # shuffles and their sorts are pure overhead — the downstream
         # verify exchange re-partitions by pair id anyway. Measured on
-        # the pinned 2-vs-8-core protocol (tools/stage_profile.py,
+        # the pinned 2-vs-8-core protocol (BENCH/ATTRIBUTION.md,
         # 11.6k images): tile-join CPU at 8 busy cores 311->165 core-s,
         # total task-time inflation 1.58x->1.27x, local[8] wall -16%
         # with local[2] unchanged. Runtime-sized (AQE), so partitions
@@ -69,7 +69,7 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # GC: ship the JDK17 default (G1), decided by interleaved
-        # same-window A/B (tools/gc_ab_probe.py, BENCH/gc_ab_probe.jsonl).
+        # same-window A/B (BENCH/ATTRIBUTION.md, BENCH/gc_ab_probe.jsonl).
         # A ParallelGC switch briefly shipped on a +37%/+47% stage-profile
         # reading, but under round-robin A/B at <3% steal it LOST:
         # store/local[8] G1 424-481 img/s vs PGC 331-344 (task GC 6.5-7.6 s

@@ -10,8 +10,15 @@ Channels (SURVEY.md §7 step 5 / north_star):
               channels and the streaming monitor share one probe join
               (_probe_hits)
   signature — minhash / simhash / phash band keys and caption_exact /
-              caption_substring keys, fused into ONE channel-tagged
-              salted self-join (fused_candidate_pairs)
+              caption_substring keys from ONE keyed pass over
+              signatures, fused into ONE channel-tagged salted
+              self-join that runs the bit channels' Hamming gate as its
+              post-filter (fused_candidate_pairs)
+
+Every pair side meets the per-image relation exactly once
+(resolve_pairs): that one join applies the caller's gate (the fused
+MinHash/substring gates, the pipeline's rescue gate) and resolves the
+int64 ids to canonical string ids.
 
 Skew (north_rule "hot-band splitting"): `pairs_from_keys` counts members
 per key; keys above `band_pair_cap` are split into ceil(n/cap) salted
@@ -32,9 +39,10 @@ from panako_spark.config import PanakoConfig
 def pairs_from_keys_multi(keyed: DataFrame, cap: int,
                           group_col: str = "channel",
                           key_col: str = "key", id_col: str = "image_id",
-                          caches: list | None = None
+                          caches: list | None = None, keep=None
                           ) -> tuple[DataFrame, DataFrame]:
-    """(channel, key, id) -> distinct pairs (channel, id_a < id_b) + stats.
+    """(channel, key, id, *vals) -> distinct pairs (channel, id_a < id_b)
+    + stats.
 
     The fused pairing primitive: every LSH-style channel shares ONE
     explode -> groupBy -> salted self-join dataflow (channel rides in the
@@ -44,6 +52,11 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
     per channel: (channel, n_keys, n_hot_keys,
     dropped_cross_pairs_estimate) — dropped pairs are reported, never
     silent (north_rule hot-band splitting).
+
+    Every other keyed column v rides to both sides as v_a / v_b, and
+    `keep` (a predicate over them, like _probe_hits' `keep`) is ANDed
+    with id_a < id_b before the distinct: a gate that needs only
+    per-row values runs inside the self-join, with no verify join.
 
     Cached intermediates are appended to `caches` (if given) so the
     caller can unpersist them once the returned frames are consumed —
@@ -62,12 +75,16 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
         "_salt",
         F.when(F.col("_n") > cap,
                F.pmod(F.xxhash64(F.col(id_col)), n_salt)).otherwise(F.lit(0)))
-    a = salted.select(group_col, F.col(key_col).alias("_k"), F.col("_salt"),
-                      F.col(id_col).alias("id_a"))
-    b = salted.select(group_col, F.col(key_col).alias("_k"), F.col("_salt"),
-                      F.col(id_col).alias("id_b"))
-    pairs = (a.join(b, [group_col, "_k", "_salt"])
-             .where(F.col("id_a") < F.col("id_b"))
+    vals = [c for c in keyed.columns if c not in (group_col, key_col, id_col)]
+
+    def side(s: str) -> DataFrame:
+        return salted.select(group_col, F.col(key_col).alias("_k"), "_salt",
+                             F.col(id_col).alias(f"id_{s}"),
+                             *[F.col(v).alias(f"{v}_{s}") for v in vals])
+
+    cond = F.col("id_a") < F.col("id_b")
+    pairs = (side("a").join(side("b"), [group_col, "_k", "_salt"])
+             .where(cond if keep is None else cond & keep)
              .select(group_col, "id_a", "id_b").distinct())
     stats = counts.groupBy(group_col).agg(
         F.count("*").alias("n_keys"),
@@ -89,7 +106,7 @@ def pairs_from_keys(keyed: DataFrame, cap: int,
     """Single-channel wrapper over pairs_from_keys_multi (the documents
     and PCH dedup operators use it); stats row drops the channel
     column."""
-    tagged = keyed.withColumn("_ch", F.lit("only"))
+    tagged = keyed.select(F.lit("only").alias("_ch"), key_col, id_col)
     pairs, stats = pairs_from_keys_multi(tagged, cap, group_col="_ch",
                                          key_col=key_col, id_col=id_col,
                                          caches=caches)
@@ -255,24 +272,42 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
         0, F.col("id_q") != F.col("id_r"))
 
 
-def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:
-    """Map int64 pair ids back to string image_ids (canonical order).
+def resolve_pairs(pairs: DataFrame, per_image: DataFrame, keep=None,
+                  ids: tuple[str, str] = ("id_a", "id_b")) -> DataFrame:
+    """The one place int64-id pairs meet the per-image relation: ONE
+    join per pair side that gates the pair and resolves its string ids.
 
-    `id_source` is any relation carrying (image_id, iid), one row per
-    image — the signatures table, whose minted `iid` column IS the id
-    map. The id dimension is tiny relative to the hit relation, so
-    Catalyst broadcasts it at bench scale; at cluster scale it is a
-    shuffle join on the long key."""
-    ids = id_source.select("image_id", F.col("iid").alias("_iid"))
-    out = (verified
-           .join(ids.select(F.col("_iid").alias("id_a"),
-                            F.col("image_id").alias("_sa")), "id_a")
-           .join(ids.select(F.col("_iid").alias("id_b"),
-                            F.col("image_id").alias("_sb")), "id_b"))
-    keep = [c for c in verified.columns if c not in ("id_a", "id_b")]
+    `per_image` carries (iid, image_id, *cols), one row per image —
+    the signatures table, whose minted `iid` column IS the id map, or a
+    projection of it. Each col c lands as c_a on the `ids[0]` side and
+    c_b on the `ids[1]` side; rows where `keep` (over those columns and
+    the pairs' own) fails drop. Returns canonical string ids
+    (id_a = least, id_b = greatest), then the pairs' other columns.
+    Columns neither `keep` nor the output reads are pruned from the
+    joins by Catalyst. The id dimension is tiny relative to the hit
+    relation, so Catalyst broadcasts it at bench scale; at cluster scale
+    it is a shuffle join on the long key."""
+    cols = [c for c in per_image.columns if c not in ("iid", "image_id")]
+
+    def side(id_col: str, s: str) -> DataFrame:
+        return per_image.select(F.col("iid").alias(id_col),
+                                F.col("image_id").alias(f"_s{s}"),
+                                *[F.col(c).alias(f"{c}_{s}") for c in cols])
+
+    out = (pairs.join(side(ids[0], "a"), ids[0])
+           .join(side(ids[1], "b"), ids[1]))
+    if keep is not None:
+        out = out.where(keep)
+    rest = [c for c in pairs.columns if c not in ids]
     return out.select(
         F.least("_sa", "_sb").alias("id_a"),
-        F.greatest("_sa", "_sb").alias("id_b"), *keep)
+        F.greatest("_sa", "_sb").alias("id_b"), *rest)
+
+
+def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:
+    """Map int64 pair ids back to string image_ids (canonical order):
+    resolve_pairs with no gate."""
+    return resolve_pairs(verified, id_source)
 
 
 # 1-byte channel codes for the fused flow's shuffle rows; decoded back
@@ -301,6 +336,17 @@ def _phash_band_keys(cfg: PanakoConfig):
         for b in range(cfg.phash_bands)])
 
 
+def _tagged(code: int, keys, v=None):
+    """keys array -> array<struct(channel, key, v)> for the keyed pass;
+    a null array yields no rows, like explode."""
+    v = F.lit(None).cast("long") if v is None else v
+    return F.coalesce(
+        F.transform(keys, lambda k: F.struct(
+            F.lit(code).cast("tinyint").alias("channel"),
+            k.cast("long").alias("key"), v.alias("v"))),
+        F.array().cast("array<struct<channel:tinyint,key:bigint,v:bigint>>"))
+
+
 def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
                           cfg: PanakoConfig, caches: list | None = None
                           ) -> tuple[DataFrame, DataFrame]:
@@ -309,10 +355,13 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     A separate explode/groupBy/join DAG per channel would be correct,
     but five channels x ~6 shuffle stages of tiny data is pure
     scheduling overhead at bench scale and five synchronization
-    barriers at cluster scale. Here the keyed rows are unioned with a
-    channel tag first, pair once, then verify each channel's candidates
-    with its own predicate in a single joined projection (whole-stage
-    codegen; no Python).
+    barriers at cluster scale. Here ONE keyed pass over signatures (one
+    generator over the five channel-tagged key arrays) feeds one salted
+    self-join, which also runs the bit channels' Hamming gate on the
+    16-byte `v` (simhash / phash) its rows carry. The surviving pairs
+    then meet the per-image relation once per side (resolve_pairs):
+    that join runs the MinHash Jaccard and substring containment gates
+    in a single codegen projection and resolves the string ids.
 
     Returns (pairs(channel, id_a, id_b), stats(channel, n_keys,
     n_hot_keys, dropped_cross_pairs_estimate)).
@@ -320,103 +369,49 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     Shuffle-width discipline: the keyed relation (every band of every
     channel) and the salted self-join are the fused flow's volume, so
     rows carry the 8-byte dictionary `iid` instead of the string
-    image_id and a 1-byte channel CODE instead of the channel name —
-    names and string ids are resolved once, on the (tiny) verified
-    output and the 5-row stats frame."""
-    sid = F.col("iid").alias("image_id")
-
-    def ch(code: int):
-        return F.lit(code).cast("tinyint").alias("channel")
-
-    keyed = (
-        signatures.select(sid, F.explode("mh_bands").alias("key"),
-                          ch(_CH_MINHASH))
-        .unionByName(signatures.select(
-            sid, F.explode("sh_bands").alias("key"), ch(_CH_SIMHASH)))
-        .unionByName(signatures.select(
-            sid, F.explode(_phash_band_keys(cfg)).alias("key"),
-            ch(_CH_PHASH)))
-        .unionByName(signatures.select(
-            sid, F.col("caption_hash").alias("key"), ch(_CH_CAPTION_EXACT)))
-        .unionByName(signatures.select(
-            sid, F.explode("substr_fps").alias("key"),
-            ch(_CH_CAPTION_SUBSTRING))))
+    image_id and a 1-byte channel CODE instead of the channel name; the
+    wide MinHash arrays and the caption strings only ever join the
+    (tiny) post-self-join pair set. Names and string ids are resolved on
+    that verified output and on the 5-row stats frame."""
+    keyed = signatures.select(
+        F.col("iid").alias("image_id"),
+        F.inline(F.concat(
+            _tagged(_CH_MINHASH, F.col("mh_bands")),
+            _tagged(_CH_SIMHASH, F.col("sh_bands"), F.col("simhash")),
+            _tagged(_CH_PHASH, _phash_band_keys(cfg), F.col("phash")),
+            _tagged(_CH_CAPTION_EXACT, F.array("caption_hash")),
+            _tagged(_CH_CAPTION_SUBSTRING, F.col("substr_fps")))))
+    # The bit channels dominate raw candidate volume (8-bit band keys
+    # collide at rate n²/2^bits regardless of data), so their
+    # xor+popcount gate runs inside the self-join: no raw bit candidate
+    # reaches the per-image join that drags the 128-perm MinHash arrays.
+    ch = F.col("channel")
+    ham = F.bit_count(F.col("v_a").bitwiseXOR(F.col("v_b")))
+    bits_ok = (F.when(ch == _CH_SIMHASH, ham <= cfg.simhash_hamming_threshold)
+               .when(ch == _CH_PHASH, ham <= cfg.phash_hamming_threshold)
+               .otherwise(True))
     cand, stats = pairs_from_keys_multi(keyed, cfg.band_pair_cap,
-                                        caches=caches)
-    # four per-channel branches read cand below — one materialization
-    # (MEMORY_AND_DISK; the 10^12-scale equivalent is a checkpoint table)
-    cand = cand.cache()
-    if caches is not None:
-        caches.append(cand)
+                                        caches=caches, keep=bits_ok)
 
-    # Per-channel verification, each joining ONLY the columns it needs.
-    # The bit channels (simhash/phash) dominate raw candidate volume —
-    # 8-bit band keys collide at rate n²/2^bits regardless of data — but
-    # their verify is one xor+popcount on a long. Dragging the 128-perm
-    # MinHash arrays into that join (measured: ~2 KB/row x 600k raw
-    # candidates) costs more than every verification combined, so the
-    # wide arrays only ever join the MinHash channel's own (tiny,
-    # high-entropy-banded) candidate set.
-    def _two_sided(df: DataFrame, col: str, alias_a: str, alias_b: str):
-        a = df.select(F.col("image_id").alias("id_a"),
-                      F.col(col).alias(alias_a))
-        b = df.select(F.col("image_id").alias("id_b"),
-                      F.col(col).alias(alias_b))
-        return a, b
-
-    sigs_n = signatures.select(sid, "simhash", "phash", "minhash")
-    bits = (cand.where(F.col("channel").isin(_CH_SIMHASH, _CH_PHASH))
-            .join(sigs_n.select("image_id", "simhash", "phash")
-                  .withColumnRenamed("image_id", "id_a")
-                  .withColumnRenamed("simhash", "_sa")
-                  .withColumnRenamed("phash", "_pa"), "id_a")
-            .join(sigs_n.select("image_id", "simhash", "phash")
-                  .withColumnRenamed("image_id", "id_b")
-                  .withColumnRenamed("simhash", "_sb")
-                  .withColumnRenamed("phash", "_pb"), "id_b")
-            .where(F.when(F.col("channel") == _CH_SIMHASH,
-                          F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                          <= cfg.simhash_hamming_threshold)
-                   .otherwise(
-                       F.bit_count(F.col("_pa").bitwiseXOR(F.col("_pb")))
-                       <= cfg.phash_hamming_threshold))
-            .select("channel", "id_a", "id_b"))
-
-    ma, mb = _two_sided(sigs_n.select("image_id", "minhash"),
-                        "minhash", "_ma", "_mb")
-    jacc = (F.aggregate(F.zip_with("_ma", "_mb",
+    # captions live on the input table; the per-image relation takes
+    # them through the persisted iid map (a left join: an image without
+    # a caption row fails only the substring gate, as a null)
+    per_image = (signatures.select("iid", "image_id", "minhash")
+                 .join(images.select("image_id", "caption"), "image_id",
+                       "left"))
+    jacc = (F.aggregate(F.zip_with("minhash_a", "minhash_b",
                                    lambda x, y: (x == y).cast("int")),
                         F.lit(0), lambda acc, v: acc + v)
             / F.lit(cfg.minhash_perms))
-    mh = (cand.where(F.col("channel") == _CH_MINHASH)
-          .join(ma, "id_a").join(mb, "id_b")
-          .where(jacc >= cfg.minhash_jaccard_threshold)
-          .select("channel", "id_a", "id_b"))
-
-    # captions live on the input table; route them through the persisted
-    # iid map (one row per image) so only the candidate set ever joins
-    # the caption strings
-    caps = (images.select("image_id", "caption")
-            .join(signatures.select("image_id", F.col("iid").alias("_nid")),
-                  "image_id")
-            .select(F.col("_nid").alias("image_id"), "caption"))
-    ca, cb = _two_sided(caps, "caption", "_ca", "_cb")
     thresh = cfg.substring_min_len + 8 - 1  # winnow window w=8 (suffix.py)
-    substr_ok = (((F.length("_ca") >= thresh) & F.contains("_cb", "_ca"))
-                 | ((F.length("_cb") >= thresh) & F.contains("_ca", "_cb")))
-    sub = (cand.where(F.col("channel") == _CH_CAPTION_SUBSTRING)
-           .join(ca, "id_a").join(cb, "id_b")
-           .where(substr_ok)
-           .select("channel", "id_a", "id_b"))
-
-    exact = cand.where(F.col("channel") == _CH_CAPTION_EXACT)
-
-    out = exact.unionByName(bits).unionByName(mh).unionByName(sub)
-    # resolve the 1-byte codes + 8-byte ids back to names + image_ids on
-    # the verified output only (canonical string order, like the
-    # landmark channel's resolve)
-    out = resolve_numeric_ids(
-        out.withColumn("channel", _channel_name(F.col("channel"))),
-        signatures).select("channel", "id_a", "id_b")
+    ca, cb = F.col("caption_a"), F.col("caption_b")
+    substr_ok = (((F.length(ca) >= thresh) & F.contains(cb, ca))
+                 | ((F.length(cb) >= thresh) & F.contains(ca, cb)))
+    verified_ok = (F.when(ch == _CH_MINHASH,
+                          jacc >= cfg.minhash_jaccard_threshold)
+                   .when(ch == _CH_CAPTION_SUBSTRING, substr_ok)
+                   .otherwise(True))
+    out = resolve_pairs(cand, per_image, verified_ok).select(
+        _channel_name(ch).alias("channel"), "id_a", "id_b")
     stats = stats.withColumn("channel", _channel_name(F.col("channel")))
     return out, stats

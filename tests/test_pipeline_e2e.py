@@ -2,9 +2,10 @@
 
 Runs the full Spark pipeline on the deterministic synthetic corpus and
 checks:
-  1. PARITY — the pipeline's dup-pair set recovers >= 0.99 of the golden
+  1. PARITY — the pipeline's landmark pairs recover >= 0.99 of the golden
      (single-node reference-semantics) matcher's pairs at the SAME config
-     (BASELINE.json north_rule criterion).
+     (BASELINE.json north_rule criterion); each fused signature channel's
+     pairs EQUAL the golden set.
   2. QUALITY — union-channel recall vs ground-truth cliques is 1.0 on this
      corpus (matches the golden matcher's own quality).
   3. CLUSTERS — connected-component labels equal the union-find golden.
@@ -81,15 +82,17 @@ def test_parity_landmark_channel(pipeline_result, golden):
 
 
 def test_parity_caption_channels(pipeline_result, golden):
+    """Each fused channel's pair set EQUALS its golden sibling's: no
+    missed pair (recall) and no extra one (precision)."""
     _, pairs, _, _, _ = pipeline_result
     _, caption_golden, _ = golden
     for ch in ("caption_exact", "minhash", "simhash", "caption_substring",
                "phash"):
         spark_ch = {(a, b) for a, b, c in pairs if c == ch}
         g = caption_golden[ch]
-        missed = g - spark_ch
-        recall = 1 - len(missed) / max(1, len(g))
-        assert recall >= 0.99, f"{ch} parity {recall}: missed {sorted(missed)[:5]}"
+        assert spark_ch == g, (
+            f"{ch}: missed {sorted(g - spark_ch)[:5]}, "
+            f"extra {sorted(spark_ch - g)[:5]}")
 
 
 def test_union_parity_and_truth_recall(pipeline_result, golden, corpus):

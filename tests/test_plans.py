@@ -173,3 +173,48 @@ def test_probe_join_converts_to_shuffled_hash(spark, cfg):
         assert inner and all("ShuffledHashJoin" in ln for ln in inner), p
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
+    """The fused signature flow's shape: the keyed relation is ONE
+    generator over ONE signatures scan (no per-channel union), the only
+    cached intermediate is the key-count frame, and the candidate pairs
+    meet the per-image relation exactly once per side — the bit gates
+    run inside the self-join, the MinHash/substring gates and the id
+    resolve share that one join pair."""
+    import re
+
+    from panako_spark.stages.candidates import fused_candidate_pairs
+
+    perms = cfg.minhash_perms
+    spark.createDataFrame(
+        [(f"i{k}", k, [k % 3, 7], [k % 2], k * 11, [k % 4, 1], k * 5,
+          k * 3, [k % 2] * perms) for k in range(20)],
+        "image_id string, iid long, mh_bands array<bigint>, "
+        "sh_bands array<bigint>, simhash bigint, substr_fps array<bigint>, "
+        "caption_hash bigint, phash bigint, minhash array<bigint>",
+    ).write.parquet(str(tmp_path / "signatures"))
+    sigs = spark.read.parquet(str(tmp_path / "signatures"))
+    images = spark.createDataFrame(
+        [(f"i{k}", f"caption {k % 3} with enough text to fingerprint")
+         for k in range(20)], "image_id string, caption string")
+    caches: list = []
+    pairs, _ = fused_candidate_pairs(sigs, images, cfg, caches=caches)
+    try:
+        assert len(caches) == 1, caches
+        (counts,) = caches
+        assert counts.columns == ["channel", "key", "_n"]
+        keyed = counts._jdf.queryExecution().analyzed().toString()
+        assert "Union" not in keyed, keyed
+        assert keyed.count("Generate inline(") == 1, keyed
+        assert keyed.count("Relation [") == 1, keyed
+
+        opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert "Union" not in opt, opt
+        side_joins = [ln for ln in opt.splitlines() if "Join " in ln and
+                      re.search(r"\(id_([ab])#\d+L = id_\1#\d+L\)", ln)]
+        assert len(side_joins) == 2, "\n".join(side_joins)
+        assert pairs.count() > 0
+    finally:
+        for c in caches:
+            c.unpersist()

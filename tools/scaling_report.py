@@ -5,7 +5,8 @@ every successful run to BENCH/scaling_runs.jsonl as it happens and logs
 per-pair quiet-window probes + same-window ceilings to its stdout, so
 the full report can be (re)built at any time — including after a hunt
 that was cut short — from those two artifacts plus an optional
-extract-kernel ceiling measurement (tools/kernel_ceiling.py --json).
+extract-kernel ceiling measurement (the JSON of tools/kernel_ceiling.py,
+last present at commit 3960325).
 
 Usage:
     python tools/scaling_report.py [--log /tmp/scaling_hunt_r3.log]
@@ -57,9 +58,11 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--log", default="/tmp/scaling_hunt_r3.log")
     ap.add_argument("--kernel-json", default=None,
-                    help="output of tools/kernel_ceiling.py --json")
+                    help="output of tools/kernel_ceiling.py --json "
+                         "(commit 3960325)")
     ap.add_argument("--freq-json", default=None,
-                    help="output of tools/freq_probe.py --json")
+                    help="output of tools/freq_probe.py --json "
+                         "(commit 3960325)")
     ap.add_argument("--n", type=int, default=2)
     ap.add_argument("--threshold", type=float, default=5.0)
     args = ap.parse_args()
