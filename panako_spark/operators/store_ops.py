@@ -26,7 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from panako_spark.config import PanakoConfig
-from panako_spark.io.checkpoint import CheckpointStore
+from panako_spark.io.checkpoint import CheckpointStore, local_frame
 from panako_spark.stages.extract import run_extract, split_prints, \
     split_signatures
 
@@ -35,7 +35,7 @@ def delete_resources(spark: SparkSession, store: CheckpointStore,
                      image_ids: list[str]) -> None:
     """S7: remove all prints/signatures of the given ids from whichever
     of the two tables has a complete checkpoint."""
-    ids_df = spark.createDataFrame([(i,) for i in image_ids], ["image_id"])
+    ids_df = local_frame(spark, [(i,) for i in image_ids], "image_id string")
     for table in ("prints", "signatures"):
         if store.is_complete(table):
             store.delete_ids(spark, table, ids_df)

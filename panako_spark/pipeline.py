@@ -34,7 +34,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from panako_spark.config import PanakoConfig
-from panako_spark.io.checkpoint import CheckpointStore
+from panako_spark.io.checkpoint import (
+    LINEAGE_SCHEMA, CheckpointStore, local_frame,
+)
 from panako_spark.stages import candidates as C
 from panako_spark.stages.cluster import connected_components
 from panako_spark.stages.extract import (
@@ -82,6 +84,12 @@ def materialize_extract(spark: SparkSession, images: DataFrame,
     on the resume path): the crop-rescue tile branch reads its tile
     probe arrays from the same cache — one decode pass feeds everything.
     The caller unpersists it once the tile branch is done.
+
+    Given a `lineage_sink` list, the extract's lazy per-partition
+    lineage aggregate is appended to it instead of being written: the
+    caller collects it before unpersisting the extract. The fresh
+    tables' re-reads carry the schemas just written, so they run no
+    footer-inference job.
     """
     fp = cfg.extraction_fingerprint()
     if store.is_complete("prints") and store.is_complete("signatures"):
@@ -97,27 +105,29 @@ def materialize_extract(spark: SparkSession, images: DataFrame,
         # prints carry no pre-partitioning: the landmark probe join
         # shuffles on the expanded probe_hash anyway. This first action
         # materializes extract into the cache as a side effect.
-        store.write(split_prints(extracted), "prints", config_fp=fp)
+        prints = split_prints(extracted)
+        store.write(prints, "prints", config_fp=fp)
         stats["t_extract_prints_s"] = round(time.monotonic() - t0, 2)
         t0 = time.monotonic()
-        store.write(split_signatures(extracted), "signatures", config_fp=fp)
+        signatures = split_signatures(extracted)
+        store.write(signatures, "signatures", config_fp=fp)
         stats["t_signatures_s"] = round(time.monotonic() - t0, 2)
-        t0 = time.monotonic()
         lin = lineage_from_extracted(extracted, "extract", store.run_id)
         if lineage_sink is not None:
-            # defer: the caller batches every lineage frame into ONE
-            # append job at the end of the run (the per-stage append
-            # writes were pure driver-serial cost). The aggregate is
-            # collected now, while the extract is still cached.
-            lineage_sink.extend(lin.collect())
+            # defer: the caller collects this aggregate off its critical
+            # path while the extract is still cached, and batches every
+            # lineage row into ONE append at the end of the run
+            lineage_sink.append(lin)
         else:
+            t0 = time.monotonic()
             store.append_lineage(lin)
-        stats["t_lineage_s"] = round(time.monotonic() - t0, 2)
+            stats["t_lineage_s"] = round(time.monotonic() - t0, 2)
         ok = True
     finally:
         if not ok:
             extracted.unpersist()
-    return (store.read(spark, "prints"), store.read(spark, "signatures"),
+    return (store.read(spark, "prints", schema=prints.schema),
+            store.read(spark, "signatures", schema=signatures.schema),
             extracted)
 
 
@@ -165,43 +175,63 @@ def rescue_gate(pairs: DataFrame, signatures: DataFrame, cfg: PanakoConfig,
 def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                  cfg: PanakoConfig | None = None) -> PipelineResult:
     """Scaling-efficiency discipline (BASELINE.json: >=0.8 N->4N): the
-    driver-serial term is minimized by (a) overlapping independent DAG
-    branches — the corpus census rides alongside extract, and the
-    landmark verify, fused signature and tile branches run CONCURRENTLY
-    from three submitter threads (Spark schedules all three job DAGs;
-    barrier gaps and Python-worker phases of one branch are filled with
-    the others' tasks); (b) one consolidated lineage append at the end
-    instead of per-stage append jobs; (c) no dup_pairs re-write — the
-    union of the three checkpointed branch tables IS the pair set."""
+    driver-serial term is minimized by
+    (a) overlapping independent DAG branches — the corpus census rides
+        alongside extract, and the landmark verify, fused signature and
+        tile branches run CONCURRENTLY from three submitter threads
+        (Spark schedules all three job DAGs; barrier gaps and
+        Python-worker phases of one branch are filled with the others'
+        tasks);
+    (b) no small job on the driver's serial path: the extract lineage
+        aggregate is collected on a fourth pool thread while the
+        branches run, the fused band stats are collected inside the
+        pairs branch (filling the key-count cache its write reuses),
+        checkpoint re-reads carry the written schema (no footer-
+        inference job), and the one consolidated lineage append at the
+        end writes an Arrow-built LocalTableScan (no Python worker);
+    (c) no dup_pairs re-write — the union of the three checkpointed
+        branch tables IS the pair set.
+
+    If any stage raises, every pool thread is waited for and the run's
+    caches are released before the error propagates: no branch keeps
+    writing checkpoints after the call returns."""
     cfg = cfg or PanakoConfig()
     stats: dict = {}
     t_start = time.monotonic()
     from concurrent.futures import ThreadPoolExecutor
 
-    lineage_rows: list = []
-    extracted: DataFrame | None = None
-    ex = ThreadPoolExecutor(max_workers=3)
+    lineage_frames: list = []
+    # persisted frames this run releases: the extract cache and the
+    # fused branch's key counts (repeated runs in one session must not
+    # leak executor memory)
+    held: list = []
+
+    def release() -> None:
+        while held:
+            held.pop().unpersist()
+
+    def label(name: str) -> None:
+        # thread-local job label: every Spark job this thread submits
+        # shows as panako:<stage> in the UI/event log — the concurrent
+        # branches are otherwise indistinguishable "parquet at ..."
+        # writes when profiling
+        try:
+            spark.sparkContext.setJobDescription(f"panako:{name}")
+        except Exception:  # noqa: BLE001 — labels must never fail a run
+            pass
+
+    ex = ThreadPoolExecutor(max_workers=4, thread_name_prefix="panako-run")
     try:
         # census (tiny id-only aggregate) overlaps the extract scan
         def _census():
-            try:
-                spark.sparkContext.setJobDescription("panako:census")
-            except Exception:  # noqa: BLE001
-                pass
+            label("census")
             return corpus_census(images)
 
         census_fut = ex.submit(_census)
 
         def timed(name: str, fn):
             t0 = time.monotonic()
-            # thread-local job label: every Spark job this branch thread
-            # submits shows as panako:<stage> in the UI/event log — the
-            # three concurrent branches are otherwise indistinguishable
-            # "parquet at ..." writes when profiling scaling
-            try:
-                spark.sparkContext.setJobDescription(f"panako:{name}")
-            except Exception:  # noqa: BLE001 — labels must never fail a run
-                pass
+            label(name)
             out = fn()
             stats[f"t_{name}_s"] = round(time.monotonic() - t0, 2)
             return out
@@ -215,7 +245,22 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         prints, signatures, extracted = timed(
             "extract", lambda: materialize_extract(
                 spark, images, store, cfg, stats,
-                lineage_sink=lineage_rows))
+                lineage_sink=lineage_frames))
+        if extracted is not None:
+            held.append(extracted)
+
+        def collect_lineage() -> list:
+            # overlaps the branches; reads the extract cache, so it is
+            # awaited before the cache is released
+            t0 = time.monotonic()
+            label("extract")
+            rows = [tuple(r) for lin in lineage_frames
+                    for r in lin.collect()]
+            stats["t_lineage_s"] = round(time.monotonic() - t0, 2)
+            return rows
+
+        lineage_fut = (ex.submit(collect_lineage)
+                       if lineage_frames else None)
 
         n_images, n_ids = census_fut.result()
         if n_images != n_ids:
@@ -244,13 +289,14 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                            cfg, numeric_ids=True)
             return rescue_gate(v, signatures, cfg)
 
-        fused_stats_box: list = []
-        fused_caches: list = []
+        band_rows: list = []
 
         def compute_fused() -> DataFrame:
             fused, fused_stats = C.fused_candidate_pairs(
-                signatures, images, cfg, caches=fused_caches)
-            fused_stats_box.append(fused_stats)
+                signatures, images, cfg, caches=held)
+            # collected here, before the write: this job fills the
+            # key-count cache that the write's salted self-join reuses
+            band_rows.extend(fused_stats.collect())
             return fused.select("channel", "id_a", "id_b")
 
         def compute_tile_pairs() -> DataFrame:
@@ -277,18 +323,18 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                     .where(F.col("score") >= cfg.tile_min_score)
                     .select("id_a", "id_b").distinct())
 
-        fut_v = ex.submit(lambda: timed("verify", lambda: (
-            store.read_or_compute(spark, "verified", compute_verified))))
-        fut_f = ex.submit(lambda: timed("pairs", lambda: (
-            store.read_or_compute(spark, "fused_pairs", compute_fused))))
-        fut_t = ex.submit(lambda: timed("tiles", lambda: (
-            store.read_or_compute(spark, "tile_pairs", compute_tile_pairs))))
+        def branch(name: str, table: str, compute):
+            return ex.submit(timed, name, lambda: store.read_or_compute(
+                spark, table, compute))
+
+        fut_v = branch("verify", "verified", compute_verified)
+        fut_f = branch("pairs", "fused_pairs", compute_fused)
+        fut_t = branch("tiles", "tile_pairs", compute_tile_pairs)
         verified = fut_v.result()
         fused_pairs = fut_f.result()
         tile_pairs = fut_t.result()
-        if extracted is not None:
-            extracted.unpersist()
-            extracted = None
+        lineage_rows = lineage_fut.result() if lineage_fut else []
+        release()
 
         dup_pairs = (verified
                      .select(F.lit("landmark").alias("channel"),
@@ -298,21 +344,14 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                          F.lit("tile").alias("channel"), "id_a", "id_b"))
                      .select("id_a", "id_b", "channel"))
 
-        if fused_stats_box:
-            # the band-count cache is warm after the fused write, so this
-            # stats job costs ~nothing; rows go into the one deferred
-            # lineage append below
-            rows = fused_stats_box[0].collect()
-            for row in rows:
-                stats[f"bands_{row['channel']}"] = {k: row[k] for k in (
-                    "n_keys", "n_hot_keys", "dropped_cross_pairs_estimate")}
-            lineage_rows.extend(
-                (f"bands_{r['channel']}", -1, int(r["n_keys"]),
-                 int(r["n_hot_keys"]),
-                 int(r["dropped_cross_pairs_estimate"]), 0, store.run_id)
-                for r in rows)
-        for c in fused_caches:   # release candidate/count caches: repeated
-            c.unpersist()        # runs in one session must not leak memory
+        for row in band_rows:
+            stats[f"bands_{row['channel']}"] = {k: row[k] for k in (
+                "n_keys", "n_hot_keys", "dropped_cross_pairs_estimate")}
+        lineage_rows.extend(
+            (f"bands_{r['channel']}", -1, int(r["n_keys"]),
+             int(r["n_hot_keys"]),
+             int(r["dropped_cross_pairs_estimate"]), 0, store.run_id)
+            for r in band_rows)
 
         # ---- clustering -----------------------------------------------------
         clusters = timed("cluster", lambda: store.read_or_compute(
@@ -326,19 +365,13 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
         # ---- one consolidated lineage append --------------------------------
         if lineage_rows:
-            # a handful of driver-local rows: one slice, not
-            # defaultParallelism Python-worker tasks (measured ~3 s of
-            # pure worker-spawn wait at local[8] for an 8-slice
-            # ParallelCollection of ~20 rows)
-            store.append_lineage(spark.createDataFrame(
-                [tuple(r) for r in lineage_rows],
-                schema="stage string, partition_id int, input_count long, "
-                       "signature_count long, band_count long, "
-                       "elapsed_ms long, run_id string").coalesce(1))
+            # a handful of driver-local rows, in one slice: an Arrow-built
+            # LocalTableScan, so the append job is JVM-only
+            store.append_lineage(local_frame(
+                spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1))
     finally:
-        if extracted is not None:
-            extracted.unpersist()
-        ex.shutdown(wait=False)
+        ex.shutdown(wait=True)
+        release()
 
     stats["elapsed_s"] = time.monotonic() - t_start
     return PipelineResult(clusters=clusters, dup_pairs=dup_pairs,

@@ -17,6 +17,20 @@ import os
 from pyspark.sql import SparkSession
 
 ICEBERG_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-3.5_2.13:1.6.1"
+JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
+# The driver's own JVM options. GC: ship the JDK17 default (G1), decided
+# by interleaved same-window A/B (BENCH/ATTRIBUTION.md,
+# BENCH/gc_ab_probe.jsonl). A ParallelGC switch briefly shipped on a
+# +37%/+47% stage-profile reading, but under round-robin A/B at <3% steal
+# it LOST: store/local[8] G1 424-481 img/s vs PGC 331-344 (task GC
+# 6.5-7.6 s vs 41-49 s — ParallelGC grows the heap through stop-the-world
+# full GCs on this allocation pattern), full/local[8] G1 ahead or tied in
+# 3 of 4 pairs (e.g. 115.05 vs 81.85 img/s in the quietest window, GC
+# 1.4 s vs 43.5 s). Pre-sizing the heap (-Xms) made ParallelGC worse, and
+# G1 with 32 m regions did not beat default G1. Full story:
+# BENCH/ATTRIBUTION.md Fix 7. JIT flags (C1-only, fewer C2 threads,
+# higher Tier4 thresholds) were measured too and are not shipped: Fix 8.
+JAVA_OPTIONS = "-Djava.security.manager=allow"
 
 
 def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
@@ -68,20 +82,17 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # GC: ship the JDK17 default (G1), decided by interleaved
-        # same-window A/B (BENCH/ATTRIBUTION.md, BENCH/gc_ab_probe.jsonl).
-        # A ParallelGC switch briefly shipped on a +37%/+47% stage-profile
-        # reading, but under round-robin A/B at <3% steal it LOST:
-        # store/local[8] G1 424-481 img/s vs PGC 331-344 (task GC 6.5-7.6 s
-        # vs 41-49 s — ParallelGC grows the heap through stop-the-world
-        # full GCs on this allocation pattern), full/local[8] G1 ahead or
-        # tied in 3 of 4 pairs (e.g. 115.05 vs 81.85 img/s in the
-        # quietest window, GC 1.4 s vs 43.5 s). Pre-sizing the heap
-        # (-Xms) made ParallelGC worse, and G1 with 32 m regions did not
-        # beat default G1. Full story: BENCH/ATTRIBUTION.md Fix 7.
-        .config("spark.driver.extraJavaOptions",
-                "-Djava.security.manager=allow")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in merged_conf(extra_conf).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def merged_conf(extra_conf: dict | None) -> dict:
+    """The caller's conf, with a caller's spark.driver.extraJavaOptions
+    (a JIT flag under A/B, say) appended after the session's own
+    JAVA_OPTIONS instead of replacing them."""
+    conf = dict(extra_conf or {})
+    conf[JAVA_OPTIONS_KEY] = " ".join(
+        filter(None, (JAVA_OPTIONS, conf.get(JAVA_OPTIONS_KEY))))
+    return conf

@@ -14,6 +14,7 @@ checks:
 
 import collections
 import itertools
+import threading
 
 import pytest
 
@@ -26,8 +27,21 @@ from panako_spark.kernels.matcher import (
     phash_pairs_golden,
 )
 from panako_spark.pipeline import run_pipeline
+from panako_spark.stages import candidates
 
 N_BASE = 30
+
+
+class RecordingStore(CheckpointStore):
+    """Keeps every frame the pipeline hands to append_lineage."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.lineage_frames = []
+
+    def append_lineage(self, df):
+        self.lineage_frames.append(df)
+        super().append_lineage(df)
 
 
 @pytest.fixture(scope="module")
@@ -63,7 +77,7 @@ def golden(corpus, cfg):
 def pipeline_result(corpus, cfg, spark, tmp_path_factory):
     rows, _ = corpus
     images = spark.createDataFrame(rows_to_pandas(rows))
-    store = CheckpointStore(str(tmp_path_factory.mktemp("ckpt")))
+    store = RecordingStore(str(tmp_path_factory.mktemp("ckpt")))
     res = run_pipeline(spark, images, store, cfg)
     pairs = {(r["id_a"], r["id_b"], r["channel"])
              for r in res.dup_pairs.collect()}
@@ -141,6 +155,39 @@ def test_lineage_written(pipeline_result, spark):
     cols = set(lin.columns)
     assert {"stage", "partition_id", "input_count", "signature_count",
             "band_count", "elapsed_ms", "run_id"} <= cols
+
+
+def test_lineage_append_is_jvm_only(pipeline_result):
+    """The run's one lineage append writes an Arrow-built local relation:
+    no PythonRDD, so the append job never waits on a Python worker."""
+    _, _, _, store, _ = pipeline_result
+    df = store.lineage_frames[0]
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert "PythonRDD" not in df._jdf.rdd().toDebugString()
+
+
+def test_failing_branch_stops_its_siblings(spark, cfg, tmp_path,
+                                           monkeypatch):
+    """One branch raising: run_pipeline waits for the other branches
+    (no pool thread outlives the call, so none writes a checkpoint
+    after the raise) and releases the run's caches before re-raising."""
+    rows, _ = synth.generate_corpus(4, dup_fraction=0.5, seed=5)
+    images = spark.createDataFrame(rows_to_pandas(rows))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = set(threading.enumerate())
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("fused branch failed")
+
+    monkeypatch.setattr(candidates, "fused_candidate_pairs", boom)
+    with pytest.raises(RuntimeError, match="fused branch failed"):
+        run_pipeline(spark, images, CheckpointStore(str(tmp_path)), cfg)
+    leftover = [t.name for t in threading.enumerate()
+                if t not in before and not t.daemon]
+    assert not leftover
+    assert cache.isEmpty()
 
 
 def test_olaf_strategy_spark_golden_parity(spark, cfg, tmp_path):

@@ -142,6 +142,27 @@ def test_checkpoint_resume_skips_compute(spark, tmp_path):
     assert out.count() == 7
 
 
+def test_read_or_compute_fresh_table_runs_one_job(spark, tmp_path):
+    """A fresh stage costs its write job alone: the re-read carries the
+    written frame's schema, so no parquet footer-inference job follows
+    it on the driver's serial path."""
+    store = CheckpointStore(str(tmp_path))
+    sc = spark.sparkContext
+    sc.setJobGroup("read_or_compute_fresh", "read_or_compute")
+    try:
+        out = store.read_or_compute(
+            spark, "t", lambda: spark.range(10).select(
+                "id", (F.col("id") * 2).alias("x")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "read_or_compute_fresh")) == 1
+    # the carried schema is the one inference would have read back
+    assert out.schema == spark.read.parquet(store.path("t")).schema
+    assert sorted(r["x"] for r in out.collect()) == list(range(0, 20, 2))
+
+
 def test_checkpoint_invalidate(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
     store.write(spark.range(7).select("id"), "t")
