@@ -8,11 +8,7 @@ line:
    "queries": {name: sec, ...}, "sf": ...,
    "images_per_sec": ..., "n_images": ...}
 
-Flags:
-  --cpus N        override SPARK_GRAFT_CPUS for this run
-  --n-base N      synthetic corpus size (default 600 base images)
-  --skip-tables   only run the image pipeline (for scaling runs)
-  --skip-pipeline only run the table queries
+`python bench.py --help` lists every flag with its default.
 """
 
 from __future__ import annotations
@@ -53,8 +49,8 @@ HEADLINE = [
 
 def bench_corpus_path(n_base: int, spark=None) -> str:
     """Deterministic synthetic images parquet, cached across runs (same
-    seed => same bytes), so scaling runs at two parallelism levels read
-    identical input. Large corpora generate Spark-parallel (content is
+    seed => same bytes), so runs at any parallelism level read identical
+    input. Large corpora generate Spark-parallel (content is
     per-base-index seeded, so parallelism does not change the bytes)."""
     path = os.path.join(tempfile.gettempdir(),
                         f"panako_bench_corpus_v3_{n_base}")
@@ -124,13 +120,11 @@ def _spin_until(t_end: float) -> int:
 
 def wait_for_quiet(threshold: float = 5.0, max_wait_s: float = 240.0,
                    probe_s: float = 4.0) -> float:
-    """Bounded wait for a low-steal window before benchmarking (VERDICT
-    r3 #4: the committed headline bench ran under a 12.9% burst while
-    the clean evidence lived elsewhere — starting inside a quiet window
-    makes the default-invocation artifact itself clean). A short loaded
-    spin probes busy-relative steal (an idle VM shows ~zero busy ticks);
-    returns the last probe reading. Skip with --no-quiet-wait (the
-    scaling harness does its own window scheduling)."""
+    """Bounded wait for a low-steal window, so that a recorded timing is
+    not a steal-burst number (VERDICT r3 #4: a committed bench ran under
+    a 12.9% burst). A short loaded spin probes busy-relative steal (an
+    idle VM shows ~zero busy ticks); returns the last probe reading.
+    bench.py calls it before its timings, tools/ab.py before each pair."""
     import multiprocessing as mp
 
     procs = min(8, os.cpu_count() or 8)
@@ -164,14 +158,19 @@ def _jvm_gc_ms(spark) -> int:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int,
+    ap = argparse.ArgumentParser(
+        description=__doc__.split("\n")[0],
+        formatter_class=argparse.ArgumentDefaultsHelpFormatter)
+    ap.add_argument("--cpus", type=int, help="local[N] for this run",
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--n-base", type=int, default=1500)
+    ap.add_argument("--n-base", type=int, default=1500,
+                    help="base images in the synthetic pipeline corpus")
     ap.add_argument("--repeats", type=int, default=3,
                     help="repeats per table query (median reported)")
-    ap.add_argument("--skip-tables", action="store_true")
-    ap.add_argument("--skip-pipeline", action="store_true")
+    ap.add_argument("--skip-tables", action="store_true",
+                    help="only run the image pipeline")
+    ap.add_argument("--skip-pipeline", action="store_true",
+                    help="only run the table queries")
     ap.add_argument("--mode", choices=["full", "store"], default="full",
                     help="pipeline benchmark mode: 'full' = extract →"
                          " candidates → verify → cluster; 'store' ="
@@ -186,9 +185,7 @@ def main() -> None:
                          "maxShuffledHashJoinLocalMapThreshold=128m")
     ap.add_argument("--no-quiet-wait", action="store_true",
                     help="start immediately instead of waiting (bounded, "
-                         "240 s) for a <5%% steal window; the scaling "
-                         "harness passes this (it schedules its own "
-                         "windows)")
+                         "240 s) for a <5%% steal window")
     args = ap.parse_args()
 
     # Staleness gate (VERDICT r4 #1): the shipped --py-files artifact must
