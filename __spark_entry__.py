@@ -188,18 +188,6 @@ def _multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("image_id", "w", "h", "fmt")
 
 
-def _minhash_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from panako_spark.operators.dedup import minhash_dup_pairs
-
-    return minhash_dup_pairs(spark, sf_dir, verify="exact")
-
-
-def _simhash_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from panako_spark.operators.dedup import simhash_dup_pairs
-
-    return simhash_dup_pairs(spark, sf_dir, verify="exact")
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- relational operators (SURVEY.md §2.3/§2.4) ---
@@ -232,8 +220,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (candidates from the signature bands — the mechanism under
         # test — output filtered on the exact shingle Jaccard the oracle
         # recomputes; match <=> the banding achieves full recall)
-        "minhash_dup_pairs_docs": _minhash_docs_exact,
-        "simhash_dup_pairs_docs": _simhash_docs_exact,
+        "minhash_dup_pairs_docs": DD.minhash_dup_pairs,
+        "simhash_dup_pairs_docs": DD.simhash_dup_pairs,
         # --- full image pipeline (inline VALUES oracle + IN-QUERY golden
         #     parity assertions: a parity failure raises -> driver error)
         "image_dedup_pipeline": _image_dedup_smoke,

@@ -1,11 +1,11 @@
 """Benchmark driver (round contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] plus the image+caption
+/root/testdata/sf0.1) on local[--cpus] plus the image+caption
 dedup pipeline on a deterministic synthetic corpus, and prints ONE JSON
 line:
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
+   "queries": {name: sec, ...}, "sf": ..., "cpus": ..., "host_cpus": ...,
    "images_per_sec": ..., "n_images": ...}
 
 `python bench.py --help` lists every flag with its default.
@@ -158,11 +158,14 @@ def _jvm_gc_ms(spark) -> int:
 
 
 def main() -> None:
+    from panako_spark.session import default_cpus
+
     ap = argparse.ArgumentParser(
         description=__doc__.split("\n")[0],
         formatter_class=argparse.ArgumentDefaultsHelpFormatter)
-    ap.add_argument("--cpus", type=int, help="local[N] for this run",
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus(),
+                    help="local[N] for this run ($SPARK_GRAFT_CPUS if set, "
+                         "else the CPUs this process may use)")
     ap.add_argument("--n-base", type=int, default=1500,
                     help="base images in the synthetic pipeline corpus")
     ap.add_argument("--repeats", type=int, default=3,
@@ -334,6 +337,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "cpus": args.cpus,
+        "host_cpus": len(os.sched_getaffinity(0)),
         "n_images": n_images,
         "images_per_sec": images_per_sec,
         "steal_pct": _steal_pct(steal0, _cpu_counters()),

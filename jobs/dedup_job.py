@@ -9,10 +9,10 @@ Ships per the north rule as:
         --output  /path/to/clusters_out \\
         [--synthetic 500]   # generate a seeded corpus instead of --images
 
-On a cluster the SparkSession comes from spark-submit's conf (we call
-getOrCreate with no master override); locally it falls back to
-local[SPARK_GRAFT_CPUS]. The job is resumable: re-submitting with the
-same --store resumes at the first incomplete stage.
+The SparkSession comes from spark-submit's conf: the job sets no master,
+so a local run names one too (`spark-submit --master local[4] ...`).
+The job is resumable: re-submitting with the same --store resumes at the
+first incomplete stage.
 """
 
 from __future__ import annotations
@@ -59,7 +59,6 @@ def main() -> None:
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 
-    from panako_spark.config import PanakoConfig
     from panako_spark.io.checkpoint import CheckpointStore
     from panako_spark.pipeline import run_pipeline
 
@@ -90,7 +89,7 @@ def main() -> None:
 
     from panako_spark.config import config_with_overrides
 
-    cfg = config_with_overrides(args.overrides, PanakoConfig())
+    cfg = config_with_overrides(args.overrides)
     store = CheckpointStore(args.store, backend=args.backend)
     t0 = time.monotonic()
     res = run_pipeline(spark, images, store, cfg)

@@ -238,7 +238,6 @@ class PanakoConfig:
     minhash_jaccard_threshold: float = 0.39
 
     # ---- SimHash over caption token shingles --------------------------------
-    simhash_bits: int = 64
     simhash_bands: int = 8            # 8 bands x 8 bits for candidate keys
     simhash_hamming_threshold: int = 6
 
@@ -308,7 +307,7 @@ class PanakoConfig:
             "max_freq_distance", "max_prints_per_image",
             "strategy", "olaf_eps_per_fp",
             "minhash_perms", "minhash_bands", "minhash_shingle",
-            "minhash_seed", "simhash_bits", "simhash_bands",
+            "minhash_seed", "simhash_bands",
             "phash_bands", "substring_min_len",
         )
         blob = f"store_format={STORE_FORMAT};" + ";".join(
@@ -325,7 +324,7 @@ class PanakoConfig:
 
     @property
     def simhash_bits_per_band(self) -> int:
-        return self.simhash_bits // self.simhash_bands
+        return 64 // self.simhash_bands
 
     @property
     def phash_bits_per_band(self) -> int:
@@ -382,6 +381,5 @@ def parse_overrides(pairs: list[str] | None) -> dict:
     return out
 
 
-def config_with_overrides(pairs: list[str] | None,
-                          base: PanakoConfig | None = None) -> PanakoConfig:
-    return (base or DEFAULT_CONFIG).with_(**parse_overrides(pairs))
+def config_with_overrides(pairs: list[str] | None) -> PanakoConfig:
+    return DEFAULT_CONFIG.with_(**parse_overrides(pairs))

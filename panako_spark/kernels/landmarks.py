@@ -39,8 +39,6 @@ import numpy as np
 
 from panako_spark.config import PanakoConfig
 
-PRINT_DTYPE = [("hash", np.int64), ("t1", np.int32), ("f1", np.int32)]
-
 
 def _valid_pairs(t: np.ndarray, f: np.ndarray, cfg: PanakoConfig) -> np.ndarray:
     """Boolean (n, n) matrix: pair (i, j) satisfies the E6 gap bounds."""

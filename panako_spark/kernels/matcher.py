@@ -14,7 +14,6 @@ from collections import defaultdict
 import numpy as np
 
 from panako_spark.config import PanakoConfig
-from panako_spark.kernels.landmarks import extract_prints
 from panako_spark.kernels.minhash import hash_shingles, token_shingles
 from panako_spark.kernels.simhash import hamming, simhash
 from panako_spark.kernels.suffix import substring_pairs_golden

@@ -36,14 +36,6 @@ def hamming(a: int, b: int) -> int:
                    ^ (int(b) & 0xFFFFFFFFFFFFFFFF)).count("1"))
 
 
-def hamming_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Vectorized Hamming distance between int64 fingerprint arrays."""
-    x = (a.astype(np.int64).view(np.uint64)
-         ^ b.astype(np.int64).view(np.uint64))
-    # popcount via unpackbits on the byte view
-    return np.unpackbits(x.view(np.uint8).reshape(-1, 8), axis=1).sum(axis=1)
-
-
 def simhash_band_keys(fp: np.ndarray, cfg: PanakoConfig) -> np.ndarray:
     """(n,) int64 fingerprints -> (n, simhash_bands) int64 band keys.
 

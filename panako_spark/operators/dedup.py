@@ -5,26 +5,23 @@ caption pipeline (kernels are shared), exposed as standalone operators a
 training-data pipeline would run.
 
 Signature VALUES are not expressible in ANSI SQL (splitmix64 wrapping
-arithmetic), but the operators are still fully oracle-checkable in
-`verify="exact"` mode: candidates come from the signature LSH bands
-(the scale mechanism under test) and the OUTPUT filter is the exact
-shingle-set Jaccard, which DuckDB computes identically — so the driver
-compare passes iff the banding achieves full recall on the true pair
-set (measured: every J>=0.5 pair on the test corpora sits at J>=0.89
-and collides in both MinHash and SimHash bands; the check is
-deterministic because every hash seed is fixed). verify="estimate"
-keeps the pure-signature filters (jaccard_est / hamming) for the
-10^12-row path where exact verification is the expensive step.
+arithmetic), but the operators are still fully oracle-checkable:
+candidates come from the signature LSH bands (the scale mechanism under
+test) and the OUTPUT filter is the exact shingle-set Jaccard, which
+DuckDB computes identically — so the driver compare passes iff the
+banding achieves full recall on the true pair set (measured: every
+J>=0.5 pair on the test corpora sits at J>=0.89 and collides in both
+MinHash and SimHash bands; the check is deterministic because every
+hash seed is fixed).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from panako_spark.config import PanakoConfig
@@ -32,61 +29,55 @@ from panako_spark.kernels.minhash import (
     band_keys, hash_shingles, minhash_signature_batch, token_shingles,
 )
 from panako_spark.kernels.simhash import simhash_band_keys, simhash_batch
+from panako_spark.stages.candidates import pairs_from_keys
 
-DOC_SIG_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("minhash", T.ArrayType(T.LongType())),
-    T.StructField("mh_bands", T.ArrayType(T.LongType())),
-    T.StructField("simhash", T.LongType()),
-    T.StructField("sh_bands", T.ArrayType(T.LongType())),
-])
+DOC_JACCARD_THRESHOLD = 0.5  # docs table near-dups are near-verbatim;
+#                              decoupled from the caption-channel knob
+#                              (config.minhash_jaccard_threshold) and
+#                              shared with the DuckDB oracle
 
 
-def doc_signatures(spark: SparkSession, sf_dir: str,
-                   cfg: PanakoConfig | None = None) -> DataFrame:
-    """documents -> MinHash-128 signature + SimHash-64 + band keys, one
-    vectorized mapInPandas pass (Arrow batches, batched NumPy kernels)."""
-    cfg = cfg or PanakoConfig()
+def _band_candidates(spark: SparkSession, sf_dir: str, cfg: PanakoConfig,
+                     bands: Callable[[list, PanakoConfig], np.ndarray]
+                     ) -> DataFrame:
+    """documents -> candidate (id_a, id_b) pairs sharing a band key.
+    `bands` maps a batch's shingle-hash arrays to (n, bands) int64 keys;
+    one vectorized mapInPandas pass (Arrow batches, batched NumPy
+    kernels) emits flat (image_id, key) rows, one per document and
+    band."""
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in it:
             lists = [hash_shingles(token_shingles(t or "",
                                                   cfg.minhash_shingle))
                      for t in batch["text"]]
-            sigs = minhash_signature_batch(lists, cfg)
-            sims = simhash_batch(lists)
+            keys = bands(lists, cfg)
             yield pd.DataFrame({
-                "doc_id": batch["doc_id"].astype("int64"),
-                "minhash": [s.astype(np.int64) for s in sigs],
-                "mh_bands": list(band_keys(sigs.view(np.uint64), cfg)),
-                "simhash": sims,
-                "sh_bands": list(simhash_band_keys(sims, cfg)),
-            })
+                "image_id": np.repeat(batch["doc_id"].to_numpy("int64"),
+                                      keys.shape[1]),
+                "key": keys.ravel()})
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", "text").mapInPandas(fn, DOC_SIG_SCHEMA)
-
-
-def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> distinct token-3-gram shingle array, built with the
-    exact SQL semantics the DuckDB oracle uses (split on single space),
-    all JVM-side."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.withColumn("_t", F.split("text", " "))
-            .where(F.size("_t") >= 3)
-            .select("doc_id", F.array_distinct(F.expr(
-                "transform(sequence(0, size(_t) - 3), "
-                "i -> concat_ws(' ', _t[i], _t[i+1], _t[i+2]))"))
-                .alias("sh")))
+    keyed = docs.select("doc_id", "text").mapInPandas(
+        fn, "image_id long, key long")
+    return pairs_from_keys(keyed, cfg.band_pair_cap)[0]
 
 
 def _exact_jaccard_verify(spark: SparkSession, sf_dir: str,
                           cand: DataFrame, threshold: float) -> DataFrame:
     """Candidate pairs -> (id_a, id_b, jaccard) with the EXACT shingle
     Jaccard; integer set sizes divide to the identical double the
-    DuckDB oracle computes. Only the (tiny) candidate set joins the
-    shingle arrays — the full shingle relation never self-joins here."""
-    arrs = _doc_shingle_arrays(spark, sf_dir)
+    DuckDB oracle computes. The shingle arrays use the oracle's exact
+    SQL semantics (token 3-grams, split on single space) and are built
+    JVM-side. Only the (tiny) candidate set joins them — the full
+    shingle relation never self-joins here."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    arrs = (docs.withColumn("_t", F.split("text", " "))
+            .where(F.size("_t") >= 3)
+            .select("doc_id", F.array_distinct(F.expr(
+                "transform(sequence(0, size(_t) - 3), "
+                "i -> concat_ws(' ', _t[i], _t[i+1], _t[i+2]))"))
+                .alias("sh")))
     a = arrs.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("_sa"))
     b = arrs.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
@@ -97,68 +88,31 @@ def _exact_jaccard_verify(spark: SparkSession, sf_dir: str,
             .select("id_a", "id_b", "jaccard"))
 
 
-DOC_JACCARD_THRESHOLD = 0.5  # docs table near-dups are near-verbatim;
-#                              decoupled from the caption-channel knob
-#                              (config.minhash_jaccard_threshold) and
-#                              shared with the DuckDB oracle
+def _minhash_bands(lists: list[np.ndarray], cfg: PanakoConfig) -> np.ndarray:
+    return band_keys(minhash_signature_batch(lists, cfg), cfg)
+
+
+def _simhash_bands(lists: list[np.ndarray], cfg: PanakoConfig) -> np.ndarray:
+    return simhash_band_keys(simhash_batch(lists), cfg)
 
 
 def minhash_dup_pairs(spark: SparkSession, sf_dir: str,
                       cfg: PanakoConfig | None = None,
-                      verify: str = "estimate",
                       threshold: float = DOC_JACCARD_THRESHOLD) -> DataFrame:
     """MinHash-LSH near-dup pairs on documents — the scale path that the
-    exact ngram_jaccard_pairs oracles. verify="estimate" filters on the
-    signature-estimated Jaccard (pure signature math, the 10^12-row
-    mode); verify="exact" filters candidates on the exact shingle
-    Jaccard instead, which makes the whole operator oracle-checkable
-    (module docstring)."""
+    exact ngram_jaccard_pairs oracles: MinHash band candidates, filtered
+    on the exact shingle Jaccard (module docstring)."""
     cfg = cfg or PanakoConfig()
-    sigs = doc_signatures(spark, sf_dir, cfg)
-    keyed = sigs.select(F.col("doc_id").alias("image_id"),
-                        F.explode("mh_bands").alias("key"))
-    from panako_spark.stages.candidates import pairs_from_keys
-    cand, _ = pairs_from_keys(keyed, cfg.band_pair_cap)
-    if verify == "exact":
-        return _exact_jaccard_verify(spark, sf_dir, cand, threshold)
-    a = sigs.select(F.col("doc_id").alias("id_a"),
-                    F.col("minhash").alias("_ma"))
-    b = sigs.select(F.col("doc_id").alias("id_b"),
-                    F.col("minhash").alias("_mb"))
-    return (cand.join(a, "id_a").join(b, "id_b")
-            .withColumn("jaccard_est",
-                        F.aggregate(F.zip_with("_ma", "_mb",
-                                               lambda x, y: (x == y)
-                                               .cast("int")),
-                                    F.lit(0), lambda acc, v: acc + v)
-                        / F.lit(cfg.minhash_perms))
-            .where(F.col("jaccard_est") >= threshold)
-            .select("id_a", "id_b", "jaccard_est"))
+    cand = _band_candidates(spark, sf_dir, cfg, _minhash_bands)
+    return _exact_jaccard_verify(spark, sf_dir, cand, threshold)
 
 
 def simhash_dup_pairs(spark: SparkSession, sf_dir: str,
                       cfg: PanakoConfig | None = None,
-                      verify: str = "estimate",
                       threshold: float = DOC_JACCARD_THRESHOLD) -> DataFrame:
-    """SimHash near-dup pairs on documents. verify="estimate" gates on
-    the 64-bit Hamming distance (pure signature math); verify="exact"
-    gates the band candidates on exact shingle Jaccard — oracle-checkable
-    (module docstring; note high-J pairs can sit at Hamming 7-10, so the
-    exact mode deliberately bypasses the hamming gate rather than
-    layering both filters)."""
+    """SimHash near-dup pairs on documents: SimHash bit-band candidates,
+    filtered on the exact shingle Jaccard (module docstring). There is
+    no Hamming gate: high-J pairs can sit at Hamming 7-10."""
     cfg = cfg or PanakoConfig()
-    sigs = doc_signatures(spark, sf_dir, cfg)
-    keyed = sigs.select(F.col("doc_id").alias("image_id"),
-                        F.explode("sh_bands").alias("key"))
-    from panako_spark.stages.candidates import pairs_from_keys
-    cand, _ = pairs_from_keys(keyed, cfg.band_pair_cap)
-    if verify == "exact":
-        return _exact_jaccard_verify(spark, sf_dir, cand, threshold)
-    s = sigs.select("doc_id", "simhash")
-    a = s.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sa"))
-    b = s.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sb"))
-    return (cand.join(a, "id_a").join(b, "id_b")
-            .withColumn("hamming",
-                        F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
-            .where(F.col("hamming") <= cfg.simhash_hamming_threshold)
-            .select("id_a", "id_b", "hamming"))
+    cand = _band_candidates(spark, sf_dir, cfg, _simhash_bands)
+    return _exact_jaccard_verify(spark, sf_dir, cand, threshold)

@@ -55,7 +55,6 @@ FLAT_ARROW_ROWS = 8192
 class PipelineResult:
     clusters: DataFrame
     dup_pairs: DataFrame
-    verified: DataFrame
     stats: dict
 
 
@@ -375,4 +374,4 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
     stats["elapsed_s"] = time.monotonic() - t_start
     return PipelineResult(clusters=clusters, dup_pairs=dup_pairs,
-                          verified=verified, stats=stats)
+                          stats=stats)

@@ -33,12 +33,19 @@ JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
 JAVA_OPTIONS = "-Djava.security.manager=allow"
 
 
+def default_cpus() -> int:
+    """local[N] when the caller names none: SPARK_GRAFT_CPUS if set, else
+    the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None,
               iceberg_warehouse: str | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 32)
     if iceberg_warehouse is not None:

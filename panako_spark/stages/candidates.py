@@ -243,7 +243,9 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     superlinear (measured: at 69.7k images the scaled cap of 69 made
     the tile join dominate the whole pipeline); fixed, tile-channel
     volume stays a bounded constant factor on the linear landmark term.
-    The golden sibling applies the identical fixed cap.
+    The golden sibling applies the identical fixed cap. So `n_images`
+    does not change the result; the parameter stays because perfbench's
+    traced replay passes it by name.
 
     The store side is scoped to STANDARD-window prints (is_std): dense
     rescue extras double this channel's (dominant) join cost while the

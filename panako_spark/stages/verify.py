@@ -145,12 +145,15 @@ def _frame(rows: list, dtypes: dict) -> pd.DataFrame:
     return pd.DataFrame(dict(zip(dtypes, zip(*rows))))
 
 
-def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
+# ids are int64 iids or string image_ids; an empty object column
+# converts to either Arrow type
+_PAIR_DTYPES = {"id_a": "object", "id_b": "object",
+                **{name: d for name, _, d in _TAIL}}
+
+
+def make_verify_batches(cfg: PanakoConfig):
     """Q5-Q13 kernel for the landmark channel: one run per canonical
     (id_a, id_b) pair, BOTH query orientations tried, best score kept."""
-    id_dtype = "int64" if numeric_ids else "str"
-    dtypes = {"id_a": id_dtype, "id_b": id_dtype,
-              **{name: d for name, _, d in _TAIL}}
 
     def verify_run(cols, lo, a_t, a_f, b_t, b_f):
         res = verify_pair(a_t, a_f, b_t, b_f, cfg)
@@ -164,14 +167,13 @@ def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
     def verify_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _frame(_verify_runs(it, ("id_a", "id_b"),
                                   cfg.min_unfiltered_hits, verify_run),
-                     dtypes)
+                     _PAIR_DTYPES)
 
     return verify_batches
 
 
 _DIRECTED_KEYS = ("id_q", "id_r", "tile_id")
-# ids are int64 (tile channel) or strings (monitor); an empty object
-# column converts to either Arrow type
+# int64 ids on the tile channel, strings on the monitor
 _DIRECTED_DTYPES = {"id_q": "object", "id_r": "object", "tile_id": "int32",
                     **{name: d for name, _, d in _TAIL}}
 
@@ -265,5 +267,4 @@ def run_verify(hits: DataFrame, cfg: PanakoConfig,
                         cfg.min_unfiltered_hits)
     id_type = T.LongType() if numeric_ids else T.StringType()
     schema = verified_schema([("id_a", id_type), ("id_b", id_type)])
-    return gated.mapInPandas(
-        make_verify_batches(cfg, numeric_ids=numeric_ids), schema)
+    return gated.mapInPandas(make_verify_batches(cfg), schema)

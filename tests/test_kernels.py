@@ -189,12 +189,10 @@ def test_simhash_near_vs_far(cfg):
     hf = simhash.simhash(minhash.hash_shingles(minhash.token_shingles(far, 3)))
     assert simhash.hamming(hb, hn) < simhash.hamming(hb, hf)
     assert simhash.hamming(hb, hb) == 0
-
-
-def test_hamming_batch():
-    a = np.array([0, -1, 12345], dtype=np.int64)
-    b = np.array([0, 0, 12345], dtype=np.int64)
-    assert list(simhash.hamming_batch(a, b)) == [0, 64, 0]
+    # negative int64 fingerprints are masked to 64 bits
+    assert simhash.hamming(0, 0) == 0
+    assert simhash.hamming(-1, 0) == 64
+    assert simhash.hamming(12345, 12345) == 0
 
 
 def test_simhash_band_keys(cfg):
@@ -359,7 +357,7 @@ def test_verify_kernel_run_carry(cfg):
     str_rows = [(f"q{a}", f"r{b}", tile, tf)
                 for a, b, tile, tf in sorted(tile_rows)]
     cases = [
-        (lambda: make_verify_batches(cfg, numeric_ids=True),
+        (lambda: make_verify_batches(cfg),
          pd.DataFrame(lm_rows, columns=["id_a", "id_b", "tf"]),
          ["id_a", "id_b"], 3),
         (lambda: make_directed_verify_batches(cfg),
@@ -442,7 +440,8 @@ def test_config_overrides_round_trip():
     with pytest.raises(ValueError, match="unknown config key"):
         config_with_overrides(["not_a_key=1"])
     # deleted options are refused, not silently accepted
-    for gone in ("tile_rescue=false", "tile_query_range=2"):
+    for gone in ("tile_rescue=false", "tile_query_range=2",
+                 "simhash_bits=64"):
         with pytest.raises(ValueError, match="unknown config key"):
             config_with_overrides([gone])
     with pytest.raises(ValueError, match="boolean"):

@@ -34,7 +34,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from panako_spark.config import PanakoConfig
 from panako_spark.io import avro_lite
 from panako_spark.kernels import minhash as mh
-from panako_spark.kernels import peaks, simhash, suffix
+from panako_spark.kernels import peaks, suffix
 
 SETTINGS = dict(
     max_examples=40,
@@ -185,20 +185,6 @@ def test_minhash_batch_matches_per_doc(lists):
     assert batched.shape == (len(lists), CFG.minhash_perms)
     for i, h in enumerate(hash_lists):
         np.testing.assert_array_equal(batched[i], mh.minhash_signature(h, CFG))
-
-
-@given(
-    a=st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=16),
-    b=st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=16),
-)
-@settings(**SETTINGS)
-def test_hamming_batch_matches_scalar(a, b):
-    n = min(len(a), len(b))
-    av = np.array(a[:n], dtype=np.int64)
-    bv = np.array(b[:n], dtype=np.int64)
-    got = simhash.hamming_batch(av, bv)
-    want = [simhash.hamming(int(x), int(y)) for x, y in zip(av, bv)]
-    assert got.tolist() == want
 
 
 # -------------------------------------------------------------- landmarks --

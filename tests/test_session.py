@@ -1,6 +1,10 @@
 """Session factory conf handling (no JVM started)."""
 
-from panako_spark.session import JAVA_OPTIONS, JAVA_OPTIONS_KEY, merged_conf
+import os
+
+from panako_spark.session import (
+    JAVA_OPTIONS, JAVA_OPTIONS_KEY, default_cpus, merged_conf,
+)
 
 
 def test_caller_java_options_append_to_the_sessions_own():
@@ -17,3 +21,12 @@ def test_session_java_options_without_caller_conf():
     assert merged_conf(None) == {JAVA_OPTIONS_KEY: JAVA_OPTIONS}
     assert merged_conf({JAVA_OPTIONS_KEY: ""}) == {
         JAVA_OPTIONS_KEY: JAVA_OPTIONS}
+
+
+def test_default_cpus_env_then_affinity(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cpus() == len(os.sched_getaffinity(0))

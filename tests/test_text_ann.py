@@ -1,6 +1,9 @@
 """Text-analysis / ANN operator tests beyond the DuckDB oracle gate:
 tier equivalence for the exact near-dup operator, hot-shingle skew
-stats, and the LSH id-only pairing shape."""
+stats, the LSH id-only pairing shape, and the document-dedup operators
+against their DuckDB oracle."""
+
+import os
 
 import pytest
 
@@ -10,6 +13,7 @@ from panako_spark.functions import text as TXT
 from panako_spark.operators import ann as ANN
 
 SF = "/root/testdata/sf0.001"
+SF01 = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 def test_cosine_near_dup_tiers_identical_pairs(spark):
@@ -48,11 +52,10 @@ def test_ivf_trained_beats_untrained_recall(spark):
     the claim and the DuckDB oracle are stated against (ann.ivf_topk
     docstring; at the 250-vector sf0.001 scale the 16-cell layout is
     over-parameterized and recall is noisier)."""
-    sf01 = "/root/testdata/sf0.01"
     brute = {(r.query_id, r.neighbor_id)
-             for r in ANN.cosine_topk_bruteforce(spark, sf01).collect()}
+             for r in ANN.cosine_topk_bruteforce(spark, SF01).collect()}
     ivf = {(r.query_id, r.neighbor_id)
-           for r in ANN.ivf_topk(spark, sf01, n_probe=8).collect()}
+           for r in ANN.ivf_topk(spark, SF01, n_probe=8).collect()}
     recall = len(brute & ivf) / len(brute)
     assert recall >= 0.95, recall
 
@@ -146,3 +149,27 @@ def test_ann_repeat_calls_run_no_probe_actions(spark, monkeypatch):
     ANN._EMB_META.pop(sig)
     ANN.cosine_near_dup_pairs(spark, SF, n=500)
     ANN.lsh_bucketed_neighbors(spark, SF, dim=32)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.01 fixture absent")
+@pytest.mark.parametrize("name", ["minhash_dup_pairs_docs",
+                                  "simhash_dup_pairs_docs"])
+def test_doc_dedup_operators_match_duckdb_oracle(spark, name):
+    """The documents dedup operators, as the driver runs them, return
+    bit-exactly the rows of their DuckDB oracle: the LSH bands find every
+    pair at exact Jaccard >= 0.5 (operators/dedup.py docstring)."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from tools.check_oracles import rowset
+
+    sdf = E.queries()[name](spark, SF01)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{SF01}/documents.parquet')")
+    orows = con.execute(E.oracle_sql()[name]).fetchall()
+    ocols = [d[0] for d in con.description]
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert srows
+    assert rowset(sdf.columns, srows) == rowset(ocols, orows)
