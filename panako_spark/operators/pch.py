@@ -117,22 +117,19 @@ def pch_circular_match(spark: SparkSession, sf_dir: str,
                       F.explode(F.array(bucket, bucket + 1)).alias("key")))
     from panako_spark.stages.candidates import pairs_from_keys
 
-    caches: list = []
-    cand, stats = pairs_from_keys(keyed, cap=pair_cap, id_col="user_id",
-                                  caches=caches)
+    cand, stats = pairs_from_keys(keyed, cap=pair_cap, id_col="user_id")
     # This operator claims EXACT equivalence to the all-pairs scan, so a
     # capped (salted) area bucket is a correctness deviation, not an
     # approximation: pairs straddling two salt sub-buckets would drop
-    # SILENTLY. Materialize the one-row stats aggregate (tiny: counts is
-    # cached and has one row per area-bucket key) and fail loudly when
-    # any bucket overflows, instead of letting the result set shrink.
+    # SILENTLY. Collect the one-row stats aggregate (its own small
+    # groupBy over the area-bucket keys; nothing is cached) and fail
+    # loudly when any bucket overflows, instead of letting the result
+    # set shrink.
     srow = stats.collect()[0]
     _LOG.info("pch area-band pair stats: n_keys=%d n_hot_keys=%d "
               "dropped_cross_pairs_estimate=%d (cap=%d)",
               srow["n_keys"], srow["n_hot_keys"],
               srow["dropped_cross_pairs_estimate"], pair_cap)
-    for c in caches:
-        c.unpersist()
     if srow["n_hot_keys"] > 0:
         raise ValueError(
             f"pch_circular_match: {srow['n_hot_keys']} area bucket(s) "

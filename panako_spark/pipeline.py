@@ -4,6 +4,7 @@ store -> query -> dedup lifecycle (SURVEY.md §3):
     images (Iceberg/parquet)
       -> extract [mapInPandas, one decode pass, in-memory persist]
       -> prints / signatures                          checkpoints
+      -> per-hash image count (stop words)           persisted, shared
       -> three concurrent branches:
          landmark ±range self-join -> verify [mapInPandas Q5-Q13 kernel]
            -> rescue gate                             checkpoint: verified
@@ -14,6 +15,7 @@ store -> query -> dedup lifecycle (SURVEY.md §3):
          crop-rescue tile probes -> tile verify -> rescue gate
                                                       checkpoint: tile_pairs
       -> connected components (large-star/small-star) checkpoint: clusters
+         ∥ one lineage append                         lineage
 
 Each branch's pairs meet the per-image relation once per side: that one
 join (candidates.resolve_pairs) gates the pair and resolves its int64
@@ -181,14 +183,19 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         (Spark schedules all three job DAGs; barrier gaps and
         Python-worker phases of one branch are filled with the others'
         tasks);
-    (b) no small job on the driver's serial path: the extract lineage
-        aggregate is collected on a fourth pool thread while the
-        branches run, the fused band stats are collected inside the
-        pairs branch (filling the key-count cache its write reuses),
-        checkpoint re-reads carry the written schema (no footer-
-        inference job), and the one consolidated lineage append at the
-        end writes an Arrow-built LocalTableScan (no Python worker);
-    (c) no dup_pairs re-write — the union of the three checkpointed
+    (b) no repeated work across the branches: the landmark and tile
+        probes read their stop-word sets from ONE persisted per-hash
+        image count (candidates.hot_hash_counts), computed by whichever
+        branch scans it first;
+    (c) no small job on the driver's serial path: the extract lineage
+        aggregate and the fused band stats are collected on pool
+        threads while the branches write, checkpoint re-reads carry the
+        written schema (no footer-inference job), and the one
+        consolidated lineage append (an Arrow-built LocalTableScan, no
+        Python worker) runs on a pool thread, labelled
+        panako:lineage, while connected components runs; it is awaited
+        before the call returns;
+    (d) no dup_pairs re-write — the union of the three checkpointed
         branch tables IS the pair set.
 
     If any stage raises, every pool thread is waited for and the run's
@@ -201,7 +208,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
     lineage_frames: list = []
     # persisted frames this run releases: the extract cache and the
-    # fused branch's key counts (repeated runs in one session must not
+    # shared stop-word counts (repeated runs in one session must not
     # leak executor memory)
     held: list = []
 
@@ -219,7 +226,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         except Exception:  # noqa: BLE001 — labels must never fail a run
             pass
 
-    ex = ThreadPoolExecutor(max_workers=4, thread_name_prefix="panako-run")
+    ex = ThreadPoolExecutor(max_workers=5, thread_name_prefix="panako-run")
     try:
         # census (tiny id-only aggregate) overlaps the extract scan
         def _census():
@@ -274,6 +281,12 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
         # ---- landmark verify ∥ fused signature channels ---------------------
         arrow_batch(FLAT_ARROW_ROWS)
+        # one per-hash image count feeds both probe channels' stop-word
+        # sets; the first branch to scan it fills the cache
+        hot_counts = C.hot_hash_counts(prints, cfg)
+        if hot_counts is not None:
+            hot_counts = hot_counts.persist()
+            held.append(hot_counts)
 
         def compute_verified() -> DataFrame:
             # Q5's min-hits gate runs inside the verify kernel (one
@@ -284,18 +297,24 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
             v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
-                                           n_images=n_ids),
+                                           n_images=n_ids,
+                                           hot_counts=hot_counts),
                            cfg, numeric_ids=True)
             return rescue_gate(v, signatures, cfg)
 
-        band_rows: list = []
+        band_futs: list = []
 
         def compute_fused() -> DataFrame:
-            fused, fused_stats = C.fused_candidate_pairs(
-                signatures, images, cfg, caches=held)
-            # collected here, before the write: this job fills the
-            # key-count cache that the write's salted self-join reuses
-            band_rows.extend(fused_stats.collect())
+            fused, fused_stats = C.fused_candidate_pairs(signatures, images,
+                                                         cfg)
+
+            def collect_bands() -> list:
+                label("pairs")
+                return fused_stats.collect()
+
+            # the band stats are their own small aggregate: collected on
+            # a pool thread next to the pairs write, not before it
+            band_futs.append(ex.submit(collect_bands))
             return fused.select("channel", "id_a", "id_b")
 
         def compute_tile_pairs() -> DataFrame:
@@ -317,7 +336,8 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                       .join(signatures.select("image_id", "iid"),
                             "image_id"))
             tv = run_tile_verify(C.tile_hits(tp, prints, cfg,
-                                             n_images=n_ids), cfg)
+                                             n_images=n_ids,
+                                             hot_counts=hot_counts), cfg)
             return (rescue_gate(tv, signatures, cfg, ids=("id_q", "id_r"))
                     .where(F.col("score") >= cfg.tile_min_score)
                     .select("id_a", "id_b").distinct())
@@ -333,6 +353,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         fused_pairs = fut_f.result()
         tile_pairs = fut_t.result()
         lineage_rows = lineage_fut.result() if lineage_fut else []
+        band_rows = [r for f in band_futs for r in f.result()]
         release()
 
         dup_pairs = (verified
@@ -352,7 +373,19 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
              int(r["dropped_cross_pairs_estimate"]), 0, store.run_id)
             for r in band_rows)
 
-        # ---- clustering -----------------------------------------------------
+        # ---- one consolidated lineage append ∥ clustering -------------------
+        def append_lineage() -> None:
+            # a handful of driver-local rows, in one slice: an Arrow-built
+            # LocalTableScan, so the append job is JVM-only. It runs no
+            # shuffle, so connected_components' shuffle-partition cap
+            # cannot reach it.
+            label("lineage")
+            store.append_lineage(local_frame(
+                spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1))
+
+        lineage_append = (ex.submit(append_lineage) if lineage_rows
+                          else None)
+
         clusters = timed("cluster", lambda: store.read_or_compute(
             spark, "clusters",
             lambda: connected_components(
@@ -361,13 +394,8 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                 # rows included — no rescan of the raw images for ids
                 signatures.select("image_id"),
                 cfg.cc_max_iterations)))
-
-        # ---- one consolidated lineage append --------------------------------
-        if lineage_rows:
-            # a handful of driver-local rows, in one slice: an Arrow-built
-            # LocalTableScan, so the append job is JVM-only
-            store.append_lineage(local_frame(
-                spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1))
+        if lineage_append is not None:
+            lineage_append.result()
     finally:
         ex.shutdown(wait=True)
         release()

@@ -82,6 +82,15 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         # the same envelope the 64 MB broadcast threshold assumes.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 "128m")
+        # Let AQE coalesce a cached plan's final stage by bytes, like any
+        # other stage. Spark's default pins a cached aggregate at
+        # spark.sql.shuffle.partitions, and every consumer then scans
+        # that many mostly empty partitions: the pipeline's shared
+        # stop-word counts (a few rows) cost 32 tasks per scan, four
+        # scans per run. Outputs are the same; only the partition count
+        # a cache hands its consumers changes.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory",

@@ -8,7 +8,9 @@ Channels (SURVEY.md §7 step 5 / north_star):
   tile      — exact-hash probe of the crop-rescue tile prints against
               the stored standard-window prints (tile_hits); both
               channels and the streaming monitor share one probe join
-              (_probe_hits)
+              (_probe_hits); both read their stop-word sets from one
+              per-hash image count (hot_hash_counts) that the pipeline
+              computes once per run
   signature — minhash / simhash / phash band keys and caption_exact /
               caption_substring keys from ONE keyed pass over
               signatures, fused into ONE channel-tagged salted
@@ -21,9 +23,10 @@ MinHash/substring gates, the pipeline's rescue gate) and resolves the
 int64 ids to canonical string ids.
 
 Skew (north_rule "hot-band splitting"): `pairs_from_keys` counts members
-per key; keys above `band_pair_cap` are split into ceil(n/cap) salted
-sub-keys — pairing happens within sub-keys only, the dropped cross-salt
-pair count is reported (never silently) via the returned stats row.
+per key (a window count on the keyed exchange); keys above
+`band_pair_cap` are split into ceil(n/cap) salted sub-keys — pairing
+happens within sub-keys only, the dropped cross-salt pair count is
+reported (never silently) via the returned stats row.
 At 10^12 rows the hot keys are blank images / boilerplate captions; capping
 them is the difference between a job that finishes and one that doesn't.
 """
@@ -31,7 +34,7 @@ them is the difference between a job that finishes and one that doesn't.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from panako_spark.config import PanakoConfig
 
@@ -39,42 +42,37 @@ from panako_spark.config import PanakoConfig
 def pairs_from_keys_multi(keyed: DataFrame, cap: int,
                           group_col: str = "channel",
                           key_col: str = "key", id_col: str = "image_id",
-                          caches: list | None = None, keep=None
-                          ) -> tuple[DataFrame, DataFrame]:
+                          keep=None) -> tuple[DataFrame, DataFrame]:
     """(channel, key, id, *vals) -> distinct pairs (channel, id_a < id_b)
     + stats.
 
     The fused pairing primitive: every LSH-style channel shares ONE
-    explode -> groupBy -> salted self-join dataflow (channel rides in the
+    keyed exchange -> salted self-join dataflow (channel rides in the
     join key), so five channels cost one set of shuffle stages instead of
-    five. Hot keys (> cap members) are salted into ceil(n/cap) sub-buckets
+    five. Each key's member count is a window count over the keyed rows'
+    own (channel, key) exchange — no count frame is cached or joined
+    back, so the pairs run as one job chain with nothing to unpersist.
+    Hot keys (> cap members) are salted into ceil(n/cap) sub-buckets
     by xxhash64(id); pairs form within sub-buckets only. Stats has one row
     per channel: (channel, n_keys, n_hot_keys,
     dropped_cross_pairs_estimate) — dropped pairs are reported, never
-    silent (north_rule hot-band splitting).
+    silent (north_rule hot-band splitting). It is a lazy aggregate over
+    its own uncached groupBy: a caller collects it when, and if, it
+    wants the numbers, alongside the pairs rather than before them.
 
     Every other keyed column v rides to both sides as v_a / v_b, and
     `keep` (a predicate over them, like _probe_hits' `keep`) is ANDed
     with id_a < id_b before the distinct: a gate that needs only
     per-row values runs inside the self-join, with no verify join.
-
-    Cached intermediates are appended to `caches` (if given) so the
-    caller can unpersist them once the returned frames are consumed —
-    repeated invocations in one session must not leak executor memory.
     """
-    # counts is tiny (one row per key) and read twice: by the salted
-    # re-join AND the stats aggregate — cache it so the explode+groupBy
-    # shuffle runs once
-    counts = (keyed.groupBy(group_col, key_col)
-              .agg(F.count("*").alias("_n")).cache())
-    if caches is not None:
-        caches.append(counts)
-    keyed2 = keyed.join(counts, [group_col, key_col])
-    n_salt = F.ceil(F.col("_n") / cap).cast("int")
-    salted = keyed2.withColumn(
+    n = F.col("_n")
+    counted = keyed.withColumn(
+        "_n", F.count("*").over(Window.partitionBy(group_col, key_col)))
+    salted = counted.withColumn(
         "_salt",
-        F.when(F.col("_n") > cap,
-               F.pmod(F.xxhash64(F.col(id_col)), n_salt)).otherwise(F.lit(0)))
+        F.when(n > cap, F.pmod(F.xxhash64(F.col(id_col)),
+                               F.ceil(n / cap).cast("int")))
+        .otherwise(F.lit(0)))
     vals = [c for c in keyed.columns if c not in (group_col, key_col, id_col)]
 
     def side(s: str) -> DataFrame:
@@ -86,55 +84,83 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
     pairs = (side("a").join(side("b"), [group_col, "_k", "_salt"])
              .where(cond if keep is None else cond & keep)
              .select(group_col, "id_a", "id_b").distinct())
-    stats = counts.groupBy(group_col).agg(
-        F.count("*").alias("n_keys"),
-        F.count(F.when(F.col("_n") > cap, 1)).alias("n_hot_keys"),
-        F.coalesce(F.sum(F.when(
-            F.col("_n") > cap,
-            (F.col("_n") * (F.col("_n") - 1) / 2
-             - F.ceil(F.col("_n") / cap)
-             * (F.floor(F.col("_n") / F.ceil(F.col("_n") / cap))
-                * (F.floor(F.col("_n") / F.ceil(F.col("_n") / cap)) - 1) / 2))
-            .cast("long"))), F.lit(0)).alias("dropped_cross_pairs_estimate"))
+    per_sub = F.floor(n / F.ceil(n / cap))
+    stats = (keyed.groupBy(group_col, key_col).agg(F.count("*").alias("_n"))
+             .groupBy(group_col).agg(
+                 F.count("*").alias("n_keys"),
+                 F.count(F.when(n > cap, 1)).alias("n_hot_keys"),
+                 F.coalesce(F.sum(F.when(
+                     n > cap,
+                     (n * (n - 1) / 2
+                      - F.ceil(n / cap) * (per_sub * (per_sub - 1) / 2))
+                     .cast("long"))), F.lit(0))
+                 .alias("dropped_cross_pairs_estimate")))
     return pairs, stats
 
 
 def pairs_from_keys(keyed: DataFrame, cap: int,
-                    key_col: str = "key", id_col: str = "image_id",
-                    caches: list | None = None
+                    key_col: str = "key", id_col: str = "image_id"
                     ) -> tuple[DataFrame, DataFrame]:
     """Single-channel wrapper over pairs_from_keys_multi (the documents
     and PCH dedup operators use it); stats row drops the channel
     column."""
     tagged = keyed.select(F.lit("only").alias("_ch"), key_col, id_col)
     pairs, stats = pairs_from_keys_multi(tagged, cap, group_col="_ch",
-                                         key_col=key_col, id_col=id_col,
-                                         caches=caches)
+                                         key_col=key_col, id_col=id_col)
     return (pairs.select("id_a", "id_b"),
             stats.select("n_keys", "n_hot_keys",
                          "dropped_cross_pairs_estimate"))
 
 
 # --------------------------------------------------------------- landmark ---
+def _hash_image_counts(prints: DataFrame) -> DataFrame:
+    return (prints.groupBy("hash")
+            .agg(F.countDistinct("image_id").alias("_imgs")))
+
+
+def hot_hash_counts(prints: DataFrame, cfg: PanakoConfig) -> DataFrame | None:
+    """(hash, _imgs) for every hash found in more than
+    cfg.hash_max_images distinct images, or None when the cap is
+    disabled (<= 0).
+
+    effective_hash_max_images(n) = max(hash_max_images, frac * n) is
+    never below the fixed cap, so this ONE relation holds both channels'
+    stop-word sets: the tile channel's is all of it, the landmark
+    channel's is its rows with _imgs above the effective cap. A caller
+    that runs both channels persists it once and hands it to each
+    (`hot_counts=`), so the per-hash distinct-image count over every
+    print runs once per run instead of once per channel.
+
+    The count is over image_id, not iid: an incrementally grown store
+    can give one image_id two iids, and the golden matcher counts
+    distinct image ids."""
+    if cfg.hash_max_images <= 0:
+        return None
+    return (_hash_image_counts(prints)
+            .where(F.col("_imgs") > cfg.hash_max_images))
+
+
 def hot_hash_set(prints: DataFrame, cfg: PanakoConfig,
                  n_images: int | None = None,
-                 cap: int | None = None) -> DataFrame | None:
+                 cap: int | None = None,
+                 hot_counts: DataFrame | None = None) -> DataFrame | None:
     """Stop-word hashes (> cap distinct images; cap defaults to the
     corpus-aware effective_hash_max_images), or None when disabled.
     Shared by the landmark self-join and the tile-probe channel — the
-    golden matcher applies the identical rule at the identical cap."""
+    golden matcher applies the identical rule at the identical cap.
+    Given `hot_counts` (hot_hash_counts of the same prints), the set is
+    a filter over it; without, the count runs here."""
     if cap is None:
         cap = cfg.effective_hash_max_images(n_images)
     if cap <= 0:
         return None
-    return (prints.groupBy("hash")
-            .agg(F.countDistinct("image_id").alias("_imgs"))
-            .where(F.col("_imgs") > cap)
-            .select("hash"))
+    counts = _hash_image_counts(prints) if hot_counts is None else hot_counts
+    return counts.where(F.col("_imgs") > cap).select("hash")
 
 
 def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
-                    n_images: int | None = None) -> DataFrame:
+                    n_images: int | None = None,
+                    hot_counts: DataFrame | None = None) -> DataFrame:
     """Drop stop-word hashes present in > effective_hash_max_images images.
 
     The golden matcher applies the identical rule (same config + corpus
@@ -142,7 +168,7 @@ def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
     noise amplifiers. The cap is corpus-size-aware (config.py) so large
     real-world content clusters don't silently lose the landmark channel.
     """
-    hot = hot_hash_set(prints, cfg, n_images)
+    hot = hot_hash_set(prints, cfg, n_images, hot_counts=hot_counts)
     if hot is None:
         return prints
     return prints.join(hot, "hash", "left_anti")
@@ -195,7 +221,8 @@ def _probe_hits(probe: DataFrame, store: DataFrame, r: int,
 
 def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
                   numeric_ids: bool = False,
-                  n_images: int | None = None) -> DataFrame:
+                  n_images: int | None = None,
+                  hot_counts: DataFrame | None = None) -> DataFrame:
     """prints -> raw hit list per candidate pair (canonical id_a < id_b).
 
     The ±range probe relation |h_a - h_b| <= query_range is symmetric, so
@@ -210,8 +237,12 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
     verify kernel). The id is the dictionary-encoded `iid` minted at
     ingest (extract.run_extract — unique by construction at any
     cardinality, id map persisted in the checkpoints).
+
+    `hot_counts` (hot_hash_counts of the same prints) supplies the
+    stop-word count instead of computing it here.
     """
-    p = hot_hash_filter(prints, cfg, n_images=n_images)
+    p = hot_hash_filter(prints, cfg, n_images=n_images,
+                        hot_counts=hot_counts)
     pid = F.col("iid" if numeric_ids else "image_id")
     return _probe_hits(p.select(pid.alias("id_a"), *_PRINT_COLS),
                        p.select(pid.alias("id_b"), *_PRINT_COLS),
@@ -219,7 +250,8 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
 
 
 def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
-              n_images: int | None = None) -> DataFrame:
+              n_images: int | None = None,
+              hot_counts: DataFrame | None = None) -> DataFrame:
     """Crop-rescue channel: tile probe prints (query side) exact-hash
     against the stored prints — DIRECTED hits (id_q, id_r, tile_id, tf)
     per (query image, stored image, tile), the input of
@@ -254,9 +286,11 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     dense∩dense intersections (prints_with_rescue docstring; golden
     sibling: tile_rescue_pairs' std_index_only). The hot-hash set is
     computed on the FULL print relation first, like the golden
-    matcher's _hot_hashes, so stop-word parity is unaffected."""
+    matcher's _hot_hashes, so stop-word parity is unaffected; given
+    `hot_counts` (hot_hash_counts of the same prints), it is read from
+    there instead."""
     hot = hot_hash_set(prints, cfg, n_images=n_images,
-                       cap=cfg.hash_max_images)
+                       cap=cfg.hash_max_images, hot_counts=hot_counts)
     std = prints.where(F.col("is_std"))
     store = std if hot is None else std.join(hot, "hash", "left_anti")
     q = (tile_prints if hot is None
@@ -366,7 +400,9 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     in a single codegen projection and resolves the string ids.
 
     Returns (pairs(channel, id_a, id_b), stats(channel, n_keys,
-    n_hot_keys, dropped_cross_pairs_estimate)).
+    n_hot_keys, dropped_cross_pairs_estimate)); both are lazy and
+    nothing is cached, so `caches` (kept because perfbench's traced
+    replay passes it) receives nothing.
 
     Shuffle-width discipline: the keyed relation (every band of every
     channel) and the salted self-join are the fused flow's volume, so
@@ -393,7 +429,7 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
                .when(ch == _CH_PHASH, ham <= cfg.phash_hamming_threshold)
                .otherwise(True))
     cand, stats = pairs_from_keys_multi(keyed, cfg.band_pair_cap,
-                                        caches=caches, keep=bits_ok)
+                                        keep=bits_ok)
 
     # captions live on the input table; the per-image relation takes
     # them through the persisted iid map (a left join: an image without

@@ -4,8 +4,9 @@ north_star: "verified pairs are clustered by an iterative
 large-star/small-star connected-components loop on DataFrames". Algorithm
 from Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SOCC'14) — O(log n) rounds even on path graphs, no collect_list (the
-per-node neighbor set is never materialized; both stars are a groupBy-min
-plus a re-join, so the hottest node costs one shuffle row per edge).
+per-node neighbor set is never materialized; each star takes every
+node's minimum from a min(dst) window over one src exchange, so the
+hottest node costs one shuffle row per edge and no re-join).
 
 No GraphFrames dependency (SURVEY.md §4 custom-work item 2). Each
 large-star + small-star round is localCheckpoint()ed to truncate lineage
@@ -21,39 +22,44 @@ union-find golden in kernels/matcher.py).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+
+
+def _with_min(edges: DataFrame) -> DataFrame:
+    """Every edge row plus `_m`, the minimum dst of its src: a window
+    over one src exchange, instead of a groupBy-min joined back (which
+    shuffles the edges a second time for the join)."""
+    return edges.withColumn(
+        "_m", F.min("dst").over(Window.partitionBy("src")))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every larger neighbor of u to u's min neighborhood label.
 
-    No trailing distinct: the following small-star's groupBy-min is
+    No trailing distinct: the following small-star's min is
     duplicate-insensitive and its own output IS distinct, so within a
-    round duplicates only inflate one join's input — cheaper than the
-    extra full shuffle a distinct here costs (one fewer stage per round;
-    the driver-synchronized round count is the scaling-limiting term).
+    round duplicates only inflate one exchange's input — cheaper than
+    the extra full shuffle a distinct here costs (one fewer stage per
+    round; the driver-synchronized round count is the scaling-limiting
+    term). The same holds for the loop's input edges, which are not
+    de-duplicated either.
     """
     sym = edges.union(edges.select(F.col("dst").alias("src"),
                                    F.col("src").alias("dst")))
-    mins = (sym.groupBy("src")
-            .agg(F.min("dst").alias("_m"))
-            .select("src", F.least("src", "_m").alias("_m")))
-    return (sym.join(mins, "src")
-            .where(F.col("dst") > F.col("src"))
+    m = _with_min(sym).withColumn("_m", F.least("src", "_m"))
+    return (m.where(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
-            .union(mins.where(F.col("src") != F.col("_m"))
+            .union(m.where(F.col("src") != F.col("_m"))
                    .select("src", F.col("_m").alias("dst"))))
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Point all smaller-or-equal neighbors at the minimum."""
-    directed = edges.select(F.greatest("src", "dst").alias("src"),
-                            F.least("src", "dst").alias("dst"))
-    mins = directed.groupBy("src").agg(F.min("dst").alias("_m"))
-    return (directed.join(mins, "src")
-            .where(F.col("dst") != F.col("_m"))
+    m = _with_min(edges.select(F.greatest("src", "dst").alias("src"),
+                               F.least("src", "dst").alias("dst")))
+    return (m.where(F.col("dst") != F.col("_m"))
             .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
-            .union(mins.select("src", F.col("_m").alias("dst")))
+            .union(m.select("src", F.col("_m").alias("dst")))
             .distinct())
 
 
@@ -86,11 +92,12 @@ def connected_components(pairs: DataFrame, all_ids: DataFrame,
     Raises RuntimeError if `max_iterations` rounds pass without reaching
     a star forest — labels of an unconverged graph are never returned.
 
-    Cost per round: the two stars are groupBy-mins, re-joins and one
-    distinct — a dozen small exchanges in the physical plan, which
-    repeats the shared mins subtrees per consumer — plus the star-forest
-    check's one aggregation, which is the round's only action (it
-    materializes the lazy checkpoint). The bench corpus's graph (small
+    Cost per round: one src exchange per star (its window min feeds both
+    of the star's outputs) and small-star's one distinct, plus the
+    star-forest check's one aggregation, which is the round's only
+    action (it materializes the lazy checkpoint). The input is neither
+    de-duplicated nor checkpointed: both stars are duplicate-insensitive
+    and small-star's output is distinct. The bench corpus's graph (small
     near-cliques of a base image and its dups) is a star forest after
     one round.
 
@@ -104,15 +111,15 @@ def connected_components(pairs: DataFrame, all_ids: DataFrame,
     (restored after the last check; the lazy label join left for the
     caller is one tiny AQE-coalesced shuffle either way). The cap is NOT
     thread-safe vs concurrent planning on the same session —
-    run_pipeline calls this after the concurrent branches have joined.
+    run_pipeline calls this after the concurrent branches have joined;
+    the only job it overlaps, the lineage append, runs no shuffle.
     """
     spark = pairs.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
     orig_parts = spark.conf.get(conf_key, "32")
     edges = (pairs.select(F.col("id_a").alias("src"),
                           F.col("id_b").alias("dst"))
-             .where(F.col("src") != F.col("dst")).distinct()
-             .localCheckpoint(eager=False))
+             .where(F.col("src") != F.col("dst")))
     spark.conf.set(conf_key, str(min(int(orig_parts), 32)))
     try:
         for _ in range(max_iterations):

@@ -5,6 +5,8 @@ dimension is small, filter pushdown to the parquet scan, column pruning,
 zero Python nodes in JVM-only operators, bounded shuffle counts.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -175,15 +177,34 @@ def test_probe_join_converts_to_shuffled_hash(spark, cfg):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
-    """The fused signature flow's shape: the keyed relation is ONE
-    generator over ONE signatures scan (no per-channel union), the only
-    cached intermediate is the key-count frame, and the candidate pairs
-    meet the per-image relation exactly once per side — the bit gates
-    run inside the self-join, the MinHash/substring gates and the id
-    resolve share that one join pair."""
-    import re
+def _subtrees(plan: str, marker: str) -> list[str]:
+    """The text of every subtree of a treeString whose root line holds
+    `marker`: the root line plus the lines below it that sit deeper."""
+    lines = plan.splitlines()
 
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = []
+    for i, ln in enumerate(lines):
+        if marker in ln:
+            sub = [ln]
+            for nxt in lines[i + 1:]:
+                if depth(nxt) <= depth(ln):
+                    break
+                sub.append(nxt)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
+    """The fused signature flow's shape: each side of the salted
+    self-join is ONE generator over ONE signatures scan (no per-channel
+    union), whose per-key member count is a Window on the (channel, key)
+    exchange — nothing is cached and no count frame is joined back — and
+    the candidate pairs meet the per-image relation exactly once per
+    side: the bit gates run inside the self-join, the MinHash/substring
+    gates and the id resolve share that one join pair."""
     from panako_spark.stages.candidates import fused_candidate_pairs
 
     perms = cfg.minhash_perms
@@ -200,21 +221,24 @@ def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
          for k in range(20)], "image_id string, caption string")
     caches: list = []
     pairs, _ = fused_candidate_pairs(sigs, images, cfg, caches=caches)
-    try:
-        assert len(caches) == 1, caches
-        (counts,) = caches
-        assert counts.columns == ["channel", "key", "_n"]
-        keyed = counts._jdf.queryExecution().analyzed().toString()
-        assert "Union" not in keyed, keyed
-        assert keyed.count("Generate inline(") == 1, keyed
-        assert keyed.count("Relation [") == 1, keyed
+    assert caches == []
 
-        opt = pairs._jdf.queryExecution().optimizedPlan().toString()
-        assert "Union" not in opt, opt
-        side_joins = [ln for ln in opt.splitlines() if "Join " in ln and
-                      re.search(r"\(id_([ab])#\d+L = id_\1#\d+L\)", ln)]
-        assert len(side_joins) == 2, "\n".join(side_joins)
-        assert pairs.count() > 0
-    finally:
-        for c in caches:
-            c.unpersist()
+    analyzed = pairs._jdf.queryExecution().analyzed().toString()
+    assert "Union" not in analyzed, analyzed
+    # one keyed relation per self-join side, counted by a window over
+    # its (channel, key) partitions
+    keyed = _subtrees(analyzed, "Window [count(1) windowspecdefinition(")
+    assert len(keyed) == 2, analyzed
+    for side in keyed:
+        assert re.search(r"windowspecdefinition\(channel#\d+, key#\d+L, ",
+                         side), side
+        assert side.count("Generate inline(") == 1, side
+        assert side.count("Relation [") == 1, side
+
+    opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in opt, opt
+    assert "Union" not in opt, opt
+    side_joins = [ln for ln in opt.splitlines() if "Join " in ln and
+                  re.search(r"\(id_([ab])#\d+L = id_\1#\d+L\)", ln)]
+    assert len(side_joins) == 2, "\n".join(side_joins)
+    assert pairs.count() > 0

@@ -6,6 +6,7 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from panako_spark.io.checkpoint import CheckpointStore
 from panako_spark.kernels.matcher import connected_components_golden
@@ -102,6 +103,27 @@ def test_cc_multiple_components_and_singletons(spark):
                                         for a, b in pairs}, ids)
     assert got == want
     assert got["x3"] == "x3" and got["x8"] == "x8" and got["x9"] == "x9"
+
+
+_CC_NODES = [f"v{i:02d}" for i in range(12)]
+
+
+@settings(max_examples=12, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(edges=st.lists(st.tuples(st.sampled_from(_CC_NODES),
+                                st.sampled_from(_CC_NODES)), max_size=24))
+def test_cc_matches_union_find_with_duplicate_edges_and_self_loops(
+        spark, edges):
+    """The loop takes its input edges as they come (no distinct): random
+    small graphs with repeated edges in both orientations and self-loops
+    give the union-find labels."""
+    pair_list = edges + [(b, a) for a, b in edges[::2]]
+    pairs = spark.createDataFrame(pair_list, "id_a string, id_b string")
+    all_ids = spark.createDataFrame([(i,) for i in _CC_NODES],
+                                    "image_id string")
+    got = {r["image_id"]: r["cluster_id"]
+           for r in connected_components(pairs, all_ids).collect()}
+    assert got == connected_components_golden(set(pair_list), _CC_NODES)
 
 
 def test_cc_star_and_clique(spark):

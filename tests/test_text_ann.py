@@ -173,3 +173,24 @@ def test_doc_dedup_operators_match_duckdb_oracle(spark, name):
     assert sorted(sdf.columns) == sorted(ocols)
     assert srows
     assert rowset(sdf.columns, srows) == rowset(ocols, orows)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.01 fixture absent")
+def test_signature_operators_persist_nothing(spark, tmp_path):
+    """The salted pairing primitive (candidates.pairs_from_keys) caches
+    nothing, so the operators built on it, run as the driver runs them,
+    leave the session's persisted RDDs as they found them. The fixture is
+    copied first: a path no earlier call has read gives fresh plans, which
+    a cache would not share with an earlier test's."""
+    import shutil
+
+    import __spark_entry__ as E
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF01, sf)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for name in ("minhash_dup_pairs_docs", "simhash_dup_pairs_docs",
+                 "pch_circular_match"):
+        assert E.queries()[name](spark, sf).count() > 0, name
+    assert persisted().size() == before
