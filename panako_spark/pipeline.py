@@ -389,7 +389,9 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         clusters = timed("cluster", lambda: store.read_or_compute(
             spark, "clusters",
             lambda: connected_components(
-                dup_pairs.select("id_a", "id_b").distinct(),
+                # a pair found by two channels needs no distinct: the
+                # loop is duplicate-insensitive
+                dup_pairs.select("id_a", "id_b"),
                 # the persisted id map: one row per input image, err
                 # rows included — no rescan of the raw images for ids
                 signatures.select("image_id"),
