@@ -184,9 +184,10 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         Python-worker phases of one branch are filled with the others'
         tasks);
     (b) no repeated work across the branches: the landmark and tile
-        probes read their stop-word sets from ONE persisted per-hash
-        image count (candidates.hot_hash_counts), computed by whichever
-        branch scans it first;
+        probes build their stop-word sets over ONE persisted per-hash
+        image count (candidates.hot_hash_counts; Spark's cache manager
+        substitutes it into both plans), computed by whichever branch
+        scans it first;
     (c) no small job on the driver's serial path: the extract lineage
         aggregate and the fused band stats are collected on pool
         threads while the branches write, checkpoint re-reads carry the
@@ -194,7 +195,10 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         consolidated lineage append (an Arrow-built LocalTableScan, no
         Python worker) runs on a pool thread, labelled
         panako:lineage, while connected components runs; it is awaited
-        before the call returns;
+        before the call returns, so its error propagates. The append
+        commits independently of clustering: a run whose clustering
+        raises still leaves its lineage and band-stats rows, which
+        describe the branch checkpoints it did write;
     (d) no dup_pairs re-write — the union of the three checkpointed
         branch tables IS the pair set.
 
@@ -282,11 +286,12 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         # ---- landmark verify ∥ fused signature channels ---------------------
         arrow_batch(FLAT_ARROW_ROWS)
         # one per-hash image count feeds both probe channels' stop-word
-        # sets; the first branch to scan it fills the cache
+        # sets (each builds its set over hot_hash_counts, and the cache
+        # manager substitutes this frame); the first branch to scan it
+        # fills the cache
         hot_counts = C.hot_hash_counts(prints, cfg)
         if hot_counts is not None:
-            hot_counts = hot_counts.persist()
-            held.append(hot_counts)
+            held.append(hot_counts.persist())
 
         def compute_verified() -> DataFrame:
             # Q5's min-hits gate runs inside the verify kernel (one
@@ -297,8 +302,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
             v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
-                                           n_images=n_ids,
-                                           hot_counts=hot_counts),
+                                           n_images=n_ids),
                            cfg, numeric_ids=True)
             return rescue_gate(v, signatures, cfg)
 
@@ -336,8 +340,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                       .join(signatures.select("image_id", "iid"),
                             "image_id"))
             tv = run_tile_verify(C.tile_hits(tp, prints, cfg,
-                                             n_images=n_ids,
-                                             hot_counts=hot_counts), cfg)
+                                             n_images=n_ids), cfg)
             return (rescue_gate(tv, signatures, cfg, ids=("id_q", "id_r"))
                     .where(F.col("score") >= cfg.tile_min_score)
                     .select("id_a", "id_b").distinct())
@@ -386,18 +389,22 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         lineage_append = (ex.submit(append_lineage) if lineage_rows
                           else None)
 
-        clusters = timed("cluster", lambda: store.read_or_compute(
-            spark, "clusters",
-            lambda: connected_components(
-                # a pair found by two channels needs no distinct: the
-                # loop is duplicate-insensitive
-                dup_pairs.select("id_a", "id_b"),
-                # the persisted id map: one row per input image, err
-                # rows included — no rescan of the raw images for ids
-                signatures.select("image_id"),
-                cfg.cc_max_iterations)))
-        if lineage_append is not None:
-            lineage_append.result()
+        try:
+            clusters = timed("cluster", lambda: store.read_or_compute(
+                spark, "clusters",
+                lambda: connected_components(
+                    # a pair found by two channels needs no distinct: the
+                    # loop is duplicate-insensitive
+                    dup_pairs.select("id_a", "id_b"),
+                    # the persisted id map: one row per input image, err
+                    # rows included — no rescan of the raw images for ids
+                    signatures.select("image_id"),
+                    cfg.cc_max_iterations)))
+        finally:
+            # awaited even when clustering raises: an append error then
+            # propagates chained to the clustering error, not dropped
+            if lineage_append is not None:
+                lineage_append.result()
     finally:
         ex.shutdown(wait=True)
         release()

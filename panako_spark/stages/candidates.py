@@ -23,7 +23,7 @@ MinHash/substring gates, the pipeline's rescue gate) and resolves the
 int64 ids to canonical string ids.
 
 Skew (north_rule "hot-band splitting"): `pairs_from_keys` counts members
-per key (a window count on the keyed exchange); keys above
+per key (a partially aggregated groupBy joined back); keys above
 `band_pair_cap` are split into ceil(n/cap) salted sub-keys — pairing
 happens within sub-keys only, the dropped cross-salt pair count is
 reported (never silently) via the returned stats row.
@@ -34,7 +34,7 @@ them is the difference between a job that finishes and one that doesn't.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from panako_spark.config import PanakoConfig
 
@@ -47,17 +47,21 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
     + stats.
 
     The fused pairing primitive: every LSH-style channel shares ONE
-    keyed exchange -> salted self-join dataflow (channel rides in the
-    join key), so five channels cost one set of shuffle stages instead of
-    five. Each key's member count is a window count over the keyed rows'
-    own (channel, key) exchange — no count frame is cached or joined
-    back, so the pairs run as one job chain with nothing to unpersist.
+    groupBy -> salted self-join dataflow (channel rides in the join
+    key), so five channels cost one set of shuffle stages instead of
+    five. Each key's member count is a partially aggregated groupBy
+    joined back to the keyed rows, so a hot key never lands whole in one
+    task before it is salted: the count shuffles one row per key and
+    partition, and the join back is a broadcast or an AQE skew-split
+    join. (A count(*) window over the (channel, key) exchange would run
+    one job fewer, but it ships every member of a hot key to one task —
+    the skew the salting exists to remove.) Nothing is cached.
     Hot keys (> cap members) are salted into ceil(n/cap) sub-buckets
     by xxhash64(id); pairs form within sub-buckets only. Stats has one row
     per channel: (channel, n_keys, n_hot_keys,
     dropped_cross_pairs_estimate) — dropped pairs are reported, never
     silent (north_rule hot-band splitting). It is a lazy aggregate over
-    its own uncached groupBy: a caller collects it when, and if, it
+    the same uncached count: a caller collects it when, and if, it
     wants the numbers, alongside the pairs rather than before them.
 
     Every other keyed column v rides to both sides as v_a / v_b, and
@@ -66,9 +70,8 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
     per-row values runs inside the self-join, with no verify join.
     """
     n = F.col("_n")
-    counted = keyed.withColumn(
-        "_n", F.count("*").over(Window.partitionBy(group_col, key_col)))
-    salted = counted.withColumn(
+    counts = keyed.groupBy(group_col, key_col).agg(F.count("*").alias("_n"))
+    salted = keyed.join(counts, [group_col, key_col]).withColumn(
         "_salt",
         F.when(n > cap, F.pmod(F.xxhash64(F.col(id_col)),
                                F.ceil(n / cap).cast("int")))
@@ -85,7 +88,7 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
              .where(cond if keep is None else cond & keep)
              .select(group_col, "id_a", "id_b").distinct())
     per_sub = F.floor(n / F.ceil(n / cap))
-    stats = (keyed.groupBy(group_col, key_col).agg(F.count("*").alias("_n"))
+    stats = (counts
              .groupBy(group_col).agg(
                  F.count("*").alias("n_keys"),
                  F.count(F.when(n > cap, 1)).alias("n_hot_keys"),
@@ -113,11 +116,6 @@ def pairs_from_keys(keyed: DataFrame, cap: int,
 
 
 # --------------------------------------------------------------- landmark ---
-def _hash_image_counts(prints: DataFrame) -> DataFrame:
-    return (prints.groupBy("hash")
-            .agg(F.countDistinct("image_id").alias("_imgs")))
-
-
 def hot_hash_counts(prints: DataFrame, cfg: PanakoConfig) -> DataFrame | None:
     """(hash, _imgs) for every hash found in more than
     cfg.hash_max_images distinct images, or None when the cap is
@@ -126,41 +124,44 @@ def hot_hash_counts(prints: DataFrame, cfg: PanakoConfig) -> DataFrame | None:
     effective_hash_max_images(n) = max(hash_max_images, frac * n) is
     never below the fixed cap, so this ONE relation holds both channels'
     stop-word sets: the tile channel's is all of it, the landmark
-    channel's is its rows with _imgs above the effective cap. A caller
-    that runs both channels persists it once and hands it to each
-    (`hot_counts=`), so the per-hash distinct-image count over every
-    print runs once per run instead of once per channel.
+    channel's is its rows with _imgs above the effective cap. Both build
+    their set from this frame (hot_hash_set), so a caller that persists
+    `hot_hash_counts(prints, cfg)` once has Spark's cache manager
+    substitute it into both plans: the per-hash distinct-image count
+    over every print runs once per run instead of once per channel.
 
     The count is over image_id, not iid: an incrementally grown store
     can give one image_id two iids, and the golden matcher counts
     distinct image ids."""
     if cfg.hash_max_images <= 0:
         return None
-    return (_hash_image_counts(prints)
+    return (prints.groupBy("hash")
+            .agg(F.countDistinct("image_id").alias("_imgs"))
             .where(F.col("_imgs") > cfg.hash_max_images))
 
 
 def hot_hash_set(prints: DataFrame, cfg: PanakoConfig,
                  n_images: int | None = None,
-                 cap: int | None = None,
-                 hot_counts: DataFrame | None = None) -> DataFrame | None:
+                 cap: int | None = None) -> DataFrame | None:
     """Stop-word hashes (> cap distinct images; cap defaults to the
     corpus-aware effective_hash_max_images), or None when disabled.
     Shared by the landmark self-join and the tile-probe channel — the
     golden matcher applies the identical rule at the identical cap.
-    Given `hot_counts` (hot_hash_counts of the same prints), the set is
-    a filter over it; without, the count runs here."""
+    The set is a filter over hot_hash_counts, so `cap` may not be below
+    cfg.hash_max_images (neither channel's cap is)."""
     if cap is None:
         cap = cfg.effective_hash_max_images(n_images)
     if cap <= 0:
         return None
-    counts = _hash_image_counts(prints) if hot_counts is None else hot_counts
-    return counts.where(F.col("_imgs") > cap).select("hash")
+    if cap < cfg.hash_max_images:
+        raise ValueError(f"stop-word cap {cap} is below hash_max_images="
+                         f"{cfg.hash_max_images}")
+    return (hot_hash_counts(prints, cfg)
+            .where(F.col("_imgs") > cap).select("hash"))
 
 
 def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
-                    n_images: int | None = None,
-                    hot_counts: DataFrame | None = None) -> DataFrame:
+                    n_images: int | None = None) -> DataFrame:
     """Drop stop-word hashes present in > effective_hash_max_images images.
 
     The golden matcher applies the identical rule (same config + corpus
@@ -168,7 +169,7 @@ def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
     noise amplifiers. The cap is corpus-size-aware (config.py) so large
     real-world content clusters don't silently lose the landmark channel.
     """
-    hot = hot_hash_set(prints, cfg, n_images, hot_counts=hot_counts)
+    hot = hot_hash_set(prints, cfg, n_images)
     if hot is None:
         return prints
     return prints.join(hot, "hash", "left_anti")
@@ -221,8 +222,7 @@ def _probe_hits(probe: DataFrame, store: DataFrame, r: int,
 
 def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
                   numeric_ids: bool = False,
-                  n_images: int | None = None,
-                  hot_counts: DataFrame | None = None) -> DataFrame:
+                  n_images: int | None = None) -> DataFrame:
     """prints -> raw hit list per candidate pair (canonical id_a < id_b).
 
     The ±range probe relation |h_a - h_b| <= query_range is symmetric, so
@@ -237,12 +237,8 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
     verify kernel). The id is the dictionary-encoded `iid` minted at
     ingest (extract.run_extract — unique by construction at any
     cardinality, id map persisted in the checkpoints).
-
-    `hot_counts` (hot_hash_counts of the same prints) supplies the
-    stop-word count instead of computing it here.
     """
-    p = hot_hash_filter(prints, cfg, n_images=n_images,
-                        hot_counts=hot_counts)
+    p = hot_hash_filter(prints, cfg, n_images=n_images)
     pid = F.col("iid" if numeric_ids else "image_id")
     return _probe_hits(p.select(pid.alias("id_a"), *_PRINT_COLS),
                        p.select(pid.alias("id_b"), *_PRINT_COLS),
@@ -250,8 +246,7 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
 
 
 def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
-              n_images: int | None = None,
-              hot_counts: DataFrame | None = None) -> DataFrame:
+              n_images: int | None = None) -> DataFrame:
     """Crop-rescue channel: tile probe prints (query side) exact-hash
     against the stored prints — DIRECTED hits (id_q, id_r, tile_id, tf)
     per (query image, stored image, tile), the input of
@@ -286,11 +281,9 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     dense∩dense intersections (prints_with_rescue docstring; golden
     sibling: tile_rescue_pairs' std_index_only). The hot-hash set is
     computed on the FULL print relation first, like the golden
-    matcher's _hot_hashes, so stop-word parity is unaffected; given
-    `hot_counts` (hot_hash_counts of the same prints), it is read from
-    there instead."""
+    matcher's _hot_hashes, so stop-word parity is unaffected."""
     hot = hot_hash_set(prints, cfg, n_images=n_images,
-                       cap=cfg.hash_max_images, hot_counts=hot_counts)
+                       cap=cfg.hash_max_images)
     std = prints.where(F.col("is_std"))
     store = std if hot is None else std.join(hot, "hash", "left_anti")
     q = (tile_prints if hot is None

@@ -198,13 +198,13 @@ def _subtrees(plan: str, marker: str) -> list[str]:
 
 
 def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
-    """The fused signature flow's shape: each side of the salted
-    self-join is ONE generator over ONE signatures scan (no per-channel
-    union), whose per-key member count is a Window on the (channel, key)
-    exchange — nothing is cached and no count frame is joined back — and
-    the candidate pairs meet the per-image relation exactly once per
-    side: the bit gates run inside the self-join, the MinHash/substring
-    gates and the id resolve share that one join pair."""
+    """The fused signature flow's shape: the keyed relation is ONE
+    generator over ONE signatures scan (no per-channel union), whose
+    per-key member count is a partially aggregated groupBy on
+    (channel, key) joined back — nothing is cached — and the candidate
+    pairs meet the per-image relation exactly once per side: the bit
+    gates run inside the self-join, the MinHash/substring gates and the
+    id resolve share that one join pair."""
     from panako_spark.stages.candidates import fused_candidate_pairs
 
     perms = cfg.minhash_perms
@@ -225,15 +225,16 @@ def test_fused_pairs_single_keyed_pass(spark, cfg, tmp_path):
 
     analyzed = pairs._jdf.queryExecution().analyzed().toString()
     assert "Union" not in analyzed, analyzed
-    # one keyed relation per self-join side, counted by a window over
-    # its (channel, key) partitions
-    keyed = _subtrees(analyzed, "Window [count(1) windowspecdefinition(")
-    assert len(keyed) == 2, analyzed
-    for side in keyed:
-        assert re.search(r"windowspecdefinition\(channel#\d+, key#\d+L, ",
-                         side), side
-        assert side.count("Generate inline(") == 1, side
-        assert side.count("Relation [") == 1, side
+    # every keyed relation (the count and the rows it joins back to, on
+    # each self-join side) is one generator over one signatures scan
+    counts = [t for t in _subtrees(analyzed, "Aggregate [")
+              if re.match(r"\W*Aggregate \[channel#\d+, key#\d+L\], "
+                          r"\[channel#\d+, key#\d+L, count\(1\) AS _n",
+                          t)]
+    assert len(counts) == 2, analyzed
+    for keyed in counts:
+        assert keyed.count("Generate inline(") == 1, keyed
+        assert keyed.count("Relation [") == 1, keyed
 
     opt = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in opt, opt

@@ -1,7 +1,7 @@
 """The probe channels' shared stop-word count: the landmark and tile
-channels return the same rows from one per-hash image count
-(candidates.hot_hash_counts) as from their own, and a run_pipeline
-executes that count once."""
+channels build their stop-word sets over one per-hash image count
+(candidates.hot_hash_counts), and a run_pipeline executes that count
+once."""
 
 import re
 
@@ -11,9 +11,7 @@ from panako_spark.data import synth
 from panako_spark.data.synth import rows_to_pandas
 from panako_spark.io.checkpoint import CheckpointStore
 from panako_spark.pipeline import run_pipeline
-from panako_spark.stages.candidates import (
-    hot_hash_counts, hot_hash_set, landmark_hits, tile_hits,
-)
+from panako_spark.stages.candidates import hot_hash_counts, hot_hash_set
 
 N_STOP = 80
 
@@ -22,20 +20,12 @@ def _stop_word_prints(spark):
     """N_STOP images whose hashes sit in 2, 4, 8 and all N_STOP images:
     the four layers straddle the fixed and the corpus-scaled caps of the
     configs below."""
-    prints, tiles = [], []
-    for k in range(N_STOP):
-        hashes = [1000 + k % 40, 2000 + k % 20, 3000 + k % 10, 4000,
-                  5000 + k]
-        for j, h in enumerate(hashes):
-            prints.append((f"i{k:02d}", k, h, j + k % 3, (k + j) % 17,
-                           j != 4 or k % 2 == 0))
-            tiles.append((f"i{k:02d}", k, j % 2, h, j, (k * j) % 17))
-    return (spark.createDataFrame(
-                prints, "image_id string, iid long, hash long, t1 int, "
-                "f1 int, is_std boolean"),
-            spark.createDataFrame(
-                tiles, "image_id string, iid long, tile_id int, hash long, "
-                "t1 int, f1 int"))
+    rows = [(f"i{k:02d}", k, h, j + k % 3, (k + j) % 17)
+            for k in range(N_STOP)
+            for j, h in enumerate([1000 + k % 40, 2000 + k % 20,
+                                   3000 + k % 10, 4000, 5000 + k])]
+    return spark.createDataFrame(
+        rows, "image_id string, iid long, hash long, t1 int, f1 int")
 
 
 @pytest.mark.parametrize("overrides", [
@@ -45,37 +35,31 @@ def _stop_word_prints(spark):
     {"hash_max_images": 2, "hash_max_images_frac": 0.05},
     {"hash_max_images": 0},
 ], ids=["default", "scaled_cap", "disabled"])
-def test_shared_hot_counts_match_per_channel_sets(spark, cfg, overrides):
-    """Both probe channels return the same rows from the one shared
-    per-hash count (hot_hash_counts) as from their own stop-word
-    count."""
+def test_stop_word_sets_filter_the_shared_count(spark, cfg, overrides):
+    """Both probe channels' stop-word sets, each a filter over the one
+    per-hash count (hot_hash_counts), hold exactly the hashes found in
+    more distinct images than the channel's cap: the corpus-scaled cap
+    for the landmark channel, the fixed cap for the tile channel."""
     c = cfg.with_(**overrides)
-    prints, tiles = _stop_word_prints(spark)
-    counts = hot_hash_counts(prints, c)
+    prints = _stop_word_prints(spark)
+    imgs: dict = {}
+    for r in prints.collect():
+        imgs.setdefault(r["hash"], set()).add(r["image_id"])
+
+    def want(cap):
+        return {h for h, ids in imgs.items() if len(ids) > cap}
+
     if c.hash_max_images <= 0:
-        assert counts is None
-    else:
-        landmark_set = hot_hash_set(prints, c, n_images=N_STOP,
-                                    hot_counts=counts)
-        tile_set = hot_hash_set(prints, c, cap=c.hash_max_images,
-                                hot_counts=counts)
-        lm = {r["hash"] for r in landmark_set.collect()}
-        tl = {r["hash"] for r in tile_set.collect()}
-        assert lm == {r["hash"] for r in hot_hash_set(
-            prints, c, n_images=N_STOP).collect()}
-        assert lm <= tl and (lm != tl) is bool(overrides)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for shared, own in (
-            (landmark_hits(prints, c, numeric_ids=True, n_images=N_STOP,
-                           hot_counts=counts),
-             landmark_hits(prints, c, numeric_ids=True, n_images=N_STOP)),
-            (tile_hits(tiles, prints, c, n_images=N_STOP, hot_counts=counts),
-             tile_hits(tiles, prints, c, n_images=N_STOP))):
-        want = rows(own)
-        assert want and rows(shared) == want
+        assert hot_hash_counts(prints, c) is None
+        assert hot_hash_set(prints, c, n_images=N_STOP) is None
+        return
+    lm = {r["hash"] for r in hot_hash_set(prints, c, n_images=N_STOP)
+          .collect()}
+    tl = {r["hash"] for r in hot_hash_set(prints, c, cap=c.hash_max_images)
+          .collect()}
+    assert lm == want(c.effective_hash_max_images(N_STOP))
+    assert tl == want(c.hash_max_images)
+    assert lm <= tl and (lm != tl) is bool(overrides)
 
 
 def test_stop_word_count_runs_once_per_run(spark, cfg, tmp_path):
