@@ -54,8 +54,8 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
     task before it is salted: the count shuffles one row per key and
     partition, and the join back is a broadcast or an AQE skew-split
     join. (A count(*) window over the (channel, key) exchange would run
-    one job fewer, but it ships every member of a hot key to one task —
-    the skew the salting exists to remove.) Nothing is cached.
+    two stages fewer, but it ships every member of a hot key to one
+    task — the skew the salting exists to remove.) Nothing is cached.
     Hot keys (> cap members) are salted into ceil(n/cap) sub-buckets
     by xxhash64(id); pairs form within sub-buckets only. Stats has one row
     per channel: (channel, n_keys, n_hot_keys,
@@ -88,16 +88,14 @@ def pairs_from_keys_multi(keyed: DataFrame, cap: int,
              .where(cond if keep is None else cond & keep)
              .select(group_col, "id_a", "id_b").distinct())
     per_sub = F.floor(n / F.ceil(n / cap))
-    stats = (counts
-             .groupBy(group_col).agg(
-                 F.count("*").alias("n_keys"),
-                 F.count(F.when(n > cap, 1)).alias("n_hot_keys"),
-                 F.coalesce(F.sum(F.when(
-                     n > cap,
-                     (n * (n - 1) / 2
-                      - F.ceil(n / cap) * (per_sub * (per_sub - 1) / 2))
-                     .cast("long"))), F.lit(0))
-                 .alias("dropped_cross_pairs_estimate")))
+    stats = counts.groupBy(group_col).agg(
+        F.count("*").alias("n_keys"),
+        F.count(F.when(n > cap, 1)).alias("n_hot_keys"),
+        F.coalesce(F.sum(F.when(
+            n > cap,
+            (n * (n - 1) / 2
+             - F.ceil(n / cap) * (per_sub * (per_sub - 1) / 2))
+            .cast("long"))), F.lit(0)).alias("dropped_cross_pairs_estimate"))
     return pairs, stats
 
 
