@@ -9,8 +9,10 @@ Ships per the north rule as:
         --output  /path/to/clusters_out \\
         [--synthetic 500]   # generate a seeded corpus instead of --images
 
-The SparkSession comes from spark-submit's conf: the job sets no master,
-so a local run names one too (`spark-submit --master local[4] ...`).
+The SparkSession comes from spark-submit's conf plus the pipeline's
+execution settings (session.EXECUTION_CONF, the same ones get_spark
+applies): the job sets no master, so a local run names one too
+(`spark-submit --master local[4] ...`).
 The job is resumable: re-submitting with the same --store resumes at the
 first incomplete stage.
 """
@@ -52,12 +54,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = (SparkSession.builder.appName("panako-dedup")
-             .config("spark.sql.ansi.enabled", "false")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+    from panako_spark.session import EXECUTION_CONF
+
+    b = SparkSession.builder.appName("panako-dedup")
+    for k, v in EXECUTION_CONF.items():
+        b = b.config(k, v)
+    spark = b.getOrCreate()
 
     from panako_spark.io.checkpoint import CheckpointStore
     from panako_spark.pipeline import run_pipeline
@@ -99,6 +101,9 @@ def main() -> None:
     out = {"elapsed_s": round(time.monotonic() - t0, 1),
            "cluster_rows": n_clusters,
            "dup_pairs": res.dup_pairs.count(),
+           # the execution settings in effect after the run: the ones
+           # perfbench's sessions plan under (session.EXECUTION_CONF)
+           "session": {k: spark.conf.get(k) for k in EXECUTION_CONF},
            "stats": {k: v for k, v in res.stats.items()
                      if not hasattr(v, "items")} | {
                k: dict(v) for k, v in res.stats.items()

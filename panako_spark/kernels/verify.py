@@ -52,18 +52,14 @@ def _mode_delta(delta: np.ndarray) -> int:
     return int(vals[np.argmax(counts)])
 
 
-def _hist_fallback(q_t: np.ndarray, q_f: np.ndarray,
-                   r_t: np.ndarray, r_f: np.ndarray,
-                   cfg: PanakoConfig) -> MatchResult | None:
-    """Q15: Olaf's histogram fallback (OlafStrategy.java:462-541) —
-    rigid-offset match via the mode of a coarse ΔT histogram; inliers are
-    hits whose ΔT falls in the mode bin ± one bin. No time scaling
-    (time_factor fixed at 1), so only use when the strict matcher failed
-    and cfg.fallback_to_hist is on (the reference's OTA/noisy mode)."""
-    delta = r_t.astype(np.int64) - q_t.astype(np.int64)
-    bins = delta // cfg.hist_bin
-    mode_bin = _mode_delta(bins)
-    inlier = np.abs(bins - mode_bin) <= 1
+def _span_gates(q_t: np.ndarray, r_t: np.ndarray, inlier: np.ndarray,
+                cfg: PanakoConfig) -> tuple | None:
+    """Q12-Q13 over an inlier mask, shared by the strict matcher and the
+    histogram fallback: at least min_filtered_hits inliers, a query span
+    of at least min_match_span, and Q13 coverage (the fraction of
+    coverage_bin-wide bins along the matched ref span holding >= 1
+    inlier) of at least min_coverage. Returns (score, coverage, q_start,
+    q_stop, r_start, r_stop), or None when a gate fails."""
     n_in = int(inlier.sum())
     if n_in < cfg.min_filtered_hits:
         return None
@@ -77,12 +73,30 @@ def _hist_fallback(q_t: np.ndarray, q_f: np.ndarray,
     coverage = filled / total_bins
     if coverage < cfg.min_coverage:
         return None
+    return n_in, float(coverage), q_start, q_stop, r_start, r_stop
+
+
+def _hist_fallback(q_t: np.ndarray, q_f: np.ndarray,
+                   r_t: np.ndarray, r_f: np.ndarray,
+                   cfg: PanakoConfig) -> MatchResult | None:
+    """Q15: Olaf's histogram fallback (OlafStrategy.java:462-541) —
+    rigid-offset match via the mode of a coarse ΔT histogram; inliers are
+    hits whose ΔT falls in the mode bin ± one bin. No time scaling
+    (time_factor fixed at 1), so only use when the strict matcher failed
+    and cfg.fallback_to_hist is on (the reference's OTA/noisy mode)."""
+    delta = r_t.astype(np.int64) - q_t.astype(np.int64)
+    bins = delta // cfg.hist_bin
+    mode_bin = _mode_delta(bins)
+    inlier = np.abs(bins - mode_bin) <= 1
+    gated = _span_gates(q_t, r_t, inlier, cfg)
+    if gated is None:
+        return None
     with np.errstate(divide="ignore", invalid="ignore"):
         ff = float(np.median((r_f[inlier] + 0.5) / (q_f[inlier] + 0.5)))
     if not (cfg.factor_min < ff < cfg.factor_max):
         return None
-    return MatchResult(n_in, 1.0, ff, float(coverage),
-                       q_start, q_stop, r_start, r_stop)
+    n_in, coverage, *span = gated
+    return MatchResult(n_in, 1.0, ff, coverage, *span)
 
 
 def verify_pair(q_t: np.ndarray, q_f: np.ndarray,
@@ -141,21 +155,9 @@ def _strict_verify(q_t: np.ndarray, q_f: np.ndarray,
 
     predicted = slope * q_t + offset                          # Q11
     inlier = np.abs(r_t - predicted) <= cfg.inlier_threshold
-    n_in = int(inlier.sum())
-    if n_in < cfg.min_filtered_hits:                          # Q12
+    gated = _span_gates(q_t, r_t, inlier, cfg)                # Q12-Q13
+    if gated is None:
         return None
-    qi, ri = q_t[inlier], r_t[inlier]
-    q_start, q_stop = int(qi.min()), int(qi.max())
-    r_start, r_stop = int(ri.min()), int(ri.max())
-    if (q_stop - q_start) < cfg.min_match_span:
-        return None
-    # Q13 coverage: fraction of coverage_bin-wide bins along the matched
-    # ref span containing >= 1 inlier
-    total_bins = (r_stop - r_start) // cfg.coverage_bin + 1
-    filled = np.unique((ri - r_start) // cfg.coverage_bin).size
-    coverage = filled / total_bins
-    if coverage < cfg.min_coverage:
-        return None
+    n_in, coverage, *span = gated
     return MatchResult(n_in, float(time_factor), float(freq_factor),
-                       float(coverage), q_start, q_stop, r_start, r_stop)
-
+                       coverage, *span)

@@ -230,6 +230,10 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         except Exception:  # noqa: BLE001 — labels must never fail a run
             pass
 
+    # the Arrow batch size is set per stage below and restored on the
+    # way out: the caller's later mapInPandas jobs keep their own
+    arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    arrow_rows = spark.conf.get(arrow_key)
     ex = ThreadPoolExecutor(max_workers=5, thread_name_prefix="panako-run")
     try:
         # census (tiny id-only aggregate) overlaps the extract scan
@@ -247,8 +251,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             return out
 
         def arrow_batch(rows: int) -> None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                           str(rows))
+            spark.conf.set(arrow_key, str(rows))
 
         # ---- extract (one decode pass) -------------------------------------
         arrow_batch(EXTRACT_ARROW_ROWS)
@@ -274,6 +277,11 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
         n_images, n_ids = census_fut.result()
         if n_images != n_ids:
+            if extracted is not None:
+                # this run wrote prints and signatures from the duplicated
+                # input: a rerun must re-extract, not resume from them
+                store.invalidate("prints")
+                store.invalidate("signatures")
             raise ValueError(
                 f"input has {n_images} rows but only {n_ids} distinct "
                 "image_ids. A store is keyed by image_id; duplicate rows "
@@ -301,9 +309,8 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             # DISTINCT stored images
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
-            v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
-                                           n_images=n_ids),
-                           cfg, numeric_ids=True)
+            v = run_verify(C.landmark_hits(prints, cfg, n_images=n_ids),
+                           cfg)
             return rescue_gate(v, signatures, cfg)
 
         band_futs: list = []
@@ -408,6 +415,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
     finally:
         ex.shutdown(wait=True)
         release()
+        spark.conf.set(arrow_key, arrow_rows)
 
     stats["elapsed_s"] = time.monotonic() - t_start
     return PipelineResult(clusters=clusters, dup_pairs=dup_pairs,

@@ -33,6 +33,44 @@ JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
 JAVA_OPTIONS = "-Djava.security.manager=allow"
 
 
+# The execution settings the pipeline is planned and measured under.
+# get_spark and the spark-submit job (jobs/dedup_job.py) both apply
+# exactly these, so the shipped job plans like the benchmarked session.
+# Master, shuffle partitions, driver memory, Java options and the UI
+# switches are get_spark's alone: a spark-submit run takes them from
+# its own command line.
+EXECUTION_CONF = {
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Let AQE swap sort-merge joins for shuffled-hash joins when the
+    # runtime build-side per-partition map fits 128 MB. The hit-list
+    # joins (landmark/tile ±range probes) are the pipeline's biggest
+    # shuffles and their sorts are pure overhead — the downstream
+    # verify exchange re-partitions by pair id anyway. Measured on
+    # the pinned 2-vs-8-core protocol (BENCH/ATTRIBUTION.md,
+    # 11.6k images): tile-join CPU at 8 busy cores 311->165 core-s,
+    # total task-time inflation 1.58x->1.27x, local[8] wall -16%
+    # with local[2] unchanged. Runtime-sized (AQE), so partitions
+    # whose build side exceeds the threshold keep sort-merge — safe
+    # at any scale; 128 MB/task needs executors with >=1 GB/task,
+    # the same envelope the 64 MB broadcast threshold assumes.
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128m",
+    # Let AQE coalesce a cached plan's final stage by bytes, like any
+    # other stage. Spark's default pins a cached aggregate at
+    # spark.sql.shuffle.partitions, and every consumer then scans
+    # that many mostly empty partitions: the pipeline's shared
+    # stop-word counts (a few rows) cost 32 tasks per scan, four
+    # scans per run. Outputs are the same; only the partition count
+    # a cache hands its consumers changes.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
 def default_cpus() -> int:
     """local[N] when the caller names none: SPARK_GRAFT_CPUS if set, else
     the CPUs this process may run on."""
@@ -64,42 +102,12 @@ def get_spark(app_name: str = "panako-spark", cpus: int | None = None,
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Let AQE swap sort-merge joins for shuffled-hash joins when the
-        # runtime build-side per-partition map fits 128 MB. The hit-list
-        # joins (landmark/tile ±range probes) are the pipeline's biggest
-        # shuffles and their sorts are pure overhead — the downstream
-        # verify exchange re-partitions by pair id anyway. Measured on
-        # the pinned 2-vs-8-core protocol (BENCH/ATTRIBUTION.md,
-        # 11.6k images): tile-join CPU at 8 busy cores 311->165 core-s,
-        # total task-time inflation 1.58x->1.27x, local[8] wall -16%
-        # with local[2] unchanged. Runtime-sized (AQE), so partitions
-        # whose build side exceeds the threshold keep sort-merge — safe
-        # at any scale; 128 MB/task needs executors with >=1 GB/task,
-        # the same envelope the 64 MB broadcast threshold assumes.
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                "128m")
-        # Let AQE coalesce a cached plan's final stage by bytes, like any
-        # other stage. Spark's default pins a cached aggregate at
-        # spark.sql.shuffle.partitions, and every consumer then scans
-        # that many mostly empty partitions: the pipeline's shared
-        # stop-word counts (a few rows) cost 32 tasks per scan, four
-        # scans per run. Outputs are the same; only the partition count
-        # a cache hands its consumers changes.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in merged_conf(extra_conf).items():
+    for k, v in (EXECUTION_CONF | merged_conf(extra_conf)).items():
         b = b.config(k, v)
     return b.getOrCreate()
 

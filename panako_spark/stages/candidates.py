@@ -4,8 +4,9 @@ Channels (SURVEY.md §7 step 5 / north_star):
   landmark  — ±query_range near-hash self-join on the prints table
               (reference Q1, PanakoStorageKV.java:293-379, re-expressed as
               explode(sequence(h-r, h+r)) + equi-join so Catalyst runs a
-              plain shuffled hash join instead of a band join)
-  tile      — exact-hash probe of the crop-rescue tile prints against
+              plain shuffled hash join instead of a band join), minus
+              the stop-word hashes, on the int64 `iid` (landmark_hits)
+  tile     — exact-hash probe of the crop-rescue tile prints against
               the stored standard-window prints (tile_hits); both
               channels and the streaming monitor share one probe join
               (_probe_hits); both read their stop-word sets from one
@@ -158,21 +159,6 @@ def hot_hash_set(prints: DataFrame, cfg: PanakoConfig,
             .where(F.col("_imgs") > cap).select("hash"))
 
 
-def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
-                    n_images: int | None = None) -> DataFrame:
-    """Drop stop-word hashes present in > effective_hash_max_images images.
-
-    The golden matcher applies the identical rule (same config + corpus
-    size) so parity is preserved; at web scale these hashes are pure
-    noise amplifiers. The cap is corpus-size-aware (config.py) so large
-    real-world content clusters don't silently lose the landmark channel.
-    """
-    hot = hot_hash_set(prints, cfg, n_images)
-    if hot is None:
-        return prints
-    return prints.join(hot, "hash", "left_anti")
-
-
 # ---- packed hit coordinates -------------------------------------------
 # The hit relation is the pipeline's widest shuffle (the landmark and
 # tile probe-join outputs): the four spectral coordinates of a hit ride
@@ -223,23 +209,32 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
                   n_images: int | None = None) -> DataFrame:
     """prints -> raw hit list per candidate pair (canonical id_a < id_b).
 
+    Stop-word hashes, found in more than effective_hash_max_images(
+    n_images) distinct images, are dropped first (hot_hash_set). The
+    golden matcher applies the identical rule (same config + corpus
+    size) so parity is preserved; at web scale these hashes are pure
+    noise amplifiers. The cap is corpus-size-aware (config.py) so large
+    real-world content clusters don't silently lose the landmark
+    channel.
+
     The ±range probe relation |h_a - h_b| <= query_range is symmetric, so
     probing from the smaller id only (id_a < id_b) enumerates exactly the
     union of both query directions of the reference's dedup driver
     (Deduplication.java:98-108) — verify runs both orientations downstream.
 
-    numeric_ids=True runs the hit rows on int64 ids instead of the string
-    image_id: the hit relation is by far the widest shuffle of the
-    pipeline, and 8-byte sort/join keys beat variable-length strings on
-    every axis (shuffle bytes, sort comparisons, Arrow transfer to the
-    verify kernel). The id is the dictionary-encoded `iid` minted at
-    ingest (extract.run_extract — unique by construction at any
-    cardinality, id map persisted in the checkpoints).
+    The hit rows carry the int64 `iid` minted at ingest
+    (extract.run_extract — unique by construction at any cardinality,
+    id map persisted in the checkpoints), not the string image_id: the
+    hit relation is by far the widest shuffle of the pipeline, and
+    8-byte sort/join keys beat variable-length strings on every axis
+    (shuffle bytes, sort comparisons, Arrow transfer to the verify
+    kernel). `numeric_ids` changes nothing: it stays because
+    perfbench's traced replay passes it by name.
     """
-    p = hot_hash_filter(prints, cfg, n_images=n_images)
-    pid = F.col("iid" if numeric_ids else "image_id")
-    return _probe_hits(p.select(pid.alias("id_a"), *_PRINT_COLS),
-                       p.select(pid.alias("id_b"), *_PRINT_COLS),
+    hot = hot_hash_set(prints, cfg, n_images)
+    p = prints if hot is None else prints.join(hot, "hash", "left_anti")
+    return _probe_hits(p.select(F.col("iid").alias("id_a"), *_PRINT_COLS),
+                       p.select(F.col("iid").alias("id_b"), *_PRINT_COLS),
                        cfg.query_range, F.col("id_a") < F.col("id_b"))
 
 

@@ -1,11 +1,19 @@
 """Verify stage: per-pair alignment kernel over grouped hits.
 
 The reference's per-candidate match loop Q5-Q13 (PanakoStrategy.java:
-349-475) runs as ONE shuffle + ONE batched Python pass:
+349-475) runs as ONE shuffle + ONE batched Python pass, one plan for
+every channel (_run_verify):
 
-    hits.repartition(id_a, id_b)            -- single hash exchange
-        .sortWithinPartitions(id_a, id_b)   -- pairs become contiguous runs
-        .mapInPandas(verify_batches)        -- flat int columns, NumPy kernel
+    hits.repartition(pair key)              -- single hash exchange
+        count(*) over (run key) >= min hits -- Q5, JVM-side
+        .sortWithinPartitions(run key)      -- runs become contiguous
+        verify_batches, per Arrow batch     -- flat int columns, NumPy kernel
+
+A run is one canonical (id_a, id_b) pair for the landmark channel
+(run_verify) and one directed (id_q, id_r, tile_id) query for the tile
+channel and the streaming monitor (run_directed_verify); one kernel
+factory (make_verify_batches) serves both, its run keys and output
+dtypes read off the verified schema.
 
 The exchange carries no partition count: it plans as REPARTITION_BY_COL,
 which AQE coalesces by shuffle bytes (advisoryPartitionSizeInBytes), so
@@ -21,22 +29,20 @@ object arrays in the JVM — the object hash aggregate dominated stage
 time and its GC pressure slowed every later stage in the same JVM):
   * flat int columns ride Arrow's fast path; nothing is ever assembled
     into JVM list objects.
-  * the Q5 gate (>= min_unfiltered_hits raw hits) runs INSIDE the kernel,
-    vectorized over segment lengths — no gate aggregation, no second
-    shuffle, no join, and gated-out segments cost one comparison.
-  * a pair's run can straddle Arrow batch boundaries within a partition;
-    the kernel processes each batch's complete runs immediately and
-    carries only the trailing run into the next batch — peak memory is
-    one batch + the largest pair run, never the whole partition.
-    Partition boundaries can't split a pair (hash-partitioned on the
-    pair key), and the explicit sortWithinPartitions pins contiguity.
-  * the hit relation is symmetric (|h_a - h_b| <= range), so hits are
-    stored once per canonical pair (id_a < id_b) and the kernel tries
-    both query orientations — the union the reference's dedup driver
-    produces by querying every file (Deduplication.java:98-108).
-    Directed queries (the tile channel and the streaming monitor) key
-    their runs (id_q, id_r, tile_id) and verify the query side only
-    (run_directed_verify).
+  * the Q5 gate (>= min_unfiltered_hits raw hits) is a window count over
+    the exchange's own sort — no gate aggregation, no second shuffle, no
+    join — and the kernel re-checks it vectorized over run lengths.
+  * a run can straddle Arrow batch boundaries within a partition; the
+    kernel processes each batch's complete runs immediately and carries
+    only the trailing run into the next batch — peak memory is one
+    batch + the largest run, never the whole partition. Partition
+    boundaries can't split a run (hash-partitioned on its pair key), and
+    the explicit sortWithinPartitions pins contiguity.
+  * the hit relation is symmetric (|h_a - h_b| <= range), so landmark
+    hits are stored once per canonical pair (id_a < id_b) and the kernel
+    tries both query orientations — the union the reference's dedup
+    driver produces by querying every file (Deduplication.java:98-108).
+    Directed runs verify the query side only.
 """
 
 from __future__ import annotations
@@ -47,30 +53,27 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
 from panako_spark.config import PanakoConfig
 from panako_spark.kernels.verify import verify_pair
 
-_TAIL = (("score", T.IntegerType(), "int32"),
-         ("time_factor", T.DoubleType(), "float64"),
-         ("freq_factor", T.DoubleType(), "float64"),
-         ("coverage", T.DoubleType(), "float64"),
-         ("q_start", T.IntegerType(), "int32"),
-         ("q_stop", T.IntegerType(), "int32"))
+# the result tail every verified row carries after its run keys; the
+# names are kernels.verify.MatchResult's fields
+_TAIL = (("score", T.IntegerType()),
+         ("time_factor", T.DoubleType()),
+         ("freq_factor", T.DoubleType()),
+         ("coverage", T.DoubleType()),
+         ("q_start", T.IntegerType()),
+         ("q_stop", T.IntegerType()))
 
 
 def verified_schema(keys: list[tuple[str, T.DataType]]) -> T.StructType:
     """Verified rows: the (name, type) run key columns, then the result
-    tail both kernels emit."""
-    return T.StructType([T.StructField(name, typ) for name, typ in keys]
-                        + [T.StructField(name, typ)
-                           for name, typ, _ in _TAIL])
-
-
-def _result_tail(res) -> tuple:
-    return (res.score, res.time_factor, res.freq_factor, res.coverage,
-            res.q_start, res.q_stop)
+    tail."""
+    return T.StructType([T.StructField(name, typ)
+                         for name, typ in list(keys) + list(_TAIL)])
 
 
 def _unpack_tf(tf: np.ndarray) -> tuple[np.ndarray, np.ndarray,
@@ -97,7 +100,7 @@ def _segments(*keys: np.ndarray) -> np.ndarray:
 
 def _verify_runs(it: Iterator[pd.DataFrame], keys: tuple[str, ...],
                  min_hits: int, verify_run) -> list:
-    """The run loop both verify kernels share. Runs are contiguous
+    """The kernel's run loop (make_verify_batches). Runs are contiguous
     rows with equal `keys`; `verify_run(cols, lo, q_t, q_f, r_t, r_f)`
     is called once per run with at least `min_hits` raw hits (Q5,
     vectorized over run lengths) and returns an output row or None.
@@ -107,8 +110,8 @@ def _verify_runs(it: Iterator[pd.DataFrame], keys: tuple[str, ...],
     continue in the next batch and is carried forward. Peak memory is
     ONE batch plus the largest single run — not the whole partition —
     so a skewed 10^7-row partition can't OOM the Python worker. The
-    partition is sorted on `keys` (run_verify / run_tile_verify), so
-    runs are contiguous and never resume after being cut."""
+    partition is sorted on `keys` (_run_verify), so runs are contiguous
+    and never resume after being cut."""
     names = keys + ("tf",)
     rows: list = []
 
@@ -138,89 +141,68 @@ def _verify_runs(it: Iterator[pd.DataFrame], keys: tuple[str, ...],
     return rows
 
 
-def _frame(rows: list, dtypes: dict) -> pd.DataFrame:
-    if not rows:
-        return pd.DataFrame(
-            {k: pd.Series([], dtype=d) for k, d in dtypes.items()})
-    return pd.DataFrame(dict(zip(dtypes, zip(*rows))))
+def _frame(rows: list, schema: T.StructType) -> pd.DataFrame:
+    if not rows:  # an empty result still needs typed columns
+        return to_arrow_schema(schema).empty_table().to_pandas()
+    return pd.DataFrame(dict(zip(schema.names, zip(*rows))))
 
 
-# ids are int64 iids or string image_ids; an empty object column
-# converts to either Arrow type
-_PAIR_DTYPES = {"id_a": "object", "id_b": "object",
-                **{name: d for name, _, d in _TAIL}}
+def make_verify_batches(cfg: PanakoConfig, schema: T.StructType,
+                        both_ways: bool):
+    """The Q5-Q13 Arrow-batch kernel, emitting rows of `schema`
+    (verified_schema): one run per distinct value of its key columns
+    (every field before the result tail).
 
+    With `both_ways` (the landmark channel's canonical id_a < id_b
+    runs) both query orientations are verified and the higher score
+    kept, the id_a-as-query one on a tie. Without it (directed runs
+    keyed (id_q, id_r, tile_id): the tile channel and the streaming
+    monitor) only the query -> store orientation is verified, exactly
+    like GoldenMatcher.query_prints."""
+    keys = tuple(schema.names[:len(schema.names) - len(_TAIL)])
 
-def make_verify_batches(cfg: PanakoConfig):
-    """Q5-Q13 kernel for the landmark channel: one run per canonical
-    (id_a, id_b) pair, BOTH query orientations tried, best score kept."""
-
-    def verify_run(cols, lo, a_t, a_f, b_t, b_f):
-        res = verify_pair(a_t, a_f, b_t, b_f, cfg)
-        rev = verify_pair(b_t, b_f, a_t, a_f, cfg)
-        best = max((r for r in (res, rev) if r is not None),
-                   key=lambda r: r.score, default=None)
+    def verify_run(cols, lo, q_t, q_f, r_t, r_f):
+        best = verify_pair(q_t, q_f, r_t, r_f, cfg)
+        if both_ways:
+            rev = verify_pair(r_t, r_f, q_t, q_f, cfg)
+            if rev is not None and (best is None or rev.score > best.score):
+                best = rev
         if best is None:
             return None
-        return (cols["id_a"][lo], cols["id_b"][lo]) + _result_tail(best)
+        return (tuple(cols[k][lo] for k in keys)
+                + tuple(getattr(best, name) for name, _ in _TAIL))
 
     def verify_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield _frame(_verify_runs(it, ("id_a", "id_b"),
-                                  cfg.min_unfiltered_hits, verify_run),
-                     _PAIR_DTYPES)
+        yield _frame(_verify_runs(it, keys, cfg.min_unfiltered_hits,
+                                  verify_run), schema)
 
     return verify_batches
 
 
-_DIRECTED_KEYS = ("id_q", "id_r", "tile_id")
-# int64 ids on the tile channel, strings on the monitor
-_DIRECTED_DTYPES = {"id_q": "object", "id_r": "object", "tile_id": "int32",
-                    **{name: d for name, _, d in _TAIL}}
-
-
-def make_directed_verify_batches(cfg: PanakoConfig):
-    """Q5-Q13 kernel for directed queries: one verify per (query image,
-    stored image, tile) run, SINGLE orientation (query side first,
-    exactly like GoldenMatcher.query_prints). Same batch/carry loop as
-    make_verify_batches."""
-
-    def verify_run(cols, lo, q_t, q_f, r_t, r_f):
-        res = verify_pair(q_t, q_f, r_t, r_f, cfg)
-        if res is None:
-            return None
-        return (cols["id_q"][lo], cols["id_r"][lo],
-                cols["tile_id"][lo]) + _result_tail(res)
-
-    def directed_verify_batches(it: Iterator[pd.DataFrame]
-                                ) -> Iterator[pd.DataFrame]:
-        yield _frame(_verify_runs(it, _DIRECTED_KEYS,
-                                  cfg.min_unfiltered_hits, verify_run),
-                     _DIRECTED_DTYPES)
-
-    return directed_verify_batches
-
-
-def _gated_runs(hits: DataFrame, pair: tuple[str, str],
-                runs: tuple[str, ...], min_hits: int) -> DataFrame:
-    """ONE byte-sized hash exchange on the pair key (a run's extra keys
-    ride inside its pair's partition), the Q5 min-hits gate JVM-side as
-    a window count over the exchange's own sort (noise pairs with < 10
-    hits are ~95% of the hit relation on the bench corpus — gating them
-    before the Python boundary cuts the Arrow transfer ~20x), then runs
-    made contiguous for the kernel."""
+def _run_verify(hits: DataFrame, cfg: PanakoConfig, keys: tuple[str, ...],
+                both_ways: bool) -> DataFrame:
+    """The one verify plan: ONE byte-sized hash exchange on the pair key
+    keys[:2] (a run's extra keys ride inside its pair's partition), the
+    Q5 min-hits gate JVM-side as a window count over the exchange's own
+    sort (noise pairs with < 10 hits are ~95% of the hit relation on the
+    bench corpus — gating them before the Python boundary cuts the Arrow
+    transfer ~20x), runs made contiguous, then the kernel. The key
+    column types (int64 iids, string image_ids) are the hits' own."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*runs)
-    return (hits.repartition(*pair)
-            .withColumn("_n", F.count("*").over(w))
-            .where(F.col("_n") >= min_hits)
-            .drop("_n")
-            # the kernel REQUIRES contiguous runs; today the WindowExec's
-            # required child ordering provides that, but the contract
-            # must not depend on how the Window happens to plan. This
-            # sort is elided by Catalyst when the child ordering already
-            # satisfies it (asserted in test_plans).
-            .sortWithinPartitions(*runs))
+    gated = (hits.repartition(*keys[:2])
+             .withColumn("_n", F.count("*").over(Window.partitionBy(*keys)))
+             .where(F.col("_n") >= cfg.min_unfiltered_hits)
+             .drop("_n")
+             # the kernel REQUIRES contiguous runs; today the WindowExec's
+             # required child ordering provides that, but the contract
+             # must not depend on how the Window happens to plan. This
+             # sort is elided by Catalyst when the child ordering already
+             # satisfies it (asserted in test_plans).
+             .sortWithinPartitions(*keys))
+    schema = verified_schema([(k, hits.schema[k].dataType) for k in keys])
+    return gated.mapInPandas(make_verify_batches(cfg, schema, both_ways),
+                             schema)
 
 
 def run_directed_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
@@ -233,12 +215,9 @@ def run_directed_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
     The query path of the tile channel (run_tile_verify) and of the
     streaming monitor (monitor.probe_batch): one verify per run in the
     query -> store orientation only, like one reference monitor window
-    (PanakoStrategy.java:498-510). Same plan shape as run_verify."""
-    gated = _gated_runs(hits, ("id_q", "id_r"), _DIRECTED_KEYS,
-                        cfg.min_unfiltered_hits)
-    schema = verified_schema([(k, hits.schema[k].dataType)
-                              for k in _DIRECTED_KEYS])
-    return gated.mapInPandas(make_directed_verify_batches(cfg), schema)
+    (PanakoStrategy.java:498-510)."""
+    return _run_verify(hits, cfg, ("id_q", "id_r", "tile_id"),
+                       both_ways=False)
 
 
 def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
@@ -254,17 +233,10 @@ def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
 
 def run_verify(hits: DataFrame, cfg: PanakoConfig,
                numeric_ids: bool = False) -> DataFrame:
-    """hits(id_a, id_b, tf) -> verified pairs with score; tf is the
-    packed coordinate int64 (candidates._pack_half).
-
-    One hash exchange on the pair key, sized by AQE from its bytes (see
-    the module docstring) and gated at Q5 (_gated_runs), then the
-    Q6-Q13 alignment kernel does one NumPy pass per coalesced partition
-    over flat columns. With numeric_ids the id columns are int64 (see
-    landmark_hits) — shuffle, sort, and Arrow all on fixed-width keys.
-    """
-    gated = _gated_runs(hits, ("id_a", "id_b"), ("id_a", "id_b"),
-                        cfg.min_unfiltered_hits)
-    id_type = T.LongType() if numeric_ids else T.StringType()
-    schema = verified_schema([("id_a", id_type), ("id_b", id_type)])
-    return gated.mapInPandas(make_verify_batches(cfg), schema)
+    """hits(id_a, id_b, tf) -> verified (id_a, id_b, score, time_factor,
+    freq_factor, coverage, q_start, q_stop), both query orientations
+    tried per canonical pair; tf is the packed coordinate int64
+    (candidates._pack_half) and the ids are the hits' own int64 iids
+    (candidates.landmark_hits). `numeric_ids` changes nothing: it stays
+    because perfbench's traced replay passes it by name."""
+    return _run_verify(hits, cfg, ("id_a", "id_b"), both_ways=True)

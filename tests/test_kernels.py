@@ -337,10 +337,17 @@ def test_verify_kernel_run_carry(cfg):
     channel) and on string image_ids (streaming monitor). The directed
     kernel emits the landmark kernel's result tail after its run keys."""
     import pandas as pd
+    import pyspark.sql.types as T
 
     from panako_spark.stages.verify import (
-        make_directed_verify_batches, make_verify_batches,
+        make_verify_batches, verified_schema,
     )
+
+    def directed(id_type):
+        return verified_schema([("id_q", id_type), ("id_r", id_type),
+                                ("tile_id", T.IntegerType())])
+
+    pair = verified_schema([("id_a", T.LongType()), ("id_b", T.LongType())])
 
     def pack(a_t, a_f, b_t, b_f):  # candidates._pack_half layout
         return ((a_t * 1024 + a_f) << 32) | (b_t * 1024 + b_f)
@@ -357,13 +364,15 @@ def test_verify_kernel_run_carry(cfg):
     str_rows = [(f"q{a}", f"r{b}", tile, tf)
                 for a, b, tile, tf in sorted(tile_rows)]
     cases = [
-        (lambda: make_verify_batches(cfg),
+        (lambda: make_verify_batches(cfg, pair, both_ways=True),
          pd.DataFrame(lm_rows, columns=["id_a", "id_b", "tf"]),
          ["id_a", "id_b"], 3),
-        (lambda: make_directed_verify_batches(cfg),
+        (lambda: make_verify_batches(cfg, directed(T.LongType()),
+                                     both_ways=False),
          pd.DataFrame(sorted(tile_rows), columns=directed_cols),
          ["id_q", "id_r", "tile_id"], 6),
-        (lambda: make_directed_verify_batches(cfg),
+        (lambda: make_verify_batches(cfg, directed(T.StringType()),
+                                     both_ways=False),
          pd.DataFrame(str_rows, columns=directed_cols),
          ["id_q", "id_r", "tile_id"], 6),
     ]

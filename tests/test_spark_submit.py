@@ -75,5 +75,10 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     # dup_fraction=0.3 at 60 base images guarantees real dup clusters
     assert summary["cluster_rows"] > 0
     assert summary["dup_pairs"] > 0
+    # the job runs under the benchmarked session's execution settings,
+    # and the run leaves them as it found them
+    from panako_spark.session import EXECUTION_CONF
+
+    assert summary["session"] == EXECUTION_CONF
     # the job also wrote the clusters parquet where asked
     assert any(f.endswith(".parquet") for f in os.listdir(out_dir))
